@@ -61,3 +61,23 @@ def test_catalog_mime_filter(spark, doc_dir):
         allowed_mime=["image/png"],
     )
     assert {r.mime_type for r in cat.collect()} == {"image/png"}
+
+
+def test_catalog_cap_keeps_one_subset(spark, tmp_path):
+    """A listing with more files than max_files: the capped catalog is
+    one subset of files, each row's hash taken from that row's own
+    bytes, numbered 1..max_files without gaps or duplicates."""
+    for i in range(80):
+        (tmp_path / f"f_{i:02d}.txt").write_text(f"file {i} " + "x" * i)
+    cap = 25
+    rows = build_catalog(
+        list_files(spark, str(tmp_path), FilePattern(globs=["*.txt"], max_files=cap))
+    ).collect()
+    assert len(rows) == cap
+    assert len({r.file_path for r in rows}) == cap
+    assert sorted(r.file_number for r in rows) == list(range(1, cap + 1))
+    by_number = sorted(rows, key=lambda r: r.file_number)
+    assert [r.file_path for r in by_number] == sorted(r.file_path for r in rows)
+    for r in rows:
+        with open(r.file_path.removeprefix("file:"), "rb") as fh:
+            assert r.file_hash == hashlib.sha256(fh.read()).hexdigest()

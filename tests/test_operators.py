@@ -48,18 +48,24 @@ def test_chunk_sentences_overlap(spark):
 # ---------- dedup ----------
 
 
-def test_history_dedup_and_replay(spark):
+def test_history_dedup_and_replay(spark, tmp_path):
+    from unstract_spark.schemas import FILE_HISTORY
+    from unstract_spark.sinks.history import FileHistoryStore
+
     files = spark.createDataFrame(
         [("h1", "/a.txt"), ("h2", "/b.txt"), ("h3", "/c.txt")],
         "file_hash string, file_path string",
     )
-    history = spark.createDataFrame(
-        [("h1", "/a.txt", "COMPLETED"), ("h2", "/b.txt", "ERROR")],
-        "cache_key string, file_path string, status string",
-    )
-    fresh = dedup.dedup_against_history(files, history).collect()
+    store = FileHistoryStore(spark, str(tmp_path / "hist"))
+    store.merge(spark.createDataFrame(
+        [("h1", None, "/a.txt", "wf", "COMPLETED", "{}", None, 1),
+         ("h2", None, "/b.txt", "wf", "ERROR", None, None, 1)],
+        FILE_HISTORY,
+    ))
+    fresh = store.dedup_catalog(files).collect()
     # only COMPLETED dedups; ERROR rows re-process (file_history.py:21)
     assert {r.file_path for r in fresh} == {"/b.txt", "/c.txt"}
+    assert [r.file_path for r in store.replay_results(files).collect()] == ["/a.txt"]
 
 
 def test_minhash_identical_docs_match(spark):

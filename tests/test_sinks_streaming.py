@@ -468,6 +468,51 @@ def test_run_extraction_isolates_bad_files(spark, tmp_path):
     assert names2 == {"bad.txt"}
 
 
+def test_run_extraction_replay_survives_ledger_swap(spark, tmp_path):
+    """The second run's `skipped` is read only after run_extraction
+    returns, by which time its merge has swapped in a new ledger
+    directory and deleted the old one. It still replays exactly the
+    first run's COMPLETED files with their cached results, and the
+    invalid-UTF-8 file is retried as ERROR instead of replayed."""
+    import os
+
+    src = tmp_path / "docs"
+    src.mkdir()
+    for i in range(4):
+        (src / f"d{i}.txt").write_text(f"receipt {i} amount {i}0")
+    (src / "bad.txt").write_bytes(bytes([0xFF, 0xFE, 0x00, 0x41]))
+    hist = tmp_path / "hist"
+    job = ExtractionJob(
+        source_dir=str(src),
+        history_path=str(hist),
+        prompt_specs=[
+            {"prompt_key": "receipt", "prompt": "id", "enforce_type": "text"},
+            {"prompt_key": "amount", "prompt": "sum", "enforce_type": "number"},
+        ],
+    )
+    first = run_extraction(spark, job)["results"].collect()
+    want = {
+        r.file_path: {k: r[k] for k in ("receipt", "amount") if r[k] is not None}
+        for r in first
+        if r.status == "SUCCESS"
+    }
+    assert len(want) == 4
+
+    def parts():
+        return {f for f in os.listdir(hist) if f.startswith("part-")}
+
+    ledger_parts = parts()
+    out2 = run_extraction(spark, job)
+    # the merge replaced the ledger directory and removed the old one
+    assert ledger_parts and parts().isdisjoint(ledger_parts)
+    assert [p.name for p in tmp_path.iterdir() if p.name.startswith("hist.")] == []
+
+    got = {r.file_path: json.loads(r.result) for r in out2["skipped"].collect()}
+    assert got == want
+    retried = [(r.file_name, r.status) for r in out2["results"].collect()]
+    assert retried == [("bad.txt", "ERROR")]
+
+
 def test_streaming_index_maintenance(spark, tmp_path):
     """Two AvailableNow fires maintain the vector index incrementally:
     new docs are chunked/embedded/upserted, re-uploaded content derives

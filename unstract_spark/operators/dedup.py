@@ -3,7 +3,8 @@
 Reference semantics (file-level):
 - F1 listing dedup: first row per path wins (source.py:693-705)
 - F2 history dedup: drop files whose (cache_key, file_path) has a
-  COMPLETED history row — an anti-join (source.py:806-868)
+  COMPLETED history row (source.py:806-868) — the ledger's own join,
+  sinks.history.FileHistoryStore.join_completed
 - F3 in-flight dedup: drop files being processed elsewhere (source.py:559-661)
 
 Training-data-scale extensions (first-class here, absent in reference):
@@ -25,20 +26,6 @@ from pyspark.sql import functions as F
 def dedup_listing(files: DataFrame) -> DataFrame:
     """F1: one row per file_path within a listing."""
     return files.dropDuplicates(["file_path"])
-
-
-def dedup_against_history(files: DataFrame, history: DataFrame) -> DataFrame:
-    """F2: keep only files with no COMPLETED history row.
-
-    Matches on content hash + path like the reference
-    (source.py:831-836). left_anti keeps catalog columns untouched.
-    At scale: history is partitioned by cache_key prefix; the join keys
-    are high-cardinality hashes, so no skew.
-    """
-    completed = history.filter(F.col("status") == "COMPLETED").select(
-        F.col("cache_key").alias("file_hash"), "file_path"
-    )
-    return files.join(completed, ["file_hash", "file_path"], "left_anti")
 
 
 def dedup_in_flight(files: DataFrame, active: DataFrame) -> DataFrame:

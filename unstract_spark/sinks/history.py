@@ -30,6 +30,8 @@ from unstract_spark.sinks.ledger_lock import LedgerLock
 from unstract_spark.sinks.manifest import ManifestTable
 
 MERGE_KEYS = ["cache_key", "workflow_id", "file_path"]
+# ledger columns a replayed catalog row carries (destination.py:593-612)
+REPLAY_COLUMNS = ("result", "metadata")
 
 
 def _merge_newest_wins(current: DataFrame, updates: DataFrame) -> DataFrame:
@@ -43,6 +45,16 @@ def _merge_newest_wins(current: DataFrame, updates: DataFrame) -> DataFrame:
         merged.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_ts")
+    )
+
+
+def _newest_per_key(segments: DataFrame) -> DataFrame:
+    """Manifest dedup-on-read: the newest segment's row per merge key."""
+    w = Window.partitionBy(*MERGE_KEYS).orderBy(F.col("_seq").desc())
+    return (
+        segments.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_seq")
     )
 
 
@@ -68,12 +80,12 @@ class FileHistoryStore:
         `stats`: an optional `stats_store.TableStatsStore`. When set,
         merge() re-ANALYZEs the ledger's key column after each commit
         (the write side pays the scan so every read-side plan is
-        free), and dedup_catalog()/replay_results() consult the
-        persisted stats to pick broadcast / hot-key-split / shuffle
+        free), and join_completed() consults the persisted stats to
+        pick broadcast / hot-key-split / shuffle
         (stats_store.plan_against_unknown — the catalog side is a
         per-run frame with no stats, so only the ledger side is
         priced). Without stats — or before the first analyzed merge —
-        the joins take Spark's default plan, unchanged."""
+        the join takes Spark's default plan, unchanged."""
         from unstract_spark.sinks.manifest import CommitBackend
 
         self.spark = spark
@@ -90,25 +102,31 @@ class FileHistoryStore:
         else:
             raise ValueError(f"unknown ledger backend {backend!r}")
 
-    def read(self) -> DataFrame:
-        """Snapshot read. Swap backend: localCheckpoint pins the
-        contents so a subsequent merge()'s directory swap can't
-        invalidate open lineages. Manifest backend: segments are
-        immutable, so the snapshot is stable with no materialization;
-        upserts resolve here by newest-wins dedup-on-read over the
-        segment commit order (the LSM read path; compact() folds the
-        window cost back down)."""
+    def _scan(self) -> DataFrame:
+        """The ledger as a lazy frame. Swap backend: a parquet scan
+        with FILE_HISTORY as its read schema (no footer-inference job);
+        it lists the directory now and reads it when consumed, so it
+        must be consumed (or staged) before a merge() swaps the
+        directory. Manifest backend: the snapshot, whose segments are
+        immutable, with upserts resolved by newest-wins dedup-on-read
+        over the segment commit order (the LSM read path; compact()
+        folds the window cost back down)."""
         if self._manifest is not None:
             _, df = self._manifest.snapshot_with_seq(FILE_HISTORY)
-            w = Window.partitionBy(*MERGE_KEYS).orderBy(F.col("_seq").desc())
-            return (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "_seq")
-            )
+            return _newest_per_key(df)
         if not os.path.exists(self.path):
             return self.spark.createDataFrame([], FILE_HISTORY)
-        return self.spark.read.parquet(self.path).localCheckpoint(eager=True)
+        return self.spark.read.schema(FILE_HISTORY).parquet(self.path)
+
+    def read(self) -> DataFrame:
+        """Snapshot read that outlives later merges. Swap backend: the
+        schema-on-read scan, pinned by localCheckpoint so a subsequent
+        merge()'s directory swap can't invalidate open lineages.
+        Manifest backend: the snapshot is stable with no
+        materialization."""
+        if self._manifest is not None or not os.path.exists(self.path):
+            return self._scan()
+        return self._scan().localCheckpoint(eager=True)
 
     def merge(self, updates: DataFrame) -> None:
         """Upsert: newest row per merge key wins.
@@ -121,13 +139,17 @@ class FileHistoryStore:
         a 200-row batch; precedence is resolved at read time. A batch
         with internal duplicate keys keeps an arbitrary one — the same
         contract the swap path's single-timestamp window gives.
+
+        The swap path's scan of the current ledger is lazy: the
+        staging write consumes it before the directory swap, so no pin
+        is needed.
         """
         if self._manifest is not None:
             self._manifest.append(updates)
             self._analyze()
             return
         with LedgerLock(self.path):
-            deduped = _merge_newest_wins(self.read(), updates)
+            deduped = _merge_newest_wins(self._scan(), updates)
             staging = f"{self.path}.staging-{int(time.time() * 1000)}"
             deduped.write.mode("overwrite").parquet(staging)
             old = f"{self.path}.old-{int(time.time() * 1000)}"
@@ -185,13 +207,7 @@ class FileHistoryStore:
         if self._manifest is None:
             return True
         v, df = self._manifest.snapshot_with_seq(FILE_HISTORY)
-        w = Window.partitionBy(*MERGE_KEYS).orderBy(F.col("_seq").desc())
-        resolved = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_seq")
-        )
-        ok = self._manifest.compact(resolved, base_version=v)
+        ok = self._manifest.compact(_newest_per_key(df), base_version=v)
         if ok:
             self._manifest.vacuum()
         return ok
@@ -200,36 +216,54 @@ class FileHistoryStore:
         """Rows eligible for dedup/replay (status gate, file_history.py:21)."""
         return self.read().filter(F.col("status") == "COMPLETED")
 
-    def dedup_catalog(self, files: DataFrame) -> DataFrame:
-        """F2: drop catalog rows already COMPLETED (left_anti). With a
-        configured stats store the join shape is the stats-priced one
-        (broadcast the ledger when its persisted size bound fits; split
-        around its stored hot keys when a content hash dominates —
-        e.g. one boilerplate document uploaded a million times; plain
-        shuffle otherwise); the row multiset is identical either way."""
-        hist = self.completed().select(
-            F.col("cache_key").alias("file_hash"), "file_path"
+    def join_completed(
+        self, files: DataFrame, payload: tuple[str, ...] = ()
+    ) -> DataFrame:
+        """F2 dedup and replay as ONE join: `files` LEFT JOIN the
+        COMPLETED ledger rows on (file_hash, file_path), carrying the
+        ledger's `payload` columns and its `cache_key`. cache_key is a
+        non-null ledger column equal to the matched hash, so it is
+        non-null exactly on the rows that hit history; misses() and
+        hits() split the join on it. With a configured stats store the
+        join shape is the stats-priced one (broadcast the ledger when
+        its persisted size bound fits the projection; split around its
+        stored hot keys when a content hash dominates — e.g. one
+        boilerplate document uploaded a million times; plain shuffle
+        otherwise); the row multiset is identical either way.
+
+        The ledger side is a lazy scan (see _scan): stage the join
+        before merging into the same swap-backend ledger."""
+        hist = self._scan().filter(F.col("status") == "COMPLETED").select(
+            F.col("cache_key").alias("file_hash"), "file_path", "cache_key", *payload
         )
+        on = ["file_hash", "file_path"]
         plan = self._join_plan()
         if plan is not None:
             return self.stats.apply_using_join(
-                files, hist, ["file_hash", "file_path"], plan,
-                "left_anti",
+                files, hist, on, plan, "left",
                 column_aliases={"file_hash": STATS_COLUMN},
             )
-        return files.join(hist, ["file_hash", "file_path"], "left_anti")
+        return files.join(hist, on, "left")
+
+    @staticmethod
+    def misses(joined: DataFrame, columns: list[str]) -> DataFrame:
+        """Rows of a join_completed() frame with no COMPLETED history,
+        projected back to the catalog's `columns` (the left_anti
+        rows)."""
+        return joined.filter(F.col("cache_key").isNull()).select(*columns)
+
+    @staticmethod
+    def hits(joined: DataFrame) -> DataFrame:
+        """Rows of a join_completed() frame served from history, one
+        per matching ledger row (the inner-join rows)."""
+        return joined.filter(F.col("cache_key").isNotNull()).drop("cache_key")
+
+    def dedup_catalog(self, files: DataFrame) -> DataFrame:
+        """F2: catalog rows not already COMPLETED (a left_anti)."""
+        return self.misses(self.join_completed(files), files.columns)
 
     def replay_results(self, files: DataFrame) -> DataFrame:
         """Cached results for catalog rows that hit history (the replay
-        path, destination.py:593-612): inner join on hash+path —
-        stats-priced like dedup_catalog when a stats store is set."""
-        hist = self.completed().select(
-            F.col("cache_key").alias("file_hash"), "file_path", "result", "metadata"
-        )
-        plan = self._join_plan()
-        if plan is not None:
-            return self.stats.apply_using_join(
-                files, hist, ["file_hash", "file_path"], plan, "inner",
-                column_aliases={"file_hash": STATS_COLUMN},
-            )
-        return files.join(hist, ["file_hash", "file_path"], "inner")
+        path, destination.py:593-612): the inner-join rows with the
+        ledger's result and metadata."""
+        return self.hits(self.join_completed(files, REPLAY_COLUMNS))

@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from unstract_spark.operators.dedup import dedup_listing
 from unstract_spark.schemas import MAX_FILES_DEFAULT
 
 # reference: endpoint_v2/constants.py:151-163 file-type pattern groups
@@ -141,7 +142,7 @@ def build_catalog(listing: DataFrame, allowed_mime: list[str] | None = None) -> 
         .when(ext == "csv", "text/csv")
         .otherwise("application/octet-stream")
     )
-    df = (
+    df = dedup_listing(
         listing.select(
             F.col("path").alias("file_path"),
             "file_name",
@@ -153,23 +154,15 @@ def build_catalog(listing: DataFrame, allowed_mime: list[str] | None = None) -> 
             F.lit(None).cast("string").alias("provider_file_uuid"),
             F.col("content"),
         )
-        .dropDuplicates(["file_path"])
     )
     if allowed_mime:
         df = df.filter(F.col("mime_type").isin(allowed_mime))
-    # Global row_number needs a single-partition window, but ONLY the
-    # file_path column rides through it (bounded by max_files — default
-    # 100, hard cap 40k — so a few MB at worst); the numbering is then
-    # broadcast back onto the full rows. Ranking the full frame would
-    # funnel every file's binary `content` through one partition — the
-    # window's payload, not its row count, is what breaks at scale.
+    # Number the rows where they stand: one scan feeds the hash, the
+    # content and the numbering. The global window needs one partition,
+    # which a capped listing already is (list_files' limit gathers the
+    # capped rows there, so the window adds a local sort and no
+    # exchange). A path-only numbering branch joined back would plan a
+    # second listing scan behind its own unordered limit, free to keep
+    # a different subset of files than the content branch.
     w_order = F.row_number().over(Window.orderBy(F.col("file_path")))
-    numbers = (
-        df.select("file_path")
-        .withColumn("file_number", w_order.cast("int"))
-    )
-    # Join-back is 1:1, not a fan-out: file_path is unique by the
-    # dropDuplicates(["file_path"]) above, which runs BEFORE both the
-    # numbering side and the full-row side are derived — a listing
-    # carrying the same path twice collapses to one catalog row first.
-    return df.join(F.broadcast(numbers), "file_path")
+    return df.withColumn("file_number", w_order.cast("int"))
