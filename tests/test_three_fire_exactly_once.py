@@ -162,6 +162,51 @@ def test_pattern_three_fires_one_row_per_user(spark, tmp_path):
     assert expect[0][2] == 2      # user 1 matched twice across fires
 
 
+def test_pattern_three_fires_string_user_ids(spark, tmp_path):
+    """Non-numeric string user ids: the first fire's empty state takes
+    its key type from the source schema, so the full-outer join never
+    casts 'u1' to a number; the final state equals the batch twin."""
+    from datetime import datetime
+
+    from unstract_spark.operators.timeseries import event_pattern_match
+    from unstract_spark.streaming.incremental import (
+        streaming_pattern_pipeline,
+    )
+
+    t = lambda m: datetime(2024, 1, 1, 10, m)  # noqa: E731
+    sch = "user_id string, ts timestamp, event_id long, event_type string"
+    cm = {"view": "v", "click": "c", "purchase": "p"}
+    pat = "v[^e]*?c[^e]*?p"
+    src, ckpt, store = _dirs(tmp_path, "src", "ckpt", "store")
+    drops = [
+        [("u1", t(0), 1, "view"), ("u1", t(1), 2, "click"),
+         ("u2", t(0), 11, "view")],
+        [("u1", t(2), 3, "purchase"), ("u2", t(1), 12, "click")],
+        [("u2", t(2), 13, "purchase"), ("u3", t(0), 21, "view")],
+    ]
+    for rows in drops:
+        _fires(spark, src, sch, rows)
+        assert streaming_pattern_pipeline(
+            spark, src, ckpt, store, pat, cm, schema=sch
+        ) == 1
+
+    cols = ("user_id", "seq_len", "n_matches", "first_match",
+            "total_match_len")
+    union = spark.createDataFrame([r for d in drops for r in d], sch)
+    expect = sorted(
+        tuple(r[c] for c in cols)
+        for r in event_pattern_match(union, pat, cm).collect()
+    )
+    got = sorted(
+        tuple(r[c] for c in cols)
+        for r in spark.read.parquet(
+            f"{store}/batch_id={_latest(store)}"
+        ).collect()
+    )
+    assert got == expect
+    assert [r[2] for r in got] == [1, 1, 0]  # u1, u2 matched; u3 open
+
+
 def test_pattern_rejects_prefix_alternation_ends(spark):
     """'ab|a' at the pattern end commits to the shorter LATER arm at a
     fire boundary where the batch scan matches the longer earlier arm
@@ -228,6 +273,46 @@ def test_kmv_three_fires_store_equals_union_sketch(spark, tmp_path):
     assert (est.n_sketch, est.kth_hash, est.est_distinct) == (
         ref.n_sketch, ref.kth_hash, ref.est_distinct
     )
+
+
+def test_kmv_fold_each_fire_equals_union_sketch(spark, tmp_path):
+    """Each fire folds its hashed rows straight into the prior
+    snapshot. After EVERY fire the store must equal kmv_sketch of the
+    union so far and the out row its kmv_estimate — through null
+    texts, texts repeated within a fire and across fires, and both
+    estimator branches (3 distinct < k, then 11 and 14 > k)."""
+    from unstract_spark.operators import sketches
+    from unstract_spark.streaming.incremental import streaming_kmv_pipeline
+
+    src, ckpt, store, out = _dirs(tmp_path, "src", "ckpt", "store", "out")
+    sch = "doc_id long, text string"
+    drops = [
+        [(1, "a"), (2, "a"), (3, None), (4, "b"), (5, "c")],
+        [(6, "b"), (7, None), (8, "d"), (9, "d")]
+        + [(10 + i, t) for i, t in enumerate("efghijk")],
+        [(20, "a"), (21, "e"), (22, None), (23, "l"), (24, "m"),
+         (25, "m"), (26, "n")],
+    ]
+    seen = []
+    for rows in drops:
+        seen += rows
+        _fires(spark, src, sch, rows)
+        assert streaming_kmv_pipeline(
+            spark, src, ckpt, store, out, k=8
+        ) == 1
+        want = sketches.kmv_sketch(
+            spark.createDataFrame(seen, sch), "text", k=8
+        )
+        bid = _latest(store)
+        got = sorted(
+            r.h
+            for r in spark.read.parquet(f"{store}/batch_id={bid}").collect()
+        )
+        assert got == sorted(r.h for r in want.collect())
+        est = spark.read.parquet(f"{out}/batch_id={bid}").collect()
+        ref = sketches.kmv_estimate(want, 8).collect()
+        assert [tuple(r) for r in est] == [tuple(r) for r in ref]
+    assert ref[0].n_sketch == 8 and ref[0].est_distinct != 8.0
 
 
 def test_quantile_three_fires_sample_equals_union(spark, tmp_path):

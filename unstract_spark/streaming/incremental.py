@@ -172,13 +172,33 @@ def _read_parquet_or_none(spark: SparkSession, path: str):
     try:
         return spark.read.parquet(path)
     except AnalysisException as ex:
-        cls = (ex.getErrorClass() or "") if hasattr(ex, "getErrorClass") else ""
+        cls = ex.getCondition() or ""
         if "PATH_NOT_FOUND" not in cls and "Path does not exist" not in str(ex):
             raise
         return None
 
 
-def _read_prior_snapshot(spark: SparkSession, store_dir: str, bid: int):
+def _prior_bids(store_dir: str, bid: int) -> list[int]:
+    """Sorted ids of the `batch_id=` partitions in `store_dir` strictly
+    below `bid` ([] when the directory does not exist yet)."""
+    import os as _os
+
+    try:
+        names = _os.listdir(store_dir)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in names
+        if d.startswith("batch_id=")
+        and d.split("=", 1)[1].isdigit()
+        and int(d.split("=", 1)[1]) < bid
+    )
+
+
+def _read_prior_snapshot(
+    spark: SparkSession, store_dir: str, bid: int, schema: str | None = None
+):
     """Read ONLY the latest full-state snapshot strictly below `bid`.
 
     Snapshot-state stores rewrite the WHOLE state to batch_id={bid}
@@ -196,25 +216,33 @@ def _read_prior_snapshot(spark: SparkSession, store_dir: str, bid: int):
     anchors on N-1, exactly what the prune preserved. Returns None on
     first fire. Partition columns nested below batch_id (e.g. the
     stats accumulator's column=) survive in the returned schema;
-    batch_id itself does not."""
+    batch_id itself does not.
+
+    `schema` (a DDL string) reads the snapshot with that schema
+    instead of inferring it from the parquet footers — one Spark job
+    fewer per read, for stores whose state schema the caller spells
+    out anyway."""
     import os as _os
 
-    try:
-        names = _os.listdir(store_dir)
-    except FileNotFoundError:
-        return None
-    prior = [
-        int(d.split("=", 1)[1])
-        for d in names
-        if d.startswith("batch_id=")
-        and d.split("=", 1)[1].isdigit()
-        and int(d.split("=", 1)[1]) < bid
-    ]
+    prior = _prior_bids(store_dir, bid)
     if not prior:
         return None
-    return spark.read.parquet(
-        _os.path.join(store_dir, f"batch_id={max(prior)}")
-    )
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(_os.path.join(store_dir, f"batch_id={prior[-1]}"))
+
+
+def _prune_superseded(store_dir: str, bid: int) -> None:
+    """Delete the superseded `batch_id=` snapshots below `bid`, KEEPING
+    the latest one: a replay of `bid` excludes its own partition from
+    the prior read, so the previous full-state snapshot must survive
+    until the next fire commits. Call after the fire's own write."""
+    import os as _os
+    import shutil as _shutil
+
+    for p in _prior_bids(store_dir, bid)[:-1]:
+        _shutil.rmtree(
+            _os.path.join(store_dir, f"batch_id={p}"), ignore_errors=True
+        )
 
 
 # Crawl fetch commits live in their own partition namespace, disjoint
@@ -1158,17 +1186,26 @@ def streaming_kmv_pipeline(
     schema: str = "doc_id long, text string",
 ) -> int:
     """Incremental KMV distinct-count sketch: each AvailableNow fire
-    sketches the NEW rows' `col` (sketches.kmv_sketch), MERGES with
-    the accumulated sketch (kmv_merge — union + re-min, the property
-    that makes the family shippable from per-shard state), writes the
-    merged k rows as this fire's store snapshot, and emits one
-    cumulative estimate row (k, n_sketch, kth_hash, est_distinct via
-    kmv_estimate) — the streaming twin of sk_kmv_distinct, proving
-    mergeability ACROSS FIRES, not just within one query.
+    hashes the NEW rows' non-null `col` (sketches.md5_hash60) and
+    FOLDS them into the accumulated sketch with kmv_merge (union +
+    re-min, the property that makes the family shippable from
+    per-shard state), writes the merged k rows as this fire's store
+    snapshot, and emits one cumulative estimate row (k, n_sketch,
+    kth_hash, est_distinct via kmv_estimate) — the streaming twin of
+    sk_kmv_distinct, proving mergeability ACROSS FIRES, not just
+    within one query.
+
+    The new rows are not pre-cut with kmv_sketch: the k smallest
+    distinct hashes of (new hashes ∪ prior snapshot) are the same set
+    either way (kmv_sketch's subset argument), and the fold is one
+    distinct → orderBy → limit in the JVM — no Python worker per fire.
 
     Scale contract: state is <= k longs however much history has
     streamed (the sketch IS the state — cf. streaming_bloom_pipeline's
     m bits); each fire reads O(k) store rows, never re-scans history.
+    The fire's shuffle carries at most the new rows' distinct 8-byte
+    hashes (after map-side partial aggregation) plus the k prior
+    ones: it scales with the fire's input, not with history.
 
     Exactly-once discipline (the sibling pipelines' shape): both
     writes go to batch_id=N partitions with overwrite, the store read
@@ -1195,45 +1232,29 @@ def streaming_kmv_pipeline(
         fires += 1
         bid = run_base + int(epoch)
         _pin_bid(checkpoint_dir, bid)
-        bsk = sketches.kmv_sketch(batch.select(col), col, k)
-        old = _read_prior_snapshot(spark, store_dir, bid)
-        if old is not None:
-            merged = sketches.kmv_merge(bsk, old.select("h"), k=k)
-        else:
-            merged = bsk
-        # No materialization barrier needed (r13): merged's lineage
-        # reads ONLY the max-prior snapshot partition (strictly < bid,
-        # _read_prior_snapshot), so overwriting batch_id={bid} cannot
-        # invalidate its own input even on replay. Writing directly
-        # saves one full pass per fire; the estimate re-reads the
-        # just-committed O(k) snapshot instead of a cached copy.
+        hashed = batch.where(F.col(col).isNotNull()).select(
+            sketches.md5_hash60(F.col(col)).alias("h")
+        )
+        old = _read_prior_snapshot(spark, store_dir, bid, "h long")
+        parts = [hashed] if old is None else [hashed, old]
+        merged = sketches.kmv_merge(*parts, k=k)
+        # No materialization barrier needed (r13): the fold's lineage
+        # reads ONLY the new rows and the max-prior snapshot partition
+        # (strictly < bid, _read_prior_snapshot), so overwriting
+        # batch_id={bid} cannot invalidate its own input even on
+        # replay. Writing directly saves one full pass per fire, and
+        # the fold's one shuffle holds at most the new rows' distinct
+        # hashes plus k prior ones. The estimate re-reads the
+        # just-committed O(k) snapshot (schema on read, no
+        # footer-inference job) instead of a cached copy.
         merged.write.mode("overwrite").parquet(f"{store_dir}/batch_id={bid}")
-        snap = spark.read.parquet(f"{store_dir}/batch_id={bid}")
+        snap = spark.read.schema("h long").parquet(
+            f"{store_dir}/batch_id={bid}"
+        )
         sketches.kmv_estimate(snap, k).write.mode("overwrite").parquet(
             f"{out_dir}/batch_id={bid}"
         )
-        # prune superseded snapshots, KEEPING the latest one below bid:
-        # a replay of bid excludes its own partition from the read, so
-        # the previous full-merge snapshot must survive until the next
-        # fire commits
-        import os as _os
-        import shutil as _shutil
-
-        try:
-            names = _os.listdir(store_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(store_dir, f"batch_id={p}"), ignore_errors=True
-            )
+        _prune_superseded(store_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -1333,25 +1354,7 @@ def streaming_feed_pipeline(
         new_state.write.mode("overwrite").parquet(
             f"{state_dir}/batch_id={bid}"
         )
-        import os as _os
-        import shutil as _shutil
-
-        try:
-            names = _os.listdir(state_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(state_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(state_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -1544,6 +1547,17 @@ def streaming_pattern_pipeline(
         )
     fires = 0
     run_base = _run_base(store_dir, checkpoint_dir=checkpoint_dir)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "100")
+        .parquet(source_dir)
+    )
+    # the state's key column keeps the source's user-id type
+    key_type = stream.select(user_col).schema[0].dataType.simpleString()
+    state_ddl = (
+        f"{user_col} {key_type}, n_matches long, total_match_len long,"
+        " seq_len long, first_match string, tail string"
+    )
 
     def process(batch: DataFrame, epoch: int) -> None:
         nonlocal fires
@@ -1580,18 +1594,9 @@ def streaming_pattern_pipeline(
                 ).alias("_new")
             )
         )
-        old = _read_prior_snapshot(spark, store_dir, bid)
-        if old is not None:
-            old = old.select(
-                user_col, "n_matches", "total_match_len", "seq_len",
-                "first_match", "tail",
-            )
-        else:
-            old = spark.createDataFrame(
-                [],
-                f"{user_col} long, n_matches long, total_match_len long,"
-                " seq_len long, first_match string, tail string",
-            )
+        old = _read_prior_snapshot(spark, store_dir, bid, state_ddl)
+        if old is None:
+            old = spark.createDataFrame([], state_ddl)
         j = ns.join(
             old, ns["_u"] == old[user_col], "full_outer"
         ).withColumn(
@@ -1649,31 +1654,8 @@ def streaming_pattern_pipeline(
         state.write.mode("overwrite").parquet(
             f"{store_dir}/batch_id={bid}"
         )
-        import os as _os
-        import shutil as _shutil
+        _prune_superseded(store_dir, bid)
 
-        try:
-            names = _os.listdir(store_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(store_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
     q = (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
@@ -1748,26 +1730,7 @@ def streaming_quantile_pipeline(
         sketches.quantiles_of_sample(snap, value_col, k, qs).write.mode(
             "overwrite"
         ).parquet(f"{out_dir}/batch_id={bid}")
-        # prune superseded snapshots, KEEPING the latest one below bid
-        # (a replay of bid excludes its own partition from the read)
-        import os as _os
-        import shutil as _shutil
-
-        try:
-            names = _os.listdir(store_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(store_dir, f"batch_id={p}"), ignore_errors=True
-            )
+        _prune_superseded(store_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -1866,25 +1829,7 @@ def streaming_ohlc_pipeline(
         timeseries.ohlc_from_partials(snap, key_col=key_col).write.mode(
             "overwrite"
         ).parquet(f"{out_dir}/batch_id={bid}")
-        import os as _os
-        import shutil as _shutil
-
-        try:
-            names = _os.listdir(store_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for pth in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(store_dir, f"batch_id={pth}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(store_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -1927,9 +1872,6 @@ def streaming_scd2_pipeline(
     follow the sibling pipelines' batch_id=N discipline (state
     pruned keeping latest prior; emitted versions are the dimension's
     content and never pruned). Returns fired batch count."""
-    import os as _os
-    import shutil as _shutil
-
     from unstract_spark.operators.joins import scd2_build
 
     fires = 0
@@ -1980,22 +1922,7 @@ def streaming_scd2_pipeline(
         state.write.mode("overwrite").parquet(
             f"{state_dir}/batch_id={bid}"
         )
-        try:
-            names = _os.listdir(state_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(state_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(state_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -2074,9 +2001,6 @@ def streaming_triangle_pipeline(
     the per-node count snapshot (overwrite + prune, sibling
     discipline). All joins are node-keyed equi-joins. Returns fired
     batch count."""
-    import os as _os
-    import shutil as _shutil
-
     fires = 0
     run_base = _run_base(
         f"{state_dir}/edges", out_dir, checkpoint_dir=checkpoint_dir
@@ -2177,22 +2101,7 @@ def streaming_triangle_pipeline(
         de.write.mode("overwrite").parquet(
             f"{state_dir}/edges/batch_id={bid}"
         )
-        try:
-            names = _os.listdir(out_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(out_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(out_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -2242,9 +2151,6 @@ def streaming_islands_pipeline(
     the result, never pruned); open-island state snapshots follow the
     sibling pipelines' exactly-once discipline. Returns fired count.
     """
-    import os as _os
-    import shutil as _shutil
-
     from unstract_spark.operators.joins import merge_intervals
 
     fires = 0
@@ -2317,22 +2223,7 @@ def streaming_islands_pipeline(
         state.write.mode("overwrite").parquet(
             f"{state_dir}/batch_id={bid}"
         )
-        try:
-            names = _os.listdir(state_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(state_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(state_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -2399,9 +2290,6 @@ def streaming_cms_pipeline(
     come from the ordinary cms_lookup against the stored matrix.
     Exactly-once: the sibling pipelines' snapshot discipline.
     Returns fired batch count."""
-    import os as _os
-    import shutil as _shutil
-
     from unstract_spark.operators.text_analysis import count_min_sketch
 
     fires = 0
@@ -2432,22 +2320,7 @@ def streaming_cms_pipeline(
         merged.write.mode("overwrite").parquet(
             f"{store_dir}/batch_id={bid}"
         )
-        try:
-            names = _os.listdir(store_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(store_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(store_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -2493,9 +2366,6 @@ def streaming_upsert_pipeline(
     sibling pipelines' snapshot discipline (batch_id=N overwrite,
     current epoch excluded, pinned run base, prune keeping latest
     prior). Returns fired batch count."""
-    import os as _os
-    import shutil as _shutil
-
     fires = 0
     run_base = _run_base(store_dir, checkpoint_dir=checkpoint_dir)
 
@@ -2526,22 +2396,7 @@ def streaming_upsert_pipeline(
         state.write.mode("overwrite").parquet(
             f"{store_dir}/batch_id={bid}"
         )
-        try:
-            names = _os.listdir(store_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(store_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(store_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -2717,9 +2572,6 @@ def streaming_dq_pipeline(
     partitions, current epoch excluded from the read, run base
     pinned, superseded snapshots pruned keeping the latest prior.
     Returns fired batch count."""
-    import os as _os
-    import shutil as _shutil
-
     fires = 0
     run_base = _run_base(store_dir, checkpoint_dir=checkpoint_dir)
 
@@ -2780,22 +2632,7 @@ def streaming_dq_pipeline(
         state.write.mode("overwrite").parquet(
             f"{store_dir}/batch_id={bid}"
         )
-        try:
-            entries = _os.listdir(store_dir)
-        except FileNotFoundError:
-            entries = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in entries
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(store_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(store_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -2843,7 +2680,6 @@ def streaming_stats_pipeline(
     and publish republishes identically on replay. Returns fired
     batches."""
     import os as _os
-    import shutil as _shutil
 
     from unstract_spark.operators import sketches
 
@@ -2944,23 +2780,7 @@ def streaming_stats_pipeline(
                 "len_sum": len_sum, "n_sketch": est["n_sketch"],
                 "kth_hash": est["kth_hash"],
             })
-        # prune superseded accumulator snapshots, keeping latest prior
-        try:
-            names = _os.listdir(acc_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(acc_dir, f"batch_id={p}"),
-                ignore_errors=True,
-            )
+        _prune_superseded(acc_dir, bid)
 
     stream = (
         spark.readStream.schema(schema)
@@ -3818,24 +3638,7 @@ def streaming_drift_monitor(
         new_state.write.mode("overwrite").parquet(
             f"{state_dir}/batch_id={bid}"
         )
-        import os as _os
-        import shutil as _shutil
-
-        try:
-            names = _os.listdir(state_dir)
-        except FileNotFoundError:
-            names = []
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in names
-            if d.startswith("batch_id=")
-            and d.split("=", 1)[1].isdigit()
-            and int(d.split("=", 1)[1]) < bid
-        )
-        for p in prior[:-1]:
-            _shutil.rmtree(
-                _os.path.join(state_dir, f"batch_id={p}"), ignore_errors=True
-            )
+        _prune_superseded(state_dir, bid)
 
     schema = "doc_id long, text string, source string"
     stream = (
