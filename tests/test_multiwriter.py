@@ -618,3 +618,28 @@ def test_streaming_ledger_sink_exactly_once(spark, tmp_path):
     n3 = streaming_ledger_sink(spark, src, str(tmp_path / "ck"),
                                str(tmp_path / "tbl"))
     assert n3 == 0 and t.version() == 1
+
+
+def test_streaming_ledger_sink_two_checkpoints_one_table(spark, tmp_path):
+    """Epochs restart at 0 for every checkpoint, so two lineages (a
+    second source, or a rebuilt checkpoint) writing into one table must
+    not collide on their idempotency keys: every row of both lands, and
+    a drained rerun of either checkpoint commits nothing more."""
+    from unstract_spark.sinks.manifest import ManifestTable
+    from unstract_spark.streaming.incremental import streaming_ledger_sink
+
+    s = "doc_id long, text string"
+    tbl = str(tmp_path / "tbl")
+    drops = {"1": [(1, "a"), (2, "b")], "2": [(3, "c"), (4, "d")]}
+    for name, rows in drops.items():
+        src, ck = str(tmp_path / f"src{name}"), str(tmp_path / f"ck{name}")
+        spark.createDataFrame(rows, s).coalesce(1).write.parquet(src)
+        assert streaming_ledger_sink(spark, src, ck, tbl) == 1
+    t = ManifestTable(spark, tbl)
+    _, snap = t.snapshot(s)
+    assert sorted(r.doc_id for r in snap.collect()) == [1, 2, 3, 4]
+    assert len(t.committed_keys()) == 2
+    assert streaming_ledger_sink(
+        spark, str(tmp_path / "src1"), str(tmp_path / "ck1"), tbl
+    ) == 0
+    assert t.version() == 1

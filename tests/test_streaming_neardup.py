@@ -524,6 +524,71 @@ def test_stale_checkpoint_resume_refused(spark, tmp_path):
     assert _run_base(out, store, checkpoint_dir=legacy) == 0
 
 
+def test_fire_skeleton_empty_batch_fresh_base_and_replay(spark, tmp_path):
+    """The shared fire discipline (`_drain_fires`), driven by a
+    trivial fire that writes its rows to `batch_id={bid}`:
+    (a) a batch of empty parquet files is no fire — no partition, and
+        the checkpoint's allocation ceiling does not move;
+    (b) a fresh checkpoint over a root that already holds partitions
+        numbers its partitions above them;
+    (c) a fire that raises after its write is replayed by the next run
+        of the same checkpoint onto the same bid, overwriting it."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from unstract_spark.streaming.incremental import (
+        _drain_fires,
+        _parquet_stream,
+    )
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    marker = os.path.join(ckpt, "_graft_run_base_0")
+    attempts = []
+
+    def run(fail: bool = False) -> int:
+        def fire(batch, bid):
+            attempts.append(bid)
+            batch.withColumn("attempt", F.lit(len(attempts))).write.mode(
+                "overwrite"
+            ).parquet(f"{out}/batch_id={bid}")
+            if fail:
+                raise RuntimeError("crash after the fire's write")
+
+        stream = _parquet_stream(spark, src, "doc_id long, text string")
+        return _drain_fires(stream, ckpt, (out,), fire)
+
+    def bids():
+        return sorted(int(d.split("=")[1]) for d in os.listdir(out))
+
+    # a partition an earlier run committed
+    _docs(spark, [(0, "old")]).write.parquet(f"{out}/batch_id=7")
+
+    # (a) a drop of one empty parquet file: epoch 0 runs, nothing fires
+    _docs(spark, []).coalesce(1).write.mode("append").parquet(src)
+    assert run() == 0
+    assert attempts == [] and bids() == [7]
+    assert open(marker).read().split() == ["8", "7"]
+
+    # (b) epoch 1 is the first fire: bid = base 8 + 1, above the root's 7
+    _docs(spark, [(1, "a"), (2, "b")]).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    assert run() == 1
+    assert attempts == [9] and bids() == [7, 9]
+    assert open(marker).read().split() == ["8", "9"]
+
+    # (c) epoch 2 dies after its write; its rerun overwrites bid 10
+    _docs(spark, [(3, "c")]).coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(StreamingQueryException):
+        run(fail=True)
+    assert attempts == [9, 10] and bids() == [7, 9, 10]
+    assert run() == 1
+    assert attempts == [9, 10, 10] and bids() == [7, 9, 10]
+    rows = spark.read.parquet(f"{out}/batch_id=10").collect()
+    assert [(r.doc_id, r.attempt) for r in rows] == [(3, 3)]
+
+
 def test_streaming_quantiles_merge_across_fires(spark, tmp_path):
     """The row-sample twin of the cross-fire KMV law: after two fires
     the stored sample must equal the batch sample of the union, the

@@ -21,14 +21,36 @@ Spark-first mapping:
 Also here: the watermarked event-time aggregation the north-star
 (training-data telemetry at 100 TB) needs — late data tolerated up to
 the watermark, state bounded.
+
+The fire discipline. foreachBatch is AT-LEAST-ONCE: a crash between a
+fire's writes and the checkpoint commit replays the epoch. Every
+pipeline that writes `batch_id=` partitions runs its fires through
+`_drain_fires`, which makes that effectively exactly-once:
+- the run base (`_run_base`) is the max `batch_id=` over the
+  pipeline's roots plus one, pinned to the checkpoint, so a fresh
+  checkpoint never overwrites an earlier run's partitions and a
+  restart of the same checkpoint keeps its numbering;
+- a batch with no rows is not a fire: nothing is pinned or written;
+- a fire's partition id is `bid = run_base + epoch`, recorded as
+  allocated (`_pin_bid`) before the fire's first write;
+- every write overwrites the fire's own `batch_id={bid}` partition, so
+  a replay rewrites what its crashed attempt left;
+- reads of the pipeline's own stores exclude `bid`: snapshot stores
+  read only the latest snapshot strictly below it, with the state's
+  schema (`_read_prior_snapshot`), and prune superseded snapshots
+  keeping that one (`_prune_superseded`).
 """
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class StaleCheckpointError(RuntimeError):
@@ -81,31 +103,24 @@ def _run_base(
     and skip the check — unknowable, documented.)
 
     `base`/`below` bound the namespace scanned (and returned into), so
-    out-of-band partitions — the queue consumer's SWEEP_BASE sweep,
+    out-of-band partitions — the queue consumer's _SWEEP_BASE sweep,
     the crawl pipeline's _FETCH_BASE fetch commits — stay invisible to
     each other's numbering."""
-    import os as _os
 
     def _scan_max(floor: int) -> tuple[int, list[str]]:
         """(max bid in [base, below), paths with bid > floor)."""
         mx, above = base - 1, []
         for root in roots:
-            try:
-                names = _os.listdir(root)
-            except FileNotFoundError:
-                continue
-            for d in names:
-                if d.startswith("batch_id=") and d.split("=", 1)[1].isdigit():
-                    v = int(d.split("=", 1)[1])
-                    if v >= base and (below is None or v < below):
-                        mx = max(mx, v)
-                        if v > floor:
-                            above.append(_os.path.join(root, d))
+            for v in _prior_bids(root, below):
+                if v >= base:
+                    mx = max(mx, v)
+                    if v > floor:
+                        above.append(os.path.join(root, f"batch_id={v}"))
         return mx, above
 
     marker = None
     if checkpoint_dir is not None:
-        marker = _os.path.join(checkpoint_dir, f"_graft_run_base_{base}")
+        marker = os.path.join(checkpoint_dir, f"_graft_run_base_{base}")
         try:
             with open(marker) as fh:
                 fields = fh.read().split()
@@ -127,12 +142,12 @@ def _run_base(
             pass
     val = _scan_max(base - 1)[0] + 1
     if marker is not None:
-        _os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = f"{marker}.tmp{_os.getpid()}"
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        tmp = f"{marker}.tmp{os.getpid()}"
         with open(tmp, "w") as fh:
             # base + allocation ceiling (nothing allocated yet)
             fh.write(f"{val} {val - 1}")
-        _os.replace(tmp, marker)
+        os.replace(tmp, marker)
     return val
 
 
@@ -142,11 +157,10 @@ def _pin_bid(checkpoint_dir: str | None, bid: int, base: int = 0) -> None:
     still leaves the marker ceiling >= bid and the replay maps onto
     (and overwrites) its own half-written partition rather than
     tripping the stale-resume guard."""
-    import os as _os
 
     if checkpoint_dir is None:
         return
-    marker = _os.path.join(checkpoint_dir, f"_graft_run_base_{base}")
+    marker = os.path.join(checkpoint_dir, f"_graft_run_base_{base}")
     try:
         with open(marker) as fh:
             fields = fh.read().split()
@@ -156,10 +170,10 @@ def _pin_bid(checkpoint_dir: str | None, bid: int, base: int = 0) -> None:
         return
     if bid <= ceiling:
         return
-    tmp = f"{marker}.tmp{_os.getpid()}"
+    tmp = f"{marker}.tmp{os.getpid()}"
     with open(tmp, "w") as fh:
         fh.write(f"{val} {bid}")
-    _os.replace(tmp, marker)
+    os.replace(tmp, marker)
 
 
 def _read_parquet_or_none(spark: SparkSession, path: str):
@@ -178,28 +192,29 @@ def _read_parquet_or_none(spark: SparkSession, path: str):
         return None
 
 
-def _prior_bids(store_dir: str, bid: int) -> list[int]:
+def _prior_bids(store_dir: str, bid: int | None) -> list[int]:
     """Sorted ids of the `batch_id=` partitions in `store_dir` strictly
-    below `bid` ([] when the directory does not exist yet)."""
-    import os as _os
-
+    below `bid`, or all of them when `bid` is None ([] when the
+    directory does not exist yet)."""
     try:
-        names = _os.listdir(store_dir)
+        names = os.listdir(store_dir)
     except FileNotFoundError:
         return []
-    return sorted(
+    ids = (
         int(d.split("=", 1)[1])
         for d in names
-        if d.startswith("batch_id=")
-        and d.split("=", 1)[1].isdigit()
-        and int(d.split("=", 1)[1]) < bid
+        if d.startswith("batch_id=") and d.split("=", 1)[1].isdigit()
     )
+    return sorted(v for v in ids if bid is None or v < bid)
 
 
 def _read_prior_snapshot(
-    spark: SparkSession, store_dir: str, bid: int, schema: str | None = None
-):
-    """Read ONLY the latest full-state snapshot strictly below `bid`.
+    spark: SparkSession, store_dir: str, bid: int, schema: str | T.StructType
+) -> DataFrame:
+    """Read ONLY the latest full-state snapshot strictly below `bid`,
+    with the state's `schema` (DDL or StructType) — no parquet
+    footer-inference job. On the first fire it is an empty frame of
+    that schema.
 
     Snapshot-state stores rewrite the WHOLE state to batch_id={bid}
     every fire and prune superseded partitions KEEPING the latest
@@ -213,22 +228,15 @@ def _read_prior_snapshot(
     reading just the max prior is both correct and cheaper (one
     partition scan, no filter). Crash replay stays sound: a replay of
     epoch N excludes its own half-written partition via `< bid` and
-    anchors on N-1, exactly what the prune preserved. Returns None on
-    first fire. Partition columns nested below batch_id (e.g. the
-    stats accumulator's column=) survive in the returned schema;
-    batch_id itself does not.
-
-    `schema` (a DDL string) reads the snapshot with that schema
-    instead of inferring it from the parquet footers — one Spark job
-    fewer per read, for stores whose state schema the caller spells
-    out anyway."""
-    import os as _os
-
+    anchors on N-1, exactly what the prune preserved. Partition
+    columns nested below batch_id (e.g. the stats accumulator's
+    column=) belong in `schema`; batch_id itself does not."""
     prior = _prior_bids(store_dir, bid)
     if not prior:
-        return None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(_os.path.join(store_dir, f"batch_id={prior[-1]}"))
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        os.path.join(store_dir, f"batch_id={prior[-1]}")
+    )
 
 
 def _prune_superseded(store_dir: str, bid: int) -> None:
@@ -236,17 +244,80 @@ def _prune_superseded(store_dir: str, bid: int) -> None:
     the latest one: a replay of `bid` excludes its own partition from
     the prior read, so the previous full-state snapshot must survive
     until the next fire commits. Call after the fire's own write."""
-    import os as _os
-    import shutil as _shutil
-
     for p in _prior_bids(store_dir, bid)[:-1]:
-        _shutil.rmtree(
-            _os.path.join(store_dir, f"batch_id={p}"), ignore_errors=True
+        shutil.rmtree(
+            os.path.join(store_dir, f"batch_id={p}"), ignore_errors=True
         )
 
 
-# Crawl fetch commits live in their own partition namespace, disjoint
-# from stream-fire ids and from the queue consumer's sweep (1 << 40).
+def _col_type(frame: DataFrame, col: str) -> str:
+    """DDL type of `col` in `frame`, for state schemas that keep a
+    caller's column type."""
+    return frame.schema[col].dataType.simpleString()
+
+
+def _parquet_stream(
+    spark: SparkSession, source_dir: str, schema, max_files: int = 100
+) -> DataFrame:
+    """A parquet file stream over `source_dir` read with `schema`, at
+    most `max_files` new files per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files))
+        .parquet(source_dir)
+    )
+
+
+def _drain(
+    stream: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+):
+    """Run `process(batch, epoch)` over every micro-batch available now
+    (Trigger.AvailableNow) and return the terminated query."""
+    q = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def _drain_fires(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    roots: tuple[str, ...],
+    fire: Callable[[DataFrame, int], None],
+    below: int | None = None,
+) -> int:
+    """One AvailableNow drain under the module's fire discipline:
+    the run base over `roots` (ids below `below`) is pinned to the
+    checkpoint; an empty batch is skipped — no fire counted, no bid
+    pinned, nothing written; otherwise `bid = run_base + epoch` is
+    pinned and `fire(batch, bid)` writes the `batch_id={bid}`
+    partitions. Returns the number of fires."""
+    run_base = _run_base(*roots, below=below, checkpoint_dir=checkpoint_dir)
+    fires = 0
+
+    def process(batch: DataFrame, epoch: int) -> None:
+        nonlocal fires
+        if batch.isEmpty():
+            return
+        fires += 1
+        bid = run_base + int(epoch)
+        _pin_bid(checkpoint_dir, bid)
+        fire(batch, bid)
+
+    _drain(stream, process, checkpoint_dir)
+    return fires
+
+
+# Out-of-band partition namespaces, disjoint from stream-fire ids and
+# from each other: the queue consumer's post-drain sweep and the crawl
+# pipeline's fetch commits.
+_SWEEP_BASE = 1 << 40
 _FETCH_BASE = 1 << 41
 
 
@@ -274,16 +345,7 @@ def incremental_file_pipeline(
     )
     if path_glob:
         reader = reader.option("pathGlobFilter", path_glob)
-    stream = reader.load(source_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(reader.load(source_dir), batch_fn, checkpoint_dir)
 
 
 def content_dedup_stream(
@@ -331,14 +393,7 @@ def incremental_dedup_pipeline(
         .load(source_dir)
     )
     hashed = stream.withColumn("file_hash", F.sha2(F.col("content"), 256))
-    deduped = content_dedup_stream(hashed)
-    q = (
-        deduped.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(content_dedup_stream(hashed), batch_fn, checkpoint_dir)
 
 
 def windowed_event_aggregation(
@@ -558,18 +613,8 @@ def streaming_similarity_pipeline(
         plans.append(plan)
 
     schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _parquet_stream(spark, source_dir, schema, 1000)
+    _drain(stream, score_batch, checkpoint_dir)
     return plans
 
 
@@ -595,31 +640,16 @@ def streaming_neardup_pipeline(
     surface in the same probe (both sides new -> normalized to
     (least, greatest), emitted once).
 
-    Delivery: foreachBatch is AT-LEAST-ONCE (a crash between the sink
-    write and the checkpoint commit replays the batch), so both sinks
-    write to a batchId-derived partition directory with overwrite — a
-    replay rewrites its own partition instead of appending duplicates,
-    making the pipeline effectively exactly-once end to end. The store
-    read excludes the current batch's partition (metadata-only prune),
-    so a replay that died after a partial store write can't probe
-    against its own half-written signatures.
+    Exactly-once: the module's fire discipline (`_drain_fires`); a
+    replay that died after a partial store write can't probe against
+    its own half-written signatures.
 
     Source is a parquet directory in the documents shape
     (doc_id, text). Returns the number of fired batches.
     """
     from unstract_spark.operators import dedup
 
-    fires = 0
-    run_base = _run_base(out_dir, store_dir, checkpoint_dir=checkpoint_dir)
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        docs = batch.select("doc_id", "text")
-        if docs.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(docs: DataFrame, bid: int) -> None:
         # one materialization: feeds the store append AND both join
         # sides (localCheckpoint, not persist — the CacheManager-leak
         # lesson in SCALE.md)
@@ -649,20 +679,8 @@ def streaming_neardup_pipeline(
             f"{store_dir}/batch_id={bid}"
         )
 
-    schema = "doc_id long, text string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, "doc_id long, text string")
+    return _drain_fires(stream, checkpoint_dir, (out_dir, store_dir), fire)
 
 
 def streaming_decontamination_pipeline(
@@ -692,15 +710,8 @@ def streaming_decontamination_pipeline(
     bench_grams = dedup.word_ngrams(bench, n).withColumnRenamed(
         "doc_id", "bench_id"
     ).localCheckpoint(eager=True)
-    fires = 0
-    run_base = _run_base(out_dir, checkpoint_dir=checkpoint_dir)
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        docs = batch.select("doc_id", "text")
-        if docs.isEmpty():
-            return
-        fires += 1
+    def fire(docs: DataFrame, bid: int) -> None:
         tg = dedup.word_ngrams(docs, n).withColumnRenamed("doc_id", "train_id")
         hits = (
             tg.join(F.broadcast(bench_grams), "gram")
@@ -710,29 +721,10 @@ def streaming_decontamination_pipeline(
                 F.countDistinct("bench_id").alias("n_bench_docs"),
             )
         )
-        # idempotent under foreachBatch's at-least-once replay: each
-        # batch owns its partition directory (same contract as
-        # streaming_neardup_pipeline)
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
-        hits.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={bid}"
-        )
+        hits.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
 
-    schema = "doc_id long, text string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, "doc_id long, text string")
+    return _drain_fires(stream, checkpoint_dir, (out_dir,), fire)
 
 
 def streaming_cluster_pipeline(
@@ -758,47 +750,16 @@ def streaming_cluster_pipeline(
     Labels equal the batch dedup.connected_components over all pairs
     ever seen (min-id roots — proven by the union-of-fires pytest).
 
-    Delivery matches the engine's streaming contract: label snapshots
-    write to a batchId partition with overwrite (at-least-once replays
-    rewrite their own partition); the read side picks the latest
-    committed snapshot, excluding the current epoch so a half-written
-    replay can't seed itself. Returns fired batch count.
+    Exactly-once: the module's fire discipline (`_drain_fires`) over
+    full label snapshots. Returns fired batch count.
     """
-    import os
-
     from unstract_spark.operators.dedup import connected_components
 
-    fires = 0
-    run_base = _run_base(labels_dir, checkpoint_dir=checkpoint_dir)
-
-    def _latest_labels(bid: int) -> DataFrame:
-        done = []
-        if os.path.isdir(labels_dir):
-            for d in os.listdir(labels_dir):
-                if d.startswith("batch_id="):
-                    try:
-                        b = int(d.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if b != bid:
-                        done.append(b)
-        if not done:
-            return spark.createDataFrame([], "doc_id long, cluster_id long")
-        return spark.read.parquet(f"{labels_dir}/batch_id={max(done)}")
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        edges = (
-            batch.filter(F.col("est_jaccard") >= threshold)
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        if edges.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
-        labels = _latest_labels(bid).localCheckpoint(eager=True)
+    def fire(edges: DataFrame, bid: int) -> None:
+        edges = edges.distinct()
+        labels = _read_prior_snapshot(
+            spark, labels_dir, bid, "doc_id long, cluster_id long"
+        ).localCheckpoint(eager=True)
 
         # endpoints -> current components (unknown node = its own id)
         la = labels.select(
@@ -861,30 +822,15 @@ def streaming_cluster_pipeline(
         # stream accumulates O(fires x corpus) storage. Keep the newest
         # `keep_snapshots` (>=2 so the previous snapshot survives until
         # the new one is fully committed) and drop the rest.
-        import shutil
-
-        snaps = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(labels_dir)
-            if d.startswith("batch_id=") and d.split("=", 1)[1].isdigit()
-        )
-        for b in snaps[: -max(keep_snapshots, 2)]:
+        for b in _prior_bids(labels_dir, None)[: -max(keep_snapshots, 2)]:
             shutil.rmtree(f"{labels_dir}/batch_id={b}", ignore_errors=True)
 
-    schema = "id_a long, id_b long, est_jaccard double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(pairs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    # the edge filter rides on the stream, so a batch with no edge at
+    # or above the threshold is an empty batch: no fire
+    stream = _parquet_stream(
+        spark, pairs_dir, "id_a long, id_b long, est_jaccard double", 1000
+    ).filter(F.col("est_jaccard") >= threshold).select("id_a", "id_b")
+    return _drain_fires(stream, checkpoint_dir, (labels_dir,), fire)
 
 
 def streaming_rollup_pipeline(
@@ -903,43 +849,21 @@ def streaming_rollup_pipeline(
     are exact and associative, so the union of fires equals the batch
     rollup_cascade over all events bit-for-bit (pytest-gated).
 
-    Idempotent per the engine's streaming contract: each batch owns
-    its batch_id partition (overwrite on replay). The store grows one
-    partial-set per fire; folding it is cheap (it is bucket-sized, not
-    event-sized) and a maintenance compaction can fold old partials
-    into one without changing any sum. Returns fired batch count.
+    Exactly-once: the module's fire discipline (`_drain_fires`). The
+    store grows one partial-set per fire; folding it is cheap (it is
+    bucket-sized, not event-sized) and a maintenance compaction can
+    fold old partials into one without changing any sum. Returns
+    fired batch count.
     """
     from unstract_spark.operators.timeseries import minute_partials
 
-    fires = 0
-    run_base = _run_base(store_dir, checkpoint_dir=checkpoint_dir)
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
+    def fire(batch: DataFrame, bid: int) -> None:
         part = minute_partials(batch, ts_col=ts_col, value_col=value_col)
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
-        part.write.mode("overwrite").parquet(
-            f"{store_dir}/batch_id={bid}"
-        )
+        part.write.mode("overwrite").parquet(f"{store_dir}/batch_id={bid}")
 
     schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, schema, 1000)
+    return _drain_fires(stream, checkpoint_dir, (store_dir,), fire)
 
 
 def read_streaming_rollups(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1003,27 +927,16 @@ def streaming_queue_consumer(
 
     fires = 0
 
-    # Stream-fire partitions are namespaced PER RUN: epochs restart at
-    # 0 whenever the consumer runs against a fresh checkpoint_dir, and
-    # un-offset epoch partitions would then overwrite an earlier run's
-    # committed batch_id=0..N — losing messages that were already
-    # acked (hence never redelivered). Offsetting by max existing
-    # non-sweep batch_id + 1 makes every run's partitions disjoint
-    # from every earlier run's (mirroring the sweep's SWEEP_BASE
-    # discipline). Within a run the base is fixed, so a foreachBatch
-    # replay of the same epoch still overwrites its own partition; a
-    # crash-restart that shifts the base strands at most one partial
-    # partition whose messages were never acked — they lapse, get
-    # re-claimed into a later partition, and read_consumed_messages'
-    # message_id dedup folds the copies (the documented at-least-once
-    # half of the contract).
-    _SWEEP_BASE = 1 << 40
+    # Stream-fire partitions take the pinned per-run base below the
+    # sweep namespace (`_run_base`), so a fresh checkpoint never
+    # overwrites an earlier run's acked partitions and a replayed epoch
+    # rewrites its own. The fire is gated on its claims, not on the
+    # batch, so this drain pins its own bids.
     run_base = _run_base(
         out_dir, below=_SWEEP_BASE, checkpoint_dir=checkpoint_dir
     )
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
+    def claim() -> tuple[DataFrame, list]:
         claimed = claim_batch(
             spark,
             queue_path,
@@ -1033,30 +946,27 @@ def streaming_queue_consumer(
             max_messages=max_messages_per_fire,
             visibility_timeout_s=visibility_timeout_s,
         )
-        ids = [r.message_id for r in claimed.select("message_id").collect()]
+        return claimed, [
+            r.message_id for r in claimed.select("message_id").collect()
+        ]
+
+    def commit(claimed: DataFrame, ids: list, bid: int) -> None:
+        claimed.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
+        ack_messages(spark, ledger_path, queue_name, ids, consumer_id)
+
+    def process(batch: DataFrame, epoch: int) -> None:
+        nonlocal fires
+        claimed, ids = claim()
         if not ids:
             return
         fires += 1
         bid = run_base + int(epoch)
         _pin_bid(checkpoint_dir, bid)
-        claimed.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={bid}"
-        )
-        ack_messages(spark, ledger_path, queue_name, ids, consumer_id)
+        commit(claimed, ids, bid)
 
     schema = spark.read.parquet(queue_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(queue_path)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _parquet_stream(spark, queue_path, schema, 1)
+    _drain(stream, process, checkpoint_dir)
 
     # Post-drain sweep: stream fires only happen when NEW queue files
     # arrive, so without this a message whose claim lapsed after a
@@ -1064,26 +974,15 @@ def streaming_queue_consumer(
     # unrelated enqueue triggered a fire — "run the consumer again
     # after the visibility timeout" must recover it with or without
     # new arrivals. Sweep partitions live in a namespace disjoint from
-    # stream epochs (SWEEP_BASE offset) so a later run's epoch N can
+    # stream epochs (_SWEEP_BASE offset) so a later run's epoch N can
     # never overwrite an earlier sweep's committed partition.
-    SWEEP_BASE = 1 << 40
-    nxt = _run_base(out_dir, base=SWEEP_BASE)
+    nxt = _run_base(out_dir, base=_SWEEP_BASE)
     while True:
-        claimed = claim_batch(
-            spark,
-            queue_path,
-            ledger_path,
-            queue_name,
-            consumer_id,
-            max_messages=max_messages_per_fire,
-            visibility_timeout_s=visibility_timeout_s,
-        )
-        ids = [r.message_id for r in claimed.select("message_id").collect()]
+        claimed, ids = claim()
         if not ids:
             break
         fires += 1
-        claimed.write.mode("overwrite").parquet(f"{out_dir}/batch_id={nxt}")
-        ack_messages(spark, ledger_path, queue_name, ids, consumer_id)
+        commit(claimed, ids, nxt)
         nxt += 1
     return fires
 
@@ -1116,40 +1015,26 @@ def streaming_bloom_pipeline(
     Scale contract: state is <= m bit rows however large the history
     (the whole point of the Bloom primitive); the bit store is a
     metadata-pruned parquet read + broadcast per fire; no full-history
-    rescan ever.  Same exactly-once discipline as the sibling
-    pipelines: both writes go to batch_id partitions with overwrite
-    (at-least-once replay rewrites its own partition), the store read
-    excludes the current epoch, and only PATH_NOT_FOUND means
-    first-fire.
+    rescan ever. Exactly-once: the module's fire discipline
+    (`_drain_fires`); only PATH_NOT_FOUND means first-fire.
 
     Returns the number of fired batches.
     """
     from unstract_spark.operators import dedup
 
-    fires = 0
-    run_base = _run_base(out_dir, store_dir, checkpoint_dir=checkpoint_dir)
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        docs = batch.select("doc_id", "text")
-        if docs.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(docs: DataFrame, bid: int) -> None:
         fp = docs.select(
             "doc_id", F.md5("text").alias("fingerprint")
         ).localCheckpoint(eager=True)
         old_bits = _read_parquet_or_none(spark, store_dir)
-        if old_bits is not None:
-            old_bits = old_bits.filter(
-                F.col("batch_id") != bid
-            ).drop("batch_id").distinct()
         if old_bits is None:
             decisions = fp.select(
                 "doc_id", F.lit(False).alias("maybe_seen")
             )
         else:
+            old_bits = old_bits.filter(
+                F.col("batch_id") != bid
+            ).drop("batch_id").distinct()
             decisions = dedup.bloom_membership(fp, old_bits, m=m, k=k)
         decisions.write.mode("overwrite").parquet(
             f"{out_dir}/batch_id={bid}"
@@ -1159,20 +1044,8 @@ def streaming_bloom_pipeline(
             f"{store_dir}/batch_id={bid}"
         )
 
-    schema = "doc_id long, text string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, "doc_id long, text string")
+    return _drain_fires(stream, checkpoint_dir, (out_dir, store_dir), fire)
 
 
 def streaming_kmv_pipeline(
@@ -1207,13 +1080,8 @@ def streaming_kmv_pipeline(
     hashes (after map-side partial aggregation) plus the k prior
     ones: it scales with the fire's input, not with history.
 
-    Exactly-once discipline (the sibling pipelines' shape): both
-    writes go to batch_id=N partitions with overwrite, the store read
-    excludes the current epoch, and the run base is pinned to the
-    checkpoint. Each snapshot is the FULL merge through its fire, so
-    superseded snapshots are pruned after the write — except the
-    latest prior one, which a replay of the current epoch (its own
-    partition excluded from the read) still needs. Stale un-pruned
+    Exactly-once: the module's fire discipline (`_drain_fires`); each
+    snapshot is the FULL merge through its fire. Stale un-pruned
     snapshots are harmless: an old k-min set folds into a newer one
     under union + re-min (every old member that still belongs to the
     global k-min is already in the newer snapshot).
@@ -1222,22 +1090,12 @@ def streaming_kmv_pipeline(
     """
     from unstract_spark.operators import sketches
 
-    fires = 0
-    run_base = _run_base(out_dir, store_dir, checkpoint_dir=checkpoint_dir)
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         hashed = batch.where(F.col(col).isNotNull()).select(
             sketches.md5_hash60(F.col(col)).alias("h")
         )
         old = _read_prior_snapshot(spark, store_dir, bid, "h long")
-        parts = [hashed] if old is None else [hashed, old]
-        merged = sketches.kmv_merge(*parts, k=k)
+        merged = sketches.kmv_merge(hashed, old, k=k)
         # No materialization barrier needed (r13): the fold's lineage
         # reads ONLY the new rows and the max-prior snapshot partition
         # (strictly < bid, _read_prior_snapshot), so overwriting
@@ -1256,19 +1114,8 @@ def streaming_kmv_pipeline(
         )
         _prune_superseded(store_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, schema)
+    return _drain_fires(stream, checkpoint_dir, (out_dir, store_dir), fire)
 
 
 def streaming_feed_pipeline(
@@ -1300,22 +1147,14 @@ def streaming_feed_pipeline(
     route the feed through the crawl frontier's per-URL dedup
     instead).
 
-    Exactly-once: sibling discipline — out and state go to batch_id=N
-    partitions with overwrite; the state read excludes the current
-    epoch; run base pinned; superseded snapshots pruned keeping the
-    latest prior. Returns fired batch count."""
+    Exactly-once: the module's fire discipline (`_drain_fires`), with
+    the hwm state as a snapshot store. Returns fired batch count."""
     from unstract_spark.operators import webcorpus
 
-    fires = 0
-    run_base = _run_base(out_dir, state_dir, checkpoint_dir=checkpoint_dir)
+    stream = _parquet_stream(spark, source_dir, schema)
+    state_ddl = f"feed_id {_col_type(stream, 'feed_id')}, hwm_epoch long"
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         entries = webcorpus.feed_published_epoch(
             webcorpus.parse_feed(batch)
         ).filter(
@@ -1324,13 +1163,7 @@ def streaming_feed_pipeline(
         ).select(
             "feed_id", "format", "link", "entry_id", "published_epoch"
         ).dropDuplicates(["feed_id", "link"])
-        old = _read_prior_snapshot(spark, state_dir, bid)
-        if old is not None:
-            hwm = old.select("feed_id", "hwm_epoch")
-        else:
-            hwm = spark.createDataFrame(
-                [], "feed_id string, hwm_epoch long"
-            )
+        hwm = _read_prior_snapshot(spark, state_dir, bid, state_ddl)
         j = entries.join(hwm, "feed_id", "left")
         fresh = j.filter(
             F.col("hwm_epoch").isNull()
@@ -1356,19 +1189,7 @@ def streaming_feed_pipeline(
         )
         _prune_superseded(state_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (out_dir, state_dir), fire)
 
 
 def _pattern_end_extensible(pattern: str) -> bool:
@@ -1527,10 +1348,8 @@ def streaming_pattern_pipeline(
     N events, the same windowed-relaxation every bounded-state CEP
     engine offers.
 
-    Exactly-once: the sibling-pipelines discipline — state snapshots
-    land in batch_id=N partitions with overwrite, the read excludes
-    the current epoch, the run base is pinned, superseded snapshots
-    are pruned keeping the latest prior. Returns fired batch count.
+    Exactly-once: the module's fire discipline (`_drain_fires`), with
+    the per-user state as a snapshot store. Returns fired batch count.
     """
     if "'" in pattern:
         raise ValueError("pattern must not contain single quotes")
@@ -1545,27 +1364,15 @@ def streaming_pattern_pipeline(
             " end on a fixed atom, use a lazy quantifier, or reorder"
             f" the alternation shortest-first: {pattern!r}"
         )
-    fires = 0
-    run_base = _run_base(store_dir, checkpoint_dir=checkpoint_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
+    stream = _parquet_stream(spark, source_dir, schema)
     # the state's key column keeps the source's user-id type
-    key_type = stream.select(user_col).schema[0].dataType.simpleString()
     state_ddl = (
-        f"{user_col} {key_type}, n_matches long, total_match_len long,"
-        " seq_len long, first_match string, tail string"
+        f"{user_col} {_col_type(stream, user_col)}, n_matches long,"
+        " total_match_len long, seq_len long, first_match string,"
+        " tail string"
     )
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         code = None
         for etype, ch in code_map.items():
             br = F.when(F.col(type_col) == etype, F.lit(ch))
@@ -1595,8 +1402,6 @@ def streaming_pattern_pipeline(
             )
         )
         old = _read_prior_snapshot(spark, store_dir, bid, state_ddl)
-        if old is None:
-            old = spark.createDataFrame([], state_ddl)
         j = ns.join(
             old, ns["_u"] == old[user_col], "full_outer"
         ).withColumn(
@@ -1656,14 +1461,7 @@ def streaming_pattern_pipeline(
         )
         _prune_superseded(store_dir, bid)
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (store_dir,), fire)
 
 
 def streaming_quantile_pipeline(
@@ -1695,56 +1493,34 @@ def streaming_quantile_pipeline(
     pins this), so the emitted quantiles match the batch spelling
     bit-for-bit.
 
-    Exactly-once discipline: identical to streaming_kmv_pipeline
-    (batch_id=N overwrite partitions, current-epoch-excluded store
-    read, run base pinned to the checkpoint, superseded snapshots
-    pruned keeping the latest prior; full-row dedup inside the merge
-    additionally makes a replayed fold a no-op). Returns the number
-    of fired batches."""
+    Exactly-once: the module's fire discipline (`_drain_fires`), as
+    for streaming_kmv_pipeline; full-row dedup inside the merge
+    additionally makes a replayed fold a no-op. Returns the number of
+    fired batches."""
     from unstract_spark.operators import sketches
 
-    fires = 0
-    run_base = _run_base(out_dir, store_dir, checkpoint_dir=checkpoint_dir)
+    stream = _parquet_stream(spark, source_dir, schema)
+    state_ddl = f"h long, {value_col} {_col_type(stream, value_col)}"
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         bsmp = sketches.kmv_row_sample(batch, key_col, [value_col], k)
-        old = _read_prior_snapshot(spark, store_dir, bid)
-        if old is not None:
-            old = old.select("h", value_col)
-            merged = sketches.kmv_row_sample_merge(
-                bsmp, old, cols=[value_col], k=k
-            )
-        else:
-            merged = bsmp
+        old = _read_prior_snapshot(spark, store_dir, bid, state_ddl)
+        merged = sketches.kmv_row_sample_merge(
+            bsmp, old, cols=[value_col], k=k
+        )
         # Direct write (r13): lineage reads only the max-prior
         # snapshot (< bid), never the write target; the quantile cut
         # re-reads the just-committed O(k) snapshot.
         merged.write.mode("overwrite").parquet(f"{store_dir}/batch_id={bid}")
-        snap = spark.read.parquet(f"{store_dir}/batch_id={bid}")
+        snap = spark.read.schema(state_ddl).parquet(
+            f"{store_dir}/batch_id={bid}"
+        )
         sketches.quantiles_of_sample(snap, value_col, k, qs).write.mode(
             "overwrite"
         ).parquet(f"{out_dir}/batch_id={bid}")
         _prune_superseded(store_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (out_dir, store_dir), fire)
 
 
 def streaming_ohlc_pipeline(
@@ -1775,75 +1551,44 @@ def streaming_ohlc_pipeline(
     sums.
 
     State is one partial row per live (key, bucket) — bounded by the
-    bucket domain, never by row count. Exactly-once discipline is the
-    sibling pipelines': batch_id=N overwrite partitions, store read
-    excludes the current epoch (so a replayed fold cannot
-    double-count), run base pinned to the checkpoint, superseded
-    snapshots pruned keeping the latest prior. Returns fired batches.
+    bucket domain, never by row count. Exactly-once: the module's fire
+    discipline (`_drain_fires`); the store read excludes the current
+    epoch, so a replayed fold cannot double-count. Returns fired
+    batches.
     """
     from unstract_spark.operators import timeseries
 
-    fires = 0
-    run_base = _run_base(out_dir, store_dir, checkpoint_dir=checkpoint_dir)
-    part_cols = [
-        "k",
-        "bucket_start",
-        "open_ts",
-        "open_id",
-        "open_v",
-        "close_ts",
-        "close_id",
-        "close_v",
-        "high",
-        "low",
-        "n_events",
-    ]
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
-        p = timeseries.ohlc_partials(
-            batch,
+    def partials(events: DataFrame) -> DataFrame:
+        return timeseries.ohlc_partials(
+            events,
             key_col=key_col,
             ts_col=ts_col,
             id_col=id_col,
             value_col=value_col,
             level=level,
         )
-        old = _read_prior_snapshot(spark, store_dir, bid)
-        if old is not None:
-            old = old.select(*part_cols)
-            merged = timeseries.ohlc_merge_partials(
-                p.select(*part_cols).unionByName(old)
-            )
-        else:
-            merged = p
+
+    stream = _parquet_stream(spark, source_dir, schema)
+    # the partial columns keep the source's key/ts/id/value types
+    state_schema = partials(stream).schema
+
+    def fire(batch: DataFrame, bid: int) -> None:
+        old = _read_prior_snapshot(spark, store_dir, bid, state_schema)
+        merged = timeseries.ohlc_merge_partials(
+            partials(batch).unionByName(old)
+        )
         # Direct write (r13): lineage reads only the max-prior
         # snapshot; the bar projection re-reads the committed partials.
         merged.write.mode("overwrite").parquet(f"{store_dir}/batch_id={bid}")
-        snap = spark.read.parquet(f"{store_dir}/batch_id={bid}")
+        snap = spark.read.schema(state_schema).parquet(
+            f"{store_dir}/batch_id={bid}"
+        )
         timeseries.ohlc_from_partials(snap, key_col=key_col).write.mode(
             "overwrite"
         ).parquet(f"{out_dir}/batch_id={bid}")
         _prune_superseded(store_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (out_dir, store_dir), fire)
 
 
 def streaming_scd2_pipeline(
@@ -1868,34 +1613,23 @@ def streaming_scd2_pipeline(
     every change that ever arrived — validity bounds AND version
     numbers, which the twin test pins row for row.
 
-    Exactly-once: closed-version partitions and open-state snapshots
-    follow the sibling pipelines' batch_id=N discipline (state
-    pruned keeping latest prior; emitted versions are the dimension's
-    content and never pruned). Returns fired batch count."""
+    Exactly-once: the module's fire discipline (`_drain_fires`); the
+    open versions are a snapshot store, the emitted closed versions
+    are the dimension's content and never pruned. Returns fired batch
+    count."""
     from unstract_spark.operators.joins import scd2_build
 
-    fires = 0
-    run_base = _run_base(
-        out_dir, state_dir, checkpoint_dir=checkpoint_dir
+    stream = _parquet_stream(spark, source_dir, schema)
+    payload = stream.columns
+    state_schema = T.StructType(
+        stream.schema.fields + [T.StructField("version", T.LongType())]
     )
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
-        payload = [c for c in batch.columns]
-        b = batch.select(*payload).withColumn(
-            "_vbase", F.lit(1).cast("long")
+    def fire(batch: DataFrame, bid: int) -> None:
+        old = _read_prior_snapshot(spark, state_dir, bid, state_schema)
+        b = batch.withColumn("_vbase", F.lit(1).cast("long")).unionByName(
+            old.withColumnRenamed("version", "_vbase")
         )
-        old = _read_prior_snapshot(spark, state_dir, bid)
-        if old is not None:
-            old = old.select(
-                *payload, F.col("version").alias("_vbase")
-            )
-            b = b.unionByName(old)
         # _vbase rides along: the OPEN version carries its absolute
         # number; new rows carry 1. Per key the open version (if any)
         # is the earliest ts, so max(_vbase) is its number.
@@ -1924,19 +1658,7 @@ def streaming_scd2_pipeline(
         )
         _prune_superseded(state_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (out_dir, state_dir), fire)
 
 
 def read_scd2_view(
@@ -1950,13 +1672,7 @@ def read_scd2_view(
     inference would silently mislabel validity bounds for any schema
     that does not place ts third, so the column is named, and a schema
     that lacks it fails loudly here rather than mislabeling."""
-    import os as _os
-
-    latest = max(
-        int(d.split("=", 1)[1])
-        for d in _os.listdir(state_dir)
-        if d.startswith("batch_id=")
-    )
+    latest = max(_prior_bids(state_dir, None))
     st = spark.read.parquet(f"{state_dir}/batch_id={latest}")
     if ts_col not in st.columns:
         raise ValueError(
@@ -1998,21 +1714,13 @@ def streaming_triangle_pipeline(
     Batch edges are canonicalized (src < dst), deduped, and
     anti-joined against the accumulated edge set — re-inserted edges
     are no-ops. State: the edge set (append-per-epoch partitions) and
-    the per-node count snapshot (overwrite + prune, sibling
-    discipline). All joins are node-keyed equi-joins. Returns fired
-    batch count."""
-    fires = 0
-    run_base = _run_base(
-        f"{state_dir}/edges", out_dir, checkpoint_dir=checkpoint_dir
-    )
+    the per-node count snapshot; exactly-once is the module's fire
+    discipline (`_drain_fires`). All joins are node-keyed equi-joins.
+    Returns fired batch count."""
+    stream = _parquet_stream(spark, source_dir, schema)
+    counts_ddl = f"node {_col_type(stream, 'src')}, n_triangles long"
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         canon = batch.select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
@@ -2077,22 +1785,16 @@ def streaming_triangle_pipeline(
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("long").alias("_d"))
         )
-        oldc = _read_prior_snapshot(spark, out_dir, bid)
-        if oldc is not None:
-            oldc = oldc.select(
-                "node", F.col("n_triangles").alias("_old")
-            )
-            merged = delta.join(oldc, "node", "full_outer").select(
-                "node",
-                (
-                    F.coalesce(F.col("_d"), F.lit(0))
-                    + F.coalesce(F.col("_old"), F.lit(0))
-                ).cast("long").alias("n_triangles"),
-            )
-        else:
-            merged = delta.select(
-                "node", F.col("_d").alias("n_triangles")
-            )
+        oldc = _read_prior_snapshot(
+            spark, out_dir, bid, counts_ddl
+        ).withColumnRenamed("n_triangles", "_old")
+        merged = delta.join(oldc, "node", "full_outer").select(
+            "node",
+            (
+                F.coalesce(F.col("_d"), F.lit(0))
+                + F.coalesce(F.col("_old"), F.lit(0))
+            ).cast("long").alias("n_triangles"),
+        )
         # Direct write (r13): lineage reads only the max-prior
         # cumulative snapshot (< bid), never the write target.
         merged.write.mode("overwrite").parquet(
@@ -2103,19 +1805,9 @@ def streaming_triangle_pipeline(
         )
         _prune_superseded(out_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
+    return _drain_fires(
+        stream, checkpoint_dir, (f"{state_dir}/edges", out_dir), fire
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
 
 
 def streaming_islands_pipeline(
@@ -2147,24 +1839,21 @@ def streaming_islands_pipeline(
     carries each key's closed-count offset), which the twin test
     pins row for row.
 
-    Closed islands append per epoch (batch_id=N overwrite — they are
-    the result, never pruned); open-island state snapshots follow the
-    sibling pipelines' exactly-once discipline. Returns fired count.
+    Closed islands append per epoch (they are the result, never
+    pruned); open islands are a snapshot store. Exactly-once: the
+    module's fire discipline (`_drain_fires`). Returns fired count.
     """
     from unstract_spark.operators.joins import merge_intervals
 
-    fires = 0
-    run_base = _run_base(
-        out_dir, state_dir, checkpoint_dir=checkpoint_dir
+    stream = _parquet_stream(spark, source_dir, schema)
+    state_ddl = (
+        f"{key_col} {_col_type(stream, key_col)},"
+        f" open_start {_col_type(stream, start_col)},"
+        f" open_end {_col_type(stream, end_col)},"
+        " open_n long, closed_cnt long"
     )
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         b = batch.select(
             key_col,
             start_col,
@@ -2172,23 +1861,17 @@ def streaming_islands_pipeline(
             F.col(order_col).alias("_ord"),
             F.lit(1).cast("long").alias("_w"),
         )
-        old = _read_prior_snapshot(spark, state_dir, bid)
-        if old is not None:
-            base_cnt = old.select(
-                key_col, F.col("closed_cnt").alias("_base")
-            )
-            carry = old.select(
+        old = _read_prior_snapshot(spark, state_dir, bid, state_ddl)
+        base_cnt = old.select(key_col, F.col("closed_cnt").alias("_base"))
+        b = b.unionByName(
+            old.select(
                 key_col,
                 F.col("open_start").alias(start_col),
                 F.col("open_end").alias(end_col),
                 F.lit(-1).cast("long").alias("_ord"),
                 F.col("open_n").alias("_w"),
             )
-            b = b.unionByName(carry)
-        else:
-            base_cnt = spark.createDataFrame(
-                [], f"{key_col} long, _base long"
-            )
+        )
         merged = merge_intervals(
             b, key_col, start_col, end_col, "_ord", weight_col="_w"
         )
@@ -2225,19 +1908,7 @@ def streaming_islands_pipeline(
         )
         _prune_superseded(state_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (out_dir, state_dir), fire)
 
 
 def read_islands_view(
@@ -2245,13 +1916,7 @@ def read_islands_view(
 ) -> DataFrame:
     """Closed islands (all epochs) plus each key's open island,
     numbered as batch merge_intervals would number them."""
-    import os as _os
-
-    latest = max(
-        int(d.split("=", 1)[1])
-        for d in _os.listdir(state_dir)
-        if d.startswith("batch_id=")
-    )
+    latest = max(_prior_bids(state_dir, None))
     st = spark.read.parquet(f"{state_dir}/batch_id={latest}")
     key = st.columns[0]
     open_isl = st.select(
@@ -2288,33 +1953,22 @@ def streaming_cms_pipeline(
     State is depth x width counters however much text has streamed;
     each fire shuffles at most the batch's occupied cells. Estimates
     come from the ordinary cms_lookup against the stored matrix.
-    Exactly-once: the sibling pipelines' snapshot discipline.
+    Exactly-once: the module's fire discipline (`_drain_fires`).
     Returns fired batch count."""
     from unstract_spark.operators.text_analysis import count_min_sketch
 
-    fires = 0
-    run_base = _run_base(store_dir, checkpoint_dir=checkpoint_dir)
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         delta = count_min_sketch(
             batch, text_col=text_col, depth=depth, width=width
         )
-        old = _read_prior_snapshot(spark, store_dir, bid)
-        if old is not None:
-            old = old.select("j", "bucket", "cnt")
-            merged = (
-                delta.unionByName(old)
-                .groupBy("j", "bucket")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        else:
-            merged = delta
+        old = _read_prior_snapshot(
+            spark, store_dir, bid, "j int, bucket long, cnt long"
+        )
+        merged = (
+            delta.unionByName(old)
+            .groupBy("j", "bucket")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+        )
         # Direct write (r13): single consumer, lineage reads only the
         # max-prior snapshot — no materialization barrier needed.
         merged.write.mode("overwrite").parquet(
@@ -2322,19 +1976,8 @@ def streaming_cms_pipeline(
         )
         _prune_superseded(store_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, schema)
+    return _drain_fires(stream, checkpoint_dir, (store_dir,), fire)
 
 
 def streaming_upsert_pipeline(
@@ -2363,26 +2006,13 @@ def streaming_upsert_pipeline(
     possible delivery delay) is a retention policy for the caller.
 
     State is one row per live-or-tombstoned key. Exactly-once: the
-    sibling pipelines' snapshot discipline (batch_id=N overwrite,
-    current epoch excluded, pinned run base, prune keeping latest
-    prior). Returns fired batch count."""
-    fires = 0
-    run_base = _run_base(store_dir, checkpoint_dir=checkpoint_dir)
+    module's fire discipline (`_drain_fires`). Returns fired batch
+    count."""
+    stream = _parquet_stream(spark, source_dir, schema)
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
-        cols = [c for c in batch.columns]
-        old = _read_prior_snapshot(spark, store_dir, bid)
-        if old is not None:
-            old = old.select(*cols)
-            merged = batch.select(*cols).unionByName(old)
-        else:
-            merged = batch.select(*cols)
+    def fire(batch: DataFrame, bid: int) -> None:
+        old = _read_prior_snapshot(spark, store_dir, bid, stream.schema)
+        merged = batch.unionByName(old)
         w = Window.partitionBy(key_col).orderBy(
             F.col(seq_col).desc(), F.col(op_col).desc()
         )
@@ -2398,19 +2028,7 @@ def streaming_upsert_pipeline(
         )
         _prune_superseded(store_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (store_dir,), fire)
 
 
 def read_upsert_view(
@@ -2418,13 +2036,7 @@ def read_upsert_view(
 ) -> DataFrame:
     """The live rows of the latest upsert snapshot (tombstones
     filtered)."""
-    import os as _os
-
-    latest = max(
-        int(d.split("=", 1)[1])
-        for d in _os.listdir(store_dir)
-        if d.startswith("batch_id=")
-    )
+    latest = max(_prior_bids(store_dir, None))
     return spark.read.parquet(f"{store_dir}/batch_id={latest}").filter(
         F.col(op_col) != "D"
     )
@@ -2456,27 +2068,14 @@ def streaming_join_view_pipeline(
 
     State is the full accumulated L and R (join IVM state is O(data)
     by nature — honest; bound it upstream with retention filters when
-    sides are unbounded). Each fire appends its new rows to the state
-    as a batch_id=N overwrite partition and reads history with the
-    current epoch excluded, so crash replays reconstruct the same
-    delta instead of double-counting; the emitted delta partitions
-    are append-only BY DESIGN (they are the view's content — pruning
-    them would delete the view). Returns fired batch count."""
-    import os as _os  # noqa: F401  (sibling-pipeline convention)
+    sides are unbounded). Each fire appends its new rows to the state;
+    exactly-once is the module's fire discipline (`_drain_fires`), so
+    crash replays reconstruct the same delta instead of
+    double-counting. The emitted delta partitions are append-only BY
+    DESIGN (they are the view's content — pruning them would delete
+    the view). Returns fired batch count."""
 
-    fires = 0
-    run_base = _run_base(
-        out_dir, f"{state_dir}/L", f"{state_dir}/R",
-        checkpoint_dir=checkpoint_dir,
-    )
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         payload = [c for c in batch.columns if c != "side"]
         dl = batch.filter(F.col("side") == "L").select(*payload)
         dr = batch.filter(F.col("side") == "R").select(*payload)
@@ -2530,19 +2129,9 @@ def streaming_join_view_pipeline(
             f"{state_dir}/R/batch_id={bid}"
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, schema)
+    roots = (out_dir, f"{state_dir}/L", f"{state_dir}/R")
+    return _drain_fires(stream, checkpoint_dir, roots, fire)
 
 
 def streaming_dq_pipeline(
@@ -2568,20 +2157,10 @@ def streaming_dq_pipeline(
     arrives late) — the batch suite prices those, honestly.
 
     State: one row per check however much history streamed.
-    Exactly-once: the sibling pipelines' batch_id=N overwrite
-    partitions, current epoch excluded from the read, run base
-    pinned, superseded snapshots pruned keeping the latest prior.
+    Exactly-once: the module's fire discipline (`_drain_fires`).
     Returns fired batch count."""
-    fires = 0
-    run_base = _run_base(store_dir, checkpoint_dir=checkpoint_dir)
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         aggs = [F.count(F.lit(1)).alias("_n")]
         names = []
         for name, cond in checks:
@@ -2598,29 +2177,26 @@ def streaming_dq_pipeline(
             " AS (check_name, n_violations)",
             "_n AS n_checked",
         )
-        old = _read_prior_snapshot(spark, store_dir, bid)
-        if old is not None:
-            old = old.select(
-                "check_name",
-                F.col("n_checked").alias("_oc"),
-                F.col("n_violations").alias("_ov"),
-            )
-            delta = delta.join(old, "check_name", "left").select(
-                "check_name",
-                (
-                    F.col("n_checked") + F.coalesce(F.col("_oc"), F.lit(0))
-                ).cast("long").alias("n_checked"),
-                (
-                    F.col("n_violations")
-                    + F.coalesce(F.col("_ov"), F.lit(0))
-                ).cast("long").alias("n_violations"),
-            )
-        else:
-            delta = delta.select(
-                "check_name",
-                F.col("n_checked").cast("long"),
-                F.col("n_violations").cast("long"),
-            )
+        old = _read_prior_snapshot(
+            spark,
+            store_dir,
+            bid,
+            "check_name string, n_checked long, n_violations long,"
+            " status string",
+        ).select(
+            "check_name",
+            F.col("n_checked").alias("_oc"),
+            F.col("n_violations").alias("_ov"),
+        )
+        delta = delta.join(old, "check_name", "left").select(
+            "check_name",
+            (
+                F.col("n_checked") + F.coalesce(F.col("_oc"), F.lit(0))
+            ).cast("long").alias("n_checked"),
+            (
+                F.col("n_violations") + F.coalesce(F.col("_ov"), F.lit(0))
+            ).cast("long").alias("n_violations"),
+        )
         state = delta.withColumn(
             "status",
             F.when(F.col("n_violations") == 0, F.lit("pass")).otherwise(
@@ -2634,19 +2210,8 @@ def streaming_dq_pipeline(
         )
         _prune_superseded(store_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, schema)
+    return _drain_fires(stream, checkpoint_dir, (store_dir,), fire)
 
 
 def streaming_stats_pipeline(
@@ -2673,23 +2238,23 @@ def streaming_stats_pipeline(
     union by the mergeability law; counters add exactly).
 
     State per column is k hash longs + 3 counters however much
-    history has streamed. Exactly-once: the accumulator uses the
-    sibling pipelines' batch_id=N overwrite partitions with the
-    current epoch excluded from the read; the publish step is a pure
-    function of the committed accumulator, so a crash between commit
-    and publish republishes identically on replay. Returns fired
-    batches."""
-    import os as _os
-
+    history has streamed. Exactly-once: the accumulator follows the
+    module's fire discipline (`_drain_fires`); the publish step is a
+    pure function of the committed accumulator, so a crash between
+    commit and publish republishes identically on replay. Returns
+    fired batches."""
     from unstract_spark.operators import sketches
 
-    fires = 0
-    run_base = _run_base(acc_dir, checkpoint_dir=checkpoint_dir)
+    # the column= path partition carries the column name on read
+    acc_ddl = (
+        "h long, n_rows long, n_nonnull long, len_sum decimal(18,6),"
+        " column string"
+    )
 
     def _publish(col: str, sk: DataFrame, meta_row) -> None:
-        sdir = _os.path.join(stats_path, "sketch", f"table={table}",
+        sdir = os.path.join(stats_path, "sketch", f"table={table}",
                              f"column={col}")
-        mdir = _os.path.join(stats_path, "meta", f"table={table}",
+        mdir = os.path.join(stats_path, "meta", f"table={table}",
                              f"column={col}")
         sk.select("h").write.mode("overwrite").parquet(sdir)
         n_nonnull = meta_row["n_nonnull"]
@@ -2707,14 +2272,8 @@ def streaming_stats_pipeline(
             "kth_hash long, k long, avg_len double",
         ).coalesce(1).write.mode("overwrite").parquet(mdir)
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
-        old = _read_prior_snapshot(spark, acc_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
+        old = _read_prior_snapshot(spark, acc_dir, bid, acc_ddl)
         for col in columns:
             c = F.col(col)
             bsk = sketches.kmv_sketch(
@@ -2732,35 +2291,28 @@ def streaming_stats_pipeline(
             ).collect()[0]
             n_rows, n_nonnull = counts["n_rows"], counts["n_nonnull"]
             len_sum = counts["len_sum"]
-            if old is not None:
-                oc = old.filter(F.col("column") == col)
-                prev = oc.agg(
-                    F.max("n_rows").alias("n_rows"),
-                    F.max("n_nonnull").alias("n_nonnull"),
-                    F.max("len_sum").alias("len_sum"),
-                ).collect()[0]
-                if prev["n_rows"] is not None:
-                    n_rows += prev["n_rows"]
-                    n_nonnull += prev["n_nonnull"]
-                    len_sum = len_sum + prev["len_sum"]
-                merged = sketches.kmv_merge(
-                    bsk,
-                    oc.select("h").where(F.col("h").isNotNull()),
-                    k=k,
-                )
-            else:
-                merged = bsk
-            merged = merged.localCheckpoint(eager=True)
+            oc = old.filter(F.col("column") == col)
+            prev = oc.agg(
+                F.max("n_rows").alias("n_rows"),
+                F.max("n_nonnull").alias("n_nonnull"),
+                F.max("len_sum").alias("len_sum"),
+            ).collect()[0]
+            if prev["n_rows"] is not None:
+                n_rows += prev["n_rows"]
+                n_nonnull += prev["n_nonnull"]
+                len_sum = len_sum + prev["len_sum"]
+            merged = sketches.kmv_merge(
+                bsk, oc.select("h").where(F.col("h").isNotNull()), k=k
+            ).localCheckpoint(eager=True)
             est = merged.agg(
                 F.count(F.lit(1)).alias("n_sketch"),
                 F.max("h").alias("kth_hash"),
             ).collect()[0]
-            # the column= path partition carries the column name on
-            # read — snap holds only data fields
+            # snap holds only data fields (column= is the path)
             snap = merged.select(
                 "h",
-                F.lit(n_rows).alias("n_rows"),
-                F.lit(n_nonnull).alias("n_nonnull"),
+                F.lit(n_rows).cast("long").alias("n_rows"),
+                F.lit(n_nonnull).cast("long").alias("n_nonnull"),
                 F.lit(len_sum).cast("decimal(18,6)").alias("len_sum"),
             )
             if est["n_sketch"] == 0:
@@ -2782,19 +2334,8 @@ def streaming_stats_pipeline(
             })
         _prune_superseded(acc_dir, bid)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    stream = _parquet_stream(spark, source_dir, schema)
+    return _drain_fires(stream, checkpoint_dir, (acc_dir,), fire)
 
 
 def streaming_ledger_sink(
@@ -2806,8 +2347,8 @@ def streaming_ledger_sink(
 ) -> int:
     """Transactional streaming sink: every foreachBatch commits
     through the manifest ledger's append with
-    idempotency_key=stream-batch-<epoch> — the exactly-once bridge
-    between the streaming family and the ACID log.  Against the
+    idempotency_key=stream-<query id>-batch-<epoch> — the exactly-once
+    bridge between the streaming family and the ACID log.  Against the
     batch_id-partition sinks the other pipelines use, the ledger sink
     buys: atomic batch VISIBILITY (a reader never sees a partial
     batch — the segment only exists once its manifest commits),
@@ -2815,6 +2356,13 @@ def streaming_ledger_sink(
     redelivery lands nothing twice, even when the replay races a
     concurrent writer), and a queryable table (snapshot isolation,
     time travel, compaction, vacuum) instead of raw directories.
+
+    The key names the checkpoint's lineage as well as the epoch:
+    epochs restart at 0 for every new checkpoint, so a second source
+    or a rebuilt checkpoint writing into the same table must not find
+    its batches "already committed". The query id Spark keeps in
+    `<checkpoint>/metadata` is fixed for the checkpoint's lifetime, so
+    a replayed epoch still maps onto its committed key.
 
     Returns the number of fired batches.
     """
@@ -2828,20 +2376,14 @@ def streaming_ledger_sink(
         if batch.isEmpty():
             return
         fires += 1
-        table.append(batch, idempotency_key=f"stream-batch-{int(epoch)}")
+        # written by the query's start, before its first batch
+        with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+            query_id = json.loads(fh.readline())["id"]
+        table.append(
+            batch, idempotency_key=f"stream-{query_id}-batch-{int(epoch)}"
+        )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "100")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(_parquet_stream(spark, source_dir, schema), process, checkpoint_dir)
     return fires
 
 
@@ -2873,15 +2415,10 @@ def streaming_crawl_pipeline(
     accepted documents, and appends the batch's url keys to the
     frontier.
 
-    Exactly-once discipline (same as the sibling pipelines): both
-    writes go to batch_id=N partitions with overwrite — an
-    at-least-once replay rewrites its own partition — and the frontier
-    read excludes the current epoch's partition, so a replayed batch
-    never sees its own keys. Partition ids are namespaced per run via
-    the max-existing-batch_id+1 base (`_run_base` over BOTH roots), so
-    a fresh checkpoint_dir pointed at a populated frontier/out root
-    continues the crawl instead of silently overwriting committed
-    batches.
+    Exactly-once: the module's fire discipline (`_drain_fires`) over
+    the out and frontier roots; a replayed batch never sees its own
+    frontier keys, and a fresh checkpoint_dir pointed at a populated
+    frontier/out root continues the crawl.
 
     Scale contract: the frontier read is metadata-pruned parquet +
     one anti-join on url_norm per fire (never a full-history rescan of
@@ -2945,7 +2482,6 @@ def streaming_crawl_pipeline(
     from unstract_spark.operators import webcorpus
 
     rules = webcorpus.robots_rules(robots).localCheckpoint(eager=True) if robots is not None else None
-    fires = 0
     # discovered_dir joins the namespace roots whenever link expansion
     # is armed: collision-freedom for discovered partitions must not
     # ride on the implicit "a discovered write always follows an out
@@ -2956,17 +2492,8 @@ def streaming_crawl_pipeline(
     ns_roots = (out_dir, frontier_dir) + (
         (discovered_dir,) if discovered_dir is not None else ()
     )
-    run_base = _run_base(
-        *ns_roots, below=_FETCH_BASE, checkpoint_dir=checkpoint_dir
-    )
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         recs = webcorpus.warc_records(
             batch.select("path", "content"), payload_col="content"
         ).filter(F.col("rec_type").isin("response", "conversion"))
@@ -3022,13 +2549,9 @@ def streaming_crawl_pipeline(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .load(source_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fires = _drain_fires(
+        stream, checkpoint_dir, ns_roots, fire, below=_FETCH_BASE
     )
-    q.awaitTermination()
 
     # Post-drain fetch step: consume the frontier's PENDING side
     # (seeds not yet crawled) through the injected fetcher. Runs after
@@ -3232,22 +2755,11 @@ def streaming_crawl_pipeline(
             # crash before this point just leaves extra partitions
             # whose rows fold through the groupBy-max read)
             if polite:
-                import os as _os
-                import shutil as _shutil
-
-                try:
-                    names = _os.listdir(ledger_dir)
-                except FileNotFoundError:
-                    names = []
-                for d in names:
-                    if (
-                        d.startswith("batch_id=")
-                        and d.split("=", 1)[1].isdigit()
-                        and int(d.split("=", 1)[1]) < fid
-                    ):
-                        _shutil.rmtree(
-                            _os.path.join(ledger_dir, d), ignore_errors=True
-                        )
+                for p in _prior_bids(ledger_dir, fid):
+                    shutil.rmtree(
+                        os.path.join(ledger_dir, f"batch_id={p}"),
+                        ignore_errors=True,
+                    )
     return fires
 
 
@@ -3278,11 +2790,8 @@ def streaming_paragraph_dedup(
 
     Scale contract: the store holds one fixed-width xxhash64 row per
     distinct paragraph ever seen, read metadata-pruned and joined on
-    the hash (never paragraph text); writes follow the exactly-once
-    batch_id-partition discipline (overwrite + exclude-current-epoch),
-    with partition ids namespaced per run (`_run_base` over both
-    roots) so a fresh checkpoint against a populated store continues
-    rather than overwriting committed batches.
+    the hash (never paragraph text). Exactly-once: the module's fire
+    discipline (`_drain_fires`) over both roots.
 
     Skew fuse (`hot_min`), the streaming twin of dedup_paragraphs'
     batch fuse: the window spelling shuffles the fire's RAW paragraph
@@ -3313,16 +2822,8 @@ def streaming_paragraph_dedup(
 
     Returns the number of non-empty fired batches.
     """
-    fires = 0
-    run_base = _run_base(out_dir, store_dir, checkpoint_dir=checkpoint_dir)
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         paras = batch.select(
             "doc_id",
             F.posexplode(
@@ -3460,20 +2961,10 @@ def streaming_paragraph_dedup(
             f"{store_dir}/batch_id={bid}"
         )
 
-    schema = "doc_id long, text string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
+    stream = _parquet_stream(
+        spark, source_dir, "doc_id long, text string", max_files_per_trigger
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (out_dir, store_dir), fire)
 
 
 def streaming_classifier_pipeline(
@@ -3495,12 +2986,11 @@ def streaming_classifier_pipeline(
 
     The model is read ONCE per pipeline run and rides down as literal
     weights in the scoring expression — no join, no state dir: scoring
-    is per-document, so exactly-once needs only the sibling output
-    discipline (batch_id=N overwrite partitions, run base pinned to
-    the checkpoint lineage; a replayed epoch rewrites its own
-    partition). Batch-equivalence contract gated in pytest: the union
-    of fires equals scoring the whole corpus in one batch, because
-    featurization and the model are both per-doc deterministic.
+    is per-document, so exactly-once needs only the module's fire
+    discipline (`_drain_fires`) for the output. Batch-equivalence
+    contract gated in pytest: the union of fires equals scoring the
+    whole corpus in one batch, because featurization and the model are
+    both per-doc deterministic.
 
     Scale: the fire cost is one scan of the NEW files — featurize is
     the zero-shuffle mapInPandas path, densify shuffles doc-keyed rows
@@ -3515,17 +3005,8 @@ def streaming_classifier_pipeline(
         raise ValueError(
             f"model has {len(weights)} weights, expected dim+1={dim + 1}"
         )
-    fires = 0
-    run_base = _run_base(out_dir, checkpoint_dir=checkpoint_dir)
 
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        docs = batch.select("doc_id", "text")
-        if docs.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(docs: DataFrame, bid: int) -> None:
         sparse = ta.feature_hash_signed(docs, n_buckets=dim)
         feats = lm.densify(sparse, dim)
         scored = lm.logistic_score(feats, weights).select(
@@ -3536,20 +3017,10 @@ def streaming_classifier_pipeline(
         # Direct write (r13): single consumer, no state read-back.
         scored.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
 
-    schema = "doc_id long, text string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
+    stream = _parquet_stream(
+        spark, source_dir, "doc_id long, text string", max_files_per_trigger
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (out_dir,), fire)
 
 
 def streaming_drift_monitor(
@@ -3580,8 +3051,7 @@ def streaming_drift_monitor(
     r12 ADVICE duplicate-state lesson). State size is
     |sources| x n_buckets rows — O(1) in corpus age.
 
-    Exactly-once: sibling discipline (batch_id partitions, overwrite,
-    run base pinned, current epoch excluded from the state read).
+    Exactly-once: the module's fire discipline (`_drain_fires`).
     Batch equivalence gated in pytest: the final state equals the
     whole corpus's histogram, fires are disjoint.
 
@@ -3590,16 +3060,7 @@ def streaming_drift_monitor(
     exceed sources x buckets rows."""
     from unstract_spark.operators import profile
 
-    fires = 0
-    run_base = _run_base(out_dir, state_dir, checkpoint_dir=checkpoint_dir)
-
-    def process(batch: DataFrame, epoch: int) -> None:
-        nonlocal fires
-        if batch.isEmpty():
-            return
-        fires += 1
-        bid = run_base + int(epoch)
-        _pin_bid(checkpoint_dir, bid)
+    def fire(batch: DataFrame, bid: int) -> None:
         hb = (
             batch.select(
                 "source",
@@ -3612,13 +3073,15 @@ def streaming_drift_monitor(
             .agg(F.count(F.lit(1)).cast("long").alias("o"))
             .localCheckpoint(eager=True)
         )
-        old = _read_prior_snapshot(spark, state_dir, bid)
+        old = _read_prior_snapshot(
+            spark, state_dir, bid, "source string, bucket long, o long"
+        )
         fire_tot = hb.groupBy("source").agg(
             F.sum("o").cast("long").alias("fire_docs")
         )
-        if old is not None:
-            drift = profile.chisq_drift(hb, old.select("source", "bucket", "o"))
-        else:
+        if _prior_bids(state_dir, bid):
+            drift = profile.chisq_drift(hb, old)
+        else:  # first fire, told by the listing: no baseline, NULL
             drift = fire_tot.select(
                 "source", F.lit(None).cast("long").alias("chisq_micro")
             )
@@ -3626,31 +3089,21 @@ def streaming_drift_monitor(
             "source", "chisq_micro", "fire_docs"
         ).localCheckpoint(eager=True)
         report.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
-        if old is not None:
-            new_state = (
-                hb.unionByName(old.select("source", "bucket", "o"))
-                .groupBy("source", "bucket")
-                .agg(F.sum("o").cast("long").alias("o"))
-            )
-        else:
-            new_state = hb
-        new_state = new_state.localCheckpoint(eager=True)
+        new_state = (
+            hb.unionByName(old)
+            .groupBy("source", "bucket")
+            .agg(F.sum("o").cast("long").alias("o"))
+            .localCheckpoint(eager=True)
+        )
         new_state.write.mode("overwrite").parquet(
             f"{state_dir}/batch_id={bid}"
         )
         _prune_superseded(state_dir, bid)
 
-    schema = "doc_id long, text string, source string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
+    stream = _parquet_stream(
+        spark,
+        source_dir,
+        "doc_id long, text string, source string",
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return fires
+    return _drain_fires(stream, checkpoint_dir, (out_dir, state_dir), fire)
