@@ -448,7 +448,7 @@ def main() -> None:
     # whatever driver/host contention the preceding 36-query suite left
     # behind (r6 bisect: r4 code and r5 code measure identically fresh;
     # the 2.8x "regression" was entirely measurement position + host
-    # noise — see NOTES_NEXT_ROUND.md round-6 root-cause).
+    # noise).
     _pipeline_e2e(spark, n_docs=200)  # warm
     dt = statistics.median(_pipeline_e2e(spark, n_docs=200) for _ in range(N_RUNS))
     timings["pipeline_e2e_200docs"] = round(dt, 3)

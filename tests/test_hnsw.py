@@ -51,7 +51,7 @@ def test_hnsw_recall_and_determinism(spark):
     q, emb = _frames(spark)
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(q, emb, k=10, dim=16).collect()
+        for r in brute_force_topk(q, emb, k=10).collect()
     }
     a = hnsw_topk_join(q, emb, dim=16, k=10, n_shards=4).collect()
     got = {(r.query_id, r.vec_id) for r in a}

@@ -176,7 +176,7 @@ def test_similarity_topk_dispatch_matches_exact(spark, sf_dir):
     queries = index.limit(3).selectExpr("vec_id as query_id", "embedding as query_vec")
     got, plan = similarity_topk(queries, index, dim=64, k=5)
     assert plan.strategy == "brute_force"
-    want = brute_force_topk(queries, index, k=5, dim=64)
+    want = brute_force_topk(queries, index, k=5)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
@@ -235,7 +235,7 @@ def test_ivf_with_refined_centroids_recall(spark, sf_dir):
     )
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(queries, emb, k=10, dim=64).collect()
+        for r in brute_force_topk(queries, emb, k=10).collect()
     }
 
     def recall(centroids):

@@ -698,7 +698,7 @@ def test_sq8_codes_bounded_and_topk_matches_brute(spark):
     }
     want = {
         (r.query_id, r.rank): r.vec_id
-        for r in brute_force_topk(q, e, dim=8, k=5).collect()
+        for r in brute_force_topk(q, e, k=5).collect()
     }
     assert got == want
 
@@ -736,7 +736,7 @@ def test_sq_bit_width_ladder_codes_and_topk(spark):
     )
     want = {
         (r.query_id, r.rank): r.vec_id
-        for r in brute_force_topk(q, e, dim=8, k=5).collect()
+        for r in brute_force_topk(q, e, k=5).collect()
     }
     for bits, qmax in ((6, 31), (4, 7)):
         _scale, codes = _sq8_cols("embedding", "i", bits=bits)

@@ -309,7 +309,7 @@ def test_residual_ivfpq_beats_raw_on_clustered(spark):
     )
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(q, e, k=10, dim=dim).collect()
+        for r in brute_force_topk(q, e, k=10).collect()
     }
     cents = kmeans_refine(e, dim, n_centroids=n_cells, iters=2)
 
@@ -408,7 +408,7 @@ def test_opq_rotation_orthogonal_and_beats_pq_on_decaying_spectrum(spark):
     )
     exact = {
         (row.query_id, row.vec_id)
-        for row in brute_force_topk(q, e, k=10, dim=dim).collect()
+        for row in brute_force_topk(q, e, k=10).collect()
     }
 
     def recall(df):
@@ -476,7 +476,7 @@ def test_opq_low_rank_counter_regime_documented(spark):
     )
     exact = {
         (row.query_id, row.vec_id)
-        for row in brute_force_topk(q, e, k=10, dim=dim).collect()
+        for row in brute_force_topk(q, e, k=10).collect()
     }
 
     def recall(df):
@@ -536,7 +536,7 @@ def test_opq_store_matches_transient_recall(spark, tmp_path):
     )
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(q, e, k=5, dim=dim).collect()
+        for r in brute_force_topk(q, e, k=5).collect()
     }
     R, cbs = opq_train(e, dim, n_sub=4, n_codes=8, iters=4)
     transient = {
@@ -609,7 +609,7 @@ def test_residual_opq_beats_plain_residual_on_anisotropic(spark):
     )
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(q, e, k=10, dim=dim).collect()
+        for r in brute_force_topk(q, e, k=10).collect()
     }
 
     def recall(df):
@@ -667,7 +667,7 @@ def test_pq_topk_pandas_256_codes_beats_16(spark):
     )
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(q, e, k=10, dim=dim).collect()
+        for r in brute_force_topk(q, e, k=10).collect()
     }
 
     def recall(df):
@@ -715,7 +715,7 @@ def test_pq_join_auto_routes_high_code_shapes(spark):
     )
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(q, e, k=5, dim=dim).collect()
+        for r in brute_force_topk(q, e, k=5).collect()
     }
     got = {
         (r.query_id, r.vec_id)
@@ -804,7 +804,7 @@ def test_opq_parametric_init_beats_identity_at_one_iteration(spark):
     )
     exact = {
         (row.query_id, row.vec_id)
-        for row in brute_force_topk(q, e, k=10, dim=dim).collect()
+        for row in brute_force_topk(q, e, k=10).collect()
     }
 
     def recall(rotation, codebooks):

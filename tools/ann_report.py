@@ -54,7 +54,7 @@ def main() -> int:
 
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(queries, emb, k=k, dim=dim).collect()
+        for r in brute_force_topk(queries, emb, k=k).collect()
     }
 
     def measure(df):

@@ -127,7 +127,7 @@ def main() -> int:
     t0 = time.time()
     exact = {
         (r.query_id, r.vec_id)
-        for r in brute_force_topk(queries, emb, k=k, dim=dim).collect()
+        for r in brute_force_topk(queries, emb, k=k).collect()
     }
     exact_s = round(time.time() - t0, 1)
 

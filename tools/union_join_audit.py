@@ -1,6 +1,6 @@
 """Vanilla-session audit for the Spark 4.1 unionOutputPartitioning bug.
 
-Round-13 discovery (NOTES_NEXT_ROUND.md): with
+Round-13 discovery (SCALE.md, union-zip audit): with
 `spark.sql.unionOutputPartitioning=true` (the 4.1.2 DEFAULT), UnionExec
 claims its children's common hash partitioning even though a union
 CONCATENATES partitions (3 children x P partitions = 3P partitions

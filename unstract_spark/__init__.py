@@ -18,7 +18,7 @@ Layout:
   mock           deterministic mock LLM + mock embedding (offline testing)
   sources/       file-catalog listing semantics (glob, limit, FIFO/LIFO)
   operators/     relational + document operators (SURVEY.md section 2)
-  sinks/         dynamic-DDL JDBC writer, filesystem, review queue, history
+  sinks/         dynamic-DDL JDBC writer, review queue, history, vector stores
   streaming/     incremental (cron/AvailableNow) pipelines
   plans/         pipeline composition + plan-level rewrites (prompt fusion)
 """

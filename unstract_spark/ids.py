@@ -17,11 +17,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def content_hash(content: Column) -> Column:
-    """sha256 hex of a binary/string column (the file cache_key)."""
-    return F.sha2(content, 256)
-
-
 def doc_id(
     file_hash: Column,
     *,
@@ -47,13 +42,3 @@ def doc_id(
         sort_keys=True,
     )
     return F.sha2(F.concat_ws("|", file_hash, F.lit(cfg)), 256)
-
-
-def answer_cache_key(doc: Column, prompt_key: Column, prompt_text: Column) -> Column:
-    """Cache key for one (document, prompt) LLM answer.
-
-    Retries of a Spark task must not double-spend LLM tokens; the answer
-    cache is keyed deterministically so a retry replays the cached row
-    (SURVEY.md section 7 hard-part 1).
-    """
-    return F.sha2(F.concat_ws("|", doc, prompt_key, F.sha2(prompt_text, 256)), 256)

@@ -151,11 +151,11 @@ def mock_embed_expr(text: Column, dim: int = MOCK_EMBED_DIM) -> list[Column]:
     """Column-expression twin of :func:`mock_embed_texts`, in DOUBLE.
 
     byte_i = sha256(text) hex pair i -> v_i = (byte_i - 127.5)/127.5,
-    unit-normalized. Pure codegen and exactly reproducible in SQL
-    (mock_embed_sql), which makes retrieval pipelines oracle-checkable
-    end-to-end. (The numpy version computes in float32 and is used by
-    the pandas-UDF provider path; the two are intentionally separate
-    precision domains.)
+    unit-normalized. Pure codegen and exactly reproducible in SQL (the
+    oracle's twin is queries._RAW_COMPONENTS), which makes retrieval
+    pipelines oracle-checkable end-to-end. (The numpy version computes
+    in float32 and is used by the pandas-UDF provider path; the two are
+    intentionally separate precision domains.)
     """
     h = F.sha2(text, 256)
     raw = [
@@ -167,17 +167,6 @@ def mock_embed_expr(text: Column, dim: int = MOCK_EMBED_DIM) -> list[Column]:
         norm2 = norm2 + v * v
     nrm = F.sqrt(norm2)
     return [v / nrm for v in raw]
-
-
-def mock_embed_sql(text_sql: str, dim: int = MOCK_EMBED_DIM) -> list[str]:
-    """DuckDB-SQL twin of :func:`mock_embed_expr` (same doubles)."""
-    h = f"sha256({text_sql})"
-    raw = [
-        f"((('0x' || substr({h}, {2 * i + 1}, 2))::INT - 127.5) / 127.5)"
-        for i in range(dim)
-    ]
-    norm = "sqrt(" + " + ".join(f"({v} * {v})" for v in raw) + ")"
-    return [f"({v} / {norm})" for v in raw]
 
 
 def mock_embed_texts(texts: "list[str] | np.ndarray", dim: int = MOCK_EMBED_DIM) -> np.ndarray:

@@ -6,6 +6,7 @@ Reference semantics (file-level):
   COMPLETED history row (source.py:806-868) — the ledger's own join,
   sinks.history.FileHistoryStore.join_completed
 - F3 in-flight dedup: drop files being processed elsewhere (source.py:559-661)
+  — the same left_anti shape, gated by query j1_history_antijoin
 
 Training-data-scale extensions (first-class here, absent in reference):
 exact content dedup, MinHash/LSH near-dup, SimHash, n-gram Jaccard,
@@ -28,14 +29,6 @@ def dedup_listing(files: DataFrame) -> DataFrame:
     return files.dropDuplicates(["file_path"])
 
 
-def dedup_in_flight(files: DataFrame, active: DataFrame) -> DataFrame:
-    """F3: drop files already EXECUTING/PENDING in another run."""
-    live = active.filter(F.col("status").isin("EXECUTING", "PENDING")).select(
-        F.col("cache_key").alias("file_hash"), "file_path"
-    )
-    return files.join(live, ["file_hash", "file_path"], "left_anti")
-
-
 # ---------- exact + near-duplicate content dedup ----------
 
 
@@ -53,12 +46,6 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
-
-
-def normalized_fingerprint(text: F.Column) -> F.Column:
-    """Normalization-based near-dup key: lower, strip non-alnum, squash ws."""
-    norm = F.regexp_replace(F.regexp_replace(F.lower(text), "[^a-z0-9 ]", ""), " +", " ")
-    return F.md5(F.trim(norm))
 
 
 def char_shingles(
@@ -618,8 +605,8 @@ def embedding_neardup_lsh(
             .select(
                 "id_a",
                 "id_b",
-                # Higher-order fold, NOT the dim unroll: paired A/B at
-                # dim=64 (r13, tools_r13/ab_cand_dim.py) measured the
+                # Higher-order fold, NOT a dim unroll: paired A/B at
+                # dim=64 (OPTIMIZATION_r13.md) measured the
                 # unrolled ~190-term tree 1.5-2x SLOWER even on
                 # candidate-scale sets — the giant generated method
                 # loses JIT while zip_with/aggregate run the optimized
@@ -1069,7 +1056,7 @@ def remove_duplicated_spans(
     consumer instead of once per branch (the untouched branch's column
     pruning defeated AQE stage reuse — r13 optimization round, guide
     §2.4), and with no union the Spark 4.1 unionOutputPartitioning
-    zip-crash class (NOTES_NEXT_ROUND.md) cannot trigger here at all.
+    zip-crash class (SCALE.md, union-zip audit) cannot trigger here at all.
     Untouched docs (no duplicated span, or shorter than k) fall out of
     the final left join and keep their original text.
     At 100 TB: rows scale with corpus characters; every shuffle is on

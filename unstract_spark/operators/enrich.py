@@ -146,8 +146,7 @@ def classify_by_keywords(
     """Deterministic classifier: arg-max of per-bin keyword hits, with
     the reference's reserved 'unknown' bin (tools/classifier/src/main.py).
     The LLM variant swaps the score columns for a completion call; the
-    routing (partitionBy on write, sinks/filesystem.route_by_classification)
-    is identical."""
+    routing (partitionBy(classification) on write) is identical."""
     def _kw_pattern(w: str) -> str:
         # Keywords are literals, not patterns: escape metacharacters
         # ('c++', 'a.b'). A \b anchor only works against a word char, so

@@ -194,8 +194,8 @@ def triangle_count(
     larger graphs take SHUFFLE_HASH hints (no sort of the wedge
     fan-out; AQE skew-join still splits oversized partitions, and the
     per-partition build side is the O(sqrt(m))-out-degree oriented
-    edge set, not the raw adjacency). The A/B behind both choices is
-    tools_r14/ab_triangle_shj.py; results are join-strategy-invariant.
+    edge set, not the raw adjacency). The A/B behind both choices is in
+    OPTIMIZATION_r14.md (batch 4); results are join-strategy-invariant.
     """
     # materialize the edge list and (below) the oriented set: both are
     # consumed by MULTIPLE branches (deg x2 + orientation; wedge left/

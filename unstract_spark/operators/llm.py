@@ -7,9 +7,11 @@ the rules are:
 - LLM calls live in `mapInPandas` (Arrow batches), never row-at-a-time.
 - Bounded concurrency per executor (semaphore) — the cluster-wide rate
   is `executors * max_concurrency`, tuned to the provider limit.
-- Retries with exponential backoff happen *inside* the UDF; Spark task
-  retry is the outer layer, made safe by the deterministic answer cache
-  key (ids.answer_cache_key) so a re-run replays, not re-spends.
+- Retries with exponential backoff happen *inside* the UDF. Spark task
+  retry is the outer layer and calls the provider again: there is no
+  answer cache, so a retried task re-spends its tokens. Replay across
+  runs comes from the file-history ledger, which skips COMPLETED files
+  (sinks.history.FileHistoryStore).
 - Usage (token/cost) rows are emitted as side-output columns on the same
   result rows — no separate collection pass.
 """
@@ -70,7 +72,7 @@ def complete_with_controller(
 
     Output adds: answer_raw, model_name, prompt_tokens,
     completion_tokens, total_tokens — the usage side-output that feeds
-    operators.usage.aggregate_usage (A1) without a second pass.
+    operators.usage.usage_breakdown_by_model (A1) without a second pass.
     """
     llm_factory = llm_factory or MockLLM
     in_cols = [c for c in df.columns]

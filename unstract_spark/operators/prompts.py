@@ -5,7 +5,7 @@ Execution shape (reference: legacy_executor.py:1327-1497):
 
     documents  CROSS JOIN  broadcast(prompt_specs)     (J3)
       -> retrieval context per (doc, prompt)           (J4, retrieval.py)
-      -> prompt assembly                               (T8, concat_ws)
+      -> prompt assembly                               (T8, concat)
       -> LLM completion                                (T7, llm.py / mock)
       -> NA sanitize + type coercion                   (F5 + §1.2)
       -> pivot prompt_key -> columns                   (structured output)
@@ -19,23 +19,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from unstract_spark.mock import doc_fingerprint, mock_answer_hash, mock_answer_raw
-
-# --- T8 prompt assembly (reference: answer_prompt.py:107-219) ---
-
-
-def assemble_prompt(
-    preamble: Column,
-    prompt: Column,
-    postamble: Column,
-    context: Column | None = None,
-) -> Column:
-    """preamble \\n prompt \\n [context] \\n postamble, null-safe."""
-    parts = [preamble, prompt]
-    if context is not None:
-        parts.append(F.concat(F.lit("Context:\n"), context))
-    parts.append(postamble)
-    return F.concat_ws("\n", *parts)
-
 
 # --- F5 NA sanitize (reference: legacy_executor.py:1297-1325) ---
 

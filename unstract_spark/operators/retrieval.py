@@ -42,9 +42,6 @@ def bounded_rank(
     return top.withColumn(rank_name, (F.monotonically_increasing_id() + 1).cast("int"))
 
 
-_bounded_rank = bounded_rank  # back-compat alias (pre-export name)
-
-
 def dot(a: Column, b: Column) -> Column:
     """Raw inner product of two array<float/double> columns, JVM-side,
     double domain, left-to-right fold (oracle-parity order)."""
@@ -55,72 +52,23 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<float/double> columns, JVM-side.
 
     Inputs are cast to array<double> BEFORE multiplication so every
     engine (and the SQL oracle) accumulates identical doubles —
     float32 intermediate products would diverge in the last bits.
-
-    `dim` optionally unrolls the dot/norm into element_at chains.
-    Measured on 64-dim vectors: the default higher-order path WINS
-    (~3x) — the ~400-term unrolled tree pays more in codegen/JIT than
-    the interpreted fold costs per row. Keep the default unless
-    profiling a specific dim/cardinality says otherwise. Both paths
-    produce bitwise-identical doubles (0.0+x == x in IEEE), so either
-    agrees with the SQL oracle.
+    The dot product and both norms are left-to-right folds, the
+    oracle's summation order. An unrolled element_at chain gives
+    bitwise-identical doubles but measured about 3x slower on 64-dim
+    vectors (codegen/JIT cost of the ~400-term tree; OPTIMIZATION_r13.md).
     """
     ad = a.cast("array<double>")
     bd = b.cast("array<double>")
-    # The unrolled form is a LEFT-DEEP 3*dim-term tree (the sequential
-    # sum order is load-bearing: it matches the oracle's fold
-    # bit-for-bit, so a balanced tree is NOT a legal fix) — past a few
-    # hundred dims Catalyst's recursive analysis overflows the JVM
-    # stack. High-dim callers get the fold path, which computes the
-    # identical left-to-right sum.
-    if dim is not None and dim > 256:
-        dim = None
-    if dim is not None:
-        ea = [F.element_at(ad, i + 1) for i in range(dim)]
-        eb = [F.element_at(bd, i + 1) for i in range(dim)]
-        dp = ea[0] * eb[0]
-        na2 = ea[0] * ea[0]
-        nb2 = eb[0] * eb[0]
-        for i in range(1, dim):
-            dp = dp + ea[i] * eb[i]
-            na2 = na2 + ea[i] * ea[i]
-            nb2 = nb2 + eb[i] * eb[i]
-        return dp / (F.sqrt(na2) * F.sqrt(nb2))
     dp = dot(a, b)
     na = F.sqrt(F.aggregate(ad, F.lit(0.0), lambda s, x: s + x * x))
     nb = F.sqrt(F.aggregate(bd, F.lit(0.0), lambda s, x: s + x * x))
     return dp / (na * nb)
-
-
-def query_vector_lit(vec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
-
-
-def topk_by_query_vector(
-    index: DataFrame,
-    query_vec: list[float],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    min_score: float | None = 0.0,
-) -> DataFrame:
-    """R1 'simple': top-k rows by cosine to one query vector.
-
-    Single-vector case: the query is a literal broadcast to every task;
-    ranking is a global TakeOrdered (no full sort). score>0 cutoff
-    mirrors sdk1/index.py:118-124.
-    """
-    scored = index.select(
-        F.col(id_col), F.round(cosine(F.col(vec_col), query_vector_lit(query_vec)), 6).alias("score")
-    )
-    if min_score is not None:
-        scored = scored.filter(F.col("score") > min_score)
-    return bounded_rank(scored, [F.col("score").desc(), F.col(id_col).asc()], k)
 
 
 def topk_join(
@@ -323,27 +271,6 @@ def recursive_retrieve(
         seen = seen.unionByName(nxt)
         frontier = nxt
     return seen
-
-
-def subquestion_retrieve(
-    subqueries: DataFrame,
-    index: DataFrame,
-    k: int = 5,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    index_id: str = "vec_id",
-    index_vec: str = "embedding",
-) -> DataFrame:
-    """R2 'subquestion': union of per-subquestion retrievals, deduped.
-
-    The LLM decomposition happens upstream (llm.py); here the relational
-    part: explode sub-questions -> topk_join -> collect distinct chunks.
-    """
-    per_sub = topk_join(
-        subqueries, index, k=k, query_id=query_id, query_vec=query_vec,
-        index_id=index_id, index_vec=index_vec,
-    )
-    return per_sub.select(index_id).distinct()
 
 
 def bm25_retrieve(

@@ -104,18 +104,11 @@ def brute_force_topk(
     query_vec: str = "query_vec",
     index_id: str = "vec_id",
     index_vec: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
-    """Exact top-k: broadcast queries, score all, window rank. The oracle.
-
-    `dim` unrolls the scoring expression instead of the higher-order
-    fold — measured SLOWER at dim=64 on every row tried (r13 paired
-    A/B, tools_r13/ab_cand_dim.py: the ~190-term generated method
-    loses JIT); left as an escape hatch for small dims only.
-    """
+    """Exact top-k: broadcast queries, score all, window rank. The oracle."""
     q = F.broadcast(queries.select(F.col(query_id), F.col(query_vec).alias("_qv")))
     scored = q.crossJoin(index.select(F.col(index_id), F.col(index_vec).alias("_iv"))).select(
-        query_id, index_id, F.round(cosine(F.col("_iv"), F.col("_qv"), dim=dim), 6).alias("score")
+        query_id, index_id, F.round(cosine(F.col("_iv"), F.col("_qv")), 6).alias("score")
     )
     w = Window.partitionBy(query_id).orderBy(F.col("score").desc(), F.col(index_id).asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -438,7 +438,7 @@ def _materialize_sketch(sketch: DataFrame) -> DataFrame:
 
     localCheckpoint, deliberately: a bounded driver collect +
     LocalRelation rebuild was A/B'd in the r13 optimization round
-    (tools_r13/ab_sketch_ppl.py, interleaved same-session pairs) and
+    (OPTIMIZATION_r13.md, interleaved same-session pairs) and
     measured SLOWER — kmv_overlap 3.0 -> 6.0 s median, join_size at
     parity-to-worse — because the sketch lineage is mapInPandas-
     dominated (the RDD path's codegen loss is marginal) while the

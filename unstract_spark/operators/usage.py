@@ -12,18 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def aggregate_usage(usage: DataFrame, by: tuple[str, ...] = ("run_id",)) -> DataFrame:
-    """A1: token + cost totals per run (or any grouping)."""
-    return usage.groupBy(*by).agg(
-        F.sum("embedding_tokens").alias("embedding_tokens"),
-        F.sum("prompt_tokens").alias("prompt_tokens"),
-        F.sum("completion_tokens").alias("completion_tokens"),
-        F.sum("total_tokens").alias("total_tokens"),
-        F.round(F.sum("cost_in_dollars"), 6).alias("cost_in_dollars"),
-        F.sum("pages_processed").alias("pages_processed"),
-    )
-
-
 def execution_status_rollup(executions: DataFrame) -> DataFrame:
     """A2: per-execution success/failure counts -> final status.
 
@@ -43,12 +31,6 @@ def execution_status_rollup(executions: DataFrame) -> DataFrame:
     return agg.withColumn("final_status", final)
 
 
-def distinct_index_params(specs: DataFrame) -> DataFrame:
-    """A3: one index pass per distinct (chunk_size, overlap, adapters)
-    combination (reference seen_params, legacy_executor.py:902-978)."""
-    return specs.select("chunk_size", "chunk_overlap").distinct()
-
-
 def merge_stage_metrics(frames: list[DataFrame], key: str = "run_id") -> DataFrame:
     """A5: per-stage elapsed-time metric maps merged across pipeline
     stages (legacy_executor.py:1036-1053).
@@ -65,14 +47,6 @@ def merge_stage_metrics(frames: list[DataFrame], key: str = "run_id") -> DataFra
             F.create_map().cast("map<string,double>"),
             lambda acc, m: F.map_concat(F.map_filter(acc, lambda k, _: ~F.map_contains_key(m, k)), m),
         ).alias("metrics")
-    )
-
-
-def usage_report_cube(usage: DataFrame) -> DataFrame:
-    """Reporting extra: cube over (execution, model) — free in Spark."""
-    return usage.cube("execution_id", "model_name").agg(
-        F.sum("total_tokens").alias("total_tokens"),
-        F.round(F.sum("cost_in_dollars"), 6).alias("cost_in_dollars"),
     )
 
 

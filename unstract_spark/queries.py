@@ -4480,8 +4480,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t16_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T16 classification (keyword argmax + reserved 'unknown' bin;
-    tools/classifier/src/main.py). Routing = partitionBy on write
-    (sinks/filesystem.route_by_classification)."""
+    tools/classifier/src/main.py). Routing = partitionBy(classification)
+    on write, one directory per bin."""
     from unstract_spark.operators.enrich import classify_by_keywords
 
     return classify_by_keywords(

@@ -66,32 +66,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver's parquet tables from one scale-factor dir.
-
-    Plain `spark.read.parquet` so Catalyst keeps pushdown/pruning; no
-    caching here — callers decide what is hot.
-    """
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view (mirrors the oracle harness)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
