@@ -57,8 +57,9 @@ def test_bounded_rank_k_larger_than_input(spark):
 
 def test_plan_audit_flags():
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     from plan_audit import audit_plan
 
     ok_plan = "TakeOrderedAndProject(limit=10)\n+- Exchange hashpartitioning\n+- HashAggregate"

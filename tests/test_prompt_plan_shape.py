@@ -1,0 +1,102 @@
+"""T9 plan shape: each (row, prompt) answer is hashed once.
+
+A Column helper that reads its input twice copies the input's tree, so
+an unstaged `coerce(mock_answer_raw(...))` plans dozens of md5 calls per
+prompt. These guards count `md5(` in the optimized plans: at most one
+for the document fingerprint plus one per prompt (per union branch for
+`run_extraction`'s extract barrier). No timing.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from unstract_spark.mock import doc_fingerprint, mock_answer_raw
+from unstract_spark.operators.prompts import coerce, extract_structured_mock, with_mock_answers
+from unstract_spark.plans.pipeline import ExtractionJob, run_extraction
+
+SPECS = [
+    {"prompt_key": "invoice_no", "prompt": "id", "enforce_type": "text"},
+    {"prompt_key": "total", "prompt": "total of {{invoice_no}}", "enforce_type": "number"},
+    {"prompt_key": "vendor", "prompt": "vendor", "enforce_type": "text"},
+]
+MAX_MD5 = 1 + len(SPECS)
+
+
+def _md5_calls(plan) -> int:
+    return plan.toString().count("md5(")
+
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [(i, f"invoice {i} total {i}0 thousand") for i in range(40)] + [(40, None)],
+        "doc_id int, text string",
+    )
+
+
+def test_helper_hashes_each_prompt_once_and_matches_inline(spark):
+    docs = _docs(spark).withColumn("fp", doc_fingerprint(F.col("text")))
+    staged = with_mock_answers(docs, SPECS, "fp")
+    assert _md5_calls(_optimized(staged)) <= MAX_MD5
+    assert staged.columns == ["doc_id", "text", "fp", "invoice_no", "total", "vendor"]
+    # same values as the unstaged composition
+    inline = docs.select(
+        "doc_id",
+        *[
+            coerce(mock_answer_raw(F.lit(s["prompt_key"]), F.col("fp")), s["enforce_type"]).alias(
+                s["prompt_key"]
+            )
+            for s in SPECS
+        ],
+    )
+    got = staged.drop("text", "fp")
+    assert sorted(got.collect()) == sorted(inline.collect())
+
+
+def test_extract_structured_mock_hashes_each_prompt_once(spark):
+    out = extract_structured_mock(_docs(spark), SPECS)
+    assert out.columns == ["doc_id", "invoice_no", "total", "vendor"]
+    assert _md5_calls(_optimized(out)) <= MAX_MD5
+
+
+def _union_branches(plan) -> list:
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        children = [node.children().apply(i) for i in range(node.children().size())]
+        if node.nodeName() == "Union":
+            return children
+        stack.extend(children)
+    return []
+
+
+def test_run_extraction_barrier_hashes_each_prompt_once(spark, tmp_path, monkeypatch):
+    src = tmp_path / "docs"
+    src.mkdir()
+    for i in range(4):
+        (src / f"d{i}.txt").write_text(f"invoice body {i} total 10{i} dollars")
+    # the second localCheckpoint of a run is the extract barrier
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+    barriers = []
+
+    def capture(df, *args, **kwargs):
+        barriers.append(df)
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", capture)
+    job = ExtractionJob(
+        source_dir=str(src), history_path=str(tmp_path / "hist"), prompt_specs=SPECS
+    )
+    out = run_extraction(spark, job)
+    assert out["results"].columns[-3:] == ["invoice_no", "vendor", "total"]
+    plan = _optimized(barriers[1])
+    branches = _union_branches(plan)
+    assert len(branches) == 2
+    for branch in branches:
+        assert _md5_calls(branch) <= MAX_MD5
+    assert _md5_calls(plan) <= len(branches) * MAX_MD5

@@ -20,10 +20,11 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from pyspark.sql import functions as F
 
     from unstract_spark.operators.similarity import (

@@ -19,10 +19,11 @@ import shutil
 import sys
 import tempfile
 import time
+from pathlib import Path
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import numpy as np
     from pyspark.sql import functions as F
 

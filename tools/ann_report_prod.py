@@ -34,6 +34,7 @@ import shutil
 import sys
 import tempfile
 import time
+from pathlib import Path
 
 
 def _sq_ladder(report, measure, queries, emb, dim, k) -> None:
@@ -63,7 +64,7 @@ def _sq_ladder(report, measure, queries, emb, dim, k) -> None:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import numpy as np
     from pyspark.sql import functions as F
 

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
 
 def _indent(line: str) -> int:
@@ -134,7 +135,7 @@ def audit_plan(simple: str, formatted: str = "") -> tuple[list[str], dict[str, i
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from unstract_spark.queries import _REGISTRY
     from unstract_spark.session import get_spark
 

@@ -27,8 +27,9 @@ import argparse
 import sys
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> int:

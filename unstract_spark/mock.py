@@ -37,16 +37,22 @@ def doc_fingerprint(text: Column) -> Column:
     return F.md5(text)
 
 
-def mock_answer_raw(prompt_key: Column, fingerprint: Column) -> Column:
-    """Raw mock LLM answer string, pre type-coercion ('NA' possible)."""
-    h = F.md5(F.concat_ws(":", prompt_key, fingerprint))
+def mock_answer_hash(prompt_key: Column, fingerprint: Column) -> Column:
+    """The mock call's md5 `h`; :func:`mock_answer_from_hash` maps it to the answer."""
+    return F.md5(F.concat_ws(":", prompt_key, fingerprint))
+
+
+def mock_answer_from_hash(h: Column) -> Column:
+    """Raw mock answer from its hash. `h` is read twice, so pass a column
+    reference, not the md5 expression, where the answer is computed per row."""
     return F.when(h.startswith("0"), F.lit("NA")).otherwise(
         F.concat(F.lit("ans-"), F.substring(h, 1, 12))
     )
 
 
-def mock_answer_hash(prompt_key: Column, fingerprint: Column) -> Column:
-    return F.md5(F.concat_ws(":", prompt_key, fingerprint))
+def mock_answer_raw(prompt_key: Column, fingerprint: Column) -> Column:
+    """Raw mock LLM answer string, pre type-coercion ('NA' possible)."""
+    return mock_answer_from_hash(mock_answer_hash(prompt_key, fingerprint))
 
 
 def mock_answer_raw_sql(prompt_key_sql: str, fingerprint_sql: str) -> str:

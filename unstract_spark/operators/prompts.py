@@ -18,7 +18,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from unstract_spark.mock import doc_fingerprint, mock_answer_hash, mock_answer_raw
+from unstract_spark.mock import (
+    doc_fingerprint,
+    mock_answer_from_hash,
+    mock_answer_hash,
+    mock_answer_raw,
+)
 
 # --- F5 NA sanitize (reference: legacy_executor.py:1297-1325) ---
 
@@ -106,6 +111,33 @@ def coerce(raw: Column, enforce_type: str) -> Column:
 # --- T9 per-field extraction over the cross join, mock-LLM path ---
 
 
+def with_mock_answers(
+    df: DataFrame, prompt_specs: list[dict], fingerprint: str = "fingerprint"
+) -> DataFrame:
+    """Add one typed column per prompt_key: the mock answer for
+    (prompt_key, `fingerprint`), NA-sanitized and coerced.
+
+    Each prompt's hash and raw answer get a projection of their own. A
+    Column helper that reads its input twice copies the input's whole
+    tree: the answer reads its hash twice and `coerce` reads the answer
+    four to twenty-two times, so inlined, `run_extraction`'s three
+    prompts planned 234 md5 calls. CollapseProject keeps a projection
+    apart when a non-cheap column of it is read more than once, so each
+    row hashes each prompt once.
+    """
+    fp = F.col(fingerprint)
+    hashes = {
+        f"_h{i}": mock_answer_hash(F.lit(s["prompt_key"]), fp)
+        for i, s in enumerate(prompt_specs)
+    }
+    answers = {f"_a{i}": mock_answer_from_hash(F.col(f"_h{i}")) for i in range(len(prompt_specs))}
+    typed = {
+        s["prompt_key"]: coerce(F.col(f"_a{i}"), s.get("enforce_type", "text"))
+        for i, s in enumerate(prompt_specs)
+    }
+    return df.withColumns(hashes).withColumns(answers).withColumns(typed).drop(*hashes, *answers)
+
+
 def extract_structured_mock(
     docs: DataFrame,
     prompt_specs: list[dict],
@@ -116,20 +148,17 @@ def extract_structured_mock(
 
     The cross join is broadcast (prompt specs are tiny); answers come
     from the deterministic mock so the whole pipeline is
-    oracle-checkable. With a real provider, swap mock_answer_raw for
-    llm.complete_with_controller — the plan shape is identical.
+    oracle-checkable. With a real provider, swap the mock answer in
+    :func:`with_mock_answers` for llm.complete_with_controller — the
+    plan shape is identical.
 
     Pivot note: instead of groupBy().pivot() (whose output columns
     depend on runtime values), we emit one aliased column per spec —
     plan-time schema, as the engine requires (§1.3 dynamic schemas).
     """
-    fp = doc_fingerprint(F.col(text_col))
-    out_cols: list[Column] = [F.col(id_col)]
-    for spec in prompt_specs:
-        key = spec["prompt_key"]
-        raw = mock_answer_raw(F.lit(key), fp)
-        out_cols.append(coerce(raw, spec.get("enforce_type", "text")).alias(key))
-    return docs.select(*out_cols)
+    fp = doc_fingerprint(F.col(text_col)).alias("_fp")
+    answered = with_mock_answers(docs.select(F.col(id_col), fp), prompt_specs, "_fp")
+    return answered.select(id_col, *[s["prompt_key"] for s in prompt_specs])
 
 
 def extract_long_format_mock(
@@ -147,13 +176,12 @@ def extract_long_format_mock(
     joined = docs.select(F.col(id_col), fp).crossJoin(
         F.broadcast(prompt_specs_df.select("prompt_key", "enforce_type"))
     )
-    raw = mock_answer_raw(F.col("prompt_key"), F.col("fingerprint"))
-    return joined.select(
-        id_col,
-        "prompt_key",
-        raw.alias("answer_raw"),
-        na_to_null(raw).alias("answer_text"),
+    # staged like with_mock_answers: the hash and answer are each read twice
+    hashed = joined.withColumn("_h", mock_answer_hash(F.col("prompt_key"), F.col("fingerprint")))
+    answered = hashed.select(
+        id_col, "prompt_key", mock_answer_from_hash(F.col("_h")).alias("answer_raw")
     )
+    return answered.withColumn("answer_text", na_to_null(F.col("answer_raw")))
 
 
 def extract_table_mock(

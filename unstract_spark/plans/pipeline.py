@@ -24,10 +24,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from unstract_spark.mock import mock_answer_raw
 from unstract_spark.operators.extract import extract_text
-from unstract_spark.operators.prompts import coerce, na_to_null
-from unstract_spark.plans.fusion import plan_prompt_stages, substitute_variables
+from unstract_spark.operators.prompts import with_mock_answers
+from unstract_spark.plans.fusion import plan_prompt_stages
 from unstract_spark.sinks.history import REPLAY_COLUMNS, FileHistoryStore
 from unstract_spark.sources.catalog import FilePattern, build_catalog, list_files
 
@@ -132,37 +131,27 @@ def run_extraction(spark: SparkSession, job: ExtractionJob) -> dict[str, DataFra
     )
     docs = txt_docs.unionByName(other_docs)
 
-    # prompt stages (variable deps serialize; within a stage the mock
-    # "call" is one deterministic expression per prompt)
+    # T9: prompt columns in stage order (plan_prompt_stages also
+    # rejects dependency cycles). with_mock_answers stages each
+    # prompt's hash and answer as columns of their own, so each row
+    # hashes each prompt once; coerce already maps 'NA' to null.
     plan = plan_prompt_stages(job.prompt_specs)
     by_key = {s["prompt_key"]: s for s in job.prompt_specs}
-    fp = F.md5(F.coalesce(F.col("extracted_text"), F.lit("")))
-    outputs: dict[str, str] = {}
-    result = docs.select(
-        "file_path",
-        "file_name",
-        "file_hash",
-        "extracted_text",
-        fp.alias("fingerprint"),
-        F.col("extract_status").alias("status"),
-        F.col("extract_error").alias("error_message"),
+    keys = [key for stage in plan.stages for group in stage for key in group]
+    answered = with_mock_answers(
+        docs.select(
+            "file_path",
+            "file_name",
+            "file_hash",
+            "extracted_text",
+            F.md5(F.coalesce(F.col("extracted_text"), F.lit(""))).alias("fingerprint"),
+            F.col("extract_status").alias("status"),
+            F.col("extract_error").alias("error_message"),
+        ),
+        [by_key[key] for key in keys],
     )
-    usage_rows = []
-    for stage in plan.stages:
-        for group in stage:
-            for key in group:
-                spec = by_key[key]
-                prompt_text = substitute_variables(spec.get("prompt", ""), outputs)
-                raw = mock_answer_raw(F.lit(key), F.col("fingerprint"))
-                result = result.withColumn(
-                    key,
-                    F.when(
-                        F.col("status") == "SUCCESS",
-                        coerce(na_to_null(raw), spec.get("enforce_type", "text")),
-                    ),
-                )
-                outputs[key] = f"<{key}>"
-                usage_rows.append(key)
+    ok = F.col("status") == "SUCCESS"
+    result = answered.withColumns({key: F.when(ok, F.col(key)) for key in keys})
 
     # Extract ONCE: three consumers follow (history MERGE write,
     # results, usage). Without a materialization barrier each action
@@ -182,8 +171,8 @@ def run_extraction(spark: SparkSession, job: ExtractionJob) -> dict[str, DataFra
         F.lit("mock-llm").alias("model_name"),
         F.lit(0).cast("long").alias("embedding_tokens"),
         (F.length("extracted_text") / 4).cast("long").alias("prompt_tokens"),
-        F.lit(len(usage_rows) * 8).cast("long").alias("completion_tokens"),
-        ((F.length("extracted_text") / 4) + len(usage_rows) * 8)
+        F.lit(len(keys) * 8).cast("long").alias("completion_tokens"),
+        ((F.length("extracted_text") / 4) + len(keys) * 8)
         .cast("long")
         .alias("total_tokens"),
         F.lit(0.0).alias("cost_in_dollars"),

@@ -16,7 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from unstract_spark.mock import doc_fingerprint, mock_answer_raw, mock_answer_raw_sql
+from unstract_spark.mock import mock_answer_raw, mock_answer_raw_sql
 from unstract_spark.operators import (
     chunking,
     dedup,
@@ -26,7 +26,6 @@ from unstract_spark.operators import (
     similarity,
     text_analysis,
 )
-from unstract_spark.operators.prompts import coerce_number, na_to_null
 from unstract_spark.operators.ranks import range_prefix
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1470,15 +1469,13 @@ def t9_extract_structured(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T9 per-field extraction, end-to-end with the deterministic mock
     LLM: fingerprint -> answer -> NA sanitize (F5) -> type coercion
     (§1.2) -> one column per prompt_key."""
-    d = _t(spark, sf_dir, "documents")
-    fp = doc_fingerprint(F.col("text"))
-    invoice_raw = mock_answer_raw(F.lit("invoice_no"), fp)
-    total_raw = mock_answer_raw(F.lit("total"), fp)
-    return d.select(
-        "doc_id",
-        na_to_null(invoice_raw).alias("invoice_no"),
-        coerce_number(na_to_null(total_raw)).alias("total"),
-    )
+    from unstract_spark.operators.prompts import extract_structured_mock
+
+    specs = [
+        {"prompt_key": "invoice_no", "enforce_type": "text"},
+        {"prompt_key": "total", "enforce_type": "number"},
+    ]
+    return extract_structured_mock(_t(spark, sf_dir, "documents"), specs)
 
 
 @register(

@@ -8,7 +8,7 @@ Scale notes (100 TB):
 - AQE handles skew-join splitting and partition coalescing at runtime.
 - `spark.sql.files.maxPartitionBytes` 128m keeps scan tasks bounded.
 - shuffle partitions: set explicitly per-job for the big shuffles
-  (bench uses 32 locally; a 1000-executor cluster wants ~2-4x cores).
+  (locally one per CPU; a 1000-executor cluster wants ~2-4x cores).
 """
 
 from __future__ import annotations
@@ -27,9 +27,10 @@ def get_spark(
     """Build (or fetch) the engine session.
 
     Defaults come from env so the driver/bench can steer without code
-    changes: SPARK_GRAFT_CPUS controls local parallelism.
+    changes: SPARK_GRAFT_CPUS controls local parallelism and defaults to
+    the CPUs this process may run on.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 
