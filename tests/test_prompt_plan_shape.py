@@ -1,18 +1,24 @@
-"""T9 plan shape: each (row, prompt) answer is hashed once.
+"""T9/T10 plan shape: each (row, prompt) answer is hashed once.
 
 A Column helper that reads its input twice copies the input's tree, so
 an unstaged `coerce(mock_answer_raw(...))` plans dozens of md5 calls per
 prompt. These guards count `md5(` in the optimized plans: at most one
 for the document fingerprint plus one per prompt (per union branch for
-`run_extraction`'s extract barrier). No timing.
+`run_extraction`'s extract barrier; plus the fused call id for
+`single_pass_mock`). No timing.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from unstract_spark.mock import doc_fingerprint, mock_answer_raw
-from unstract_spark.operators.prompts import coerce, extract_structured_mock, with_mock_answers
+from unstract_spark.mock import doc_fingerprint, mock_answer_hash, mock_answer_raw
+from unstract_spark.operators.prompts import (
+    coerce,
+    extract_structured_mock,
+    single_pass_mock,
+    with_mock_answers,
+)
 from unstract_spark.plans.pipeline import ExtractionJob, run_extraction
 
 SPECS = [
@@ -61,6 +67,23 @@ def test_extract_structured_mock_hashes_each_prompt_once(spark):
     out = extract_structured_mock(_docs(spark), SPECS)
     assert out.columns == ["doc_id", "invoice_no", "total", "vendor"]
     assert _md5_calls(_optimized(out)) <= MAX_MD5
+
+
+def test_single_pass_mock_hashes_each_answer_once_and_matches_inline(spark):
+    keys = [s["prompt_key"] for s in SPECS]
+    docs = _docs(spark)
+    out = single_pass_mock(docs, keys)
+    assert out.columns == ["doc_id", "call_id", *keys]
+    # the fingerprint, the fused call id and one hash per key
+    assert _md5_calls(_optimized(out)) <= 2 + len(keys)
+    fused = "|".join(sorted(keys))
+    fp = doc_fingerprint(F.col("text"))
+    inline = docs.select(
+        "doc_id",
+        mock_answer_hash(F.lit(fused), fp).alias("call_id"),
+        *[mock_answer_raw(F.lit(f"{fused}#{k}"), fp).alias(k) for k in keys],
+    )
+    assert sorted(out.collect()) == sorted(inline.collect())
 
 
 def _union_branches(plan) -> list:

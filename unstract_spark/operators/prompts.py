@@ -22,7 +22,6 @@ from unstract_spark.mock import (
     doc_fingerprint,
     mock_answer_from_hash,
     mock_answer_hash,
-    mock_answer_raw,
 )
 
 # --- F5 NA sanitize (reference: legacy_executor.py:1297-1325) ---
@@ -231,9 +230,18 @@ def single_pass_mock(
     planner rewrite (plans/fusion.py) decides when this replaces N
     per-prompt calls.
     """
-    fp = doc_fingerprint(F.col(text_col))
     fused_key = "|".join(sorted(prompt_keys))
-    cols = [F.col(id_col), mock_answer_hash(F.lit(fused_key), fp).alias("call_id")]
-    for key in prompt_keys:
-        cols.append(mock_answer_raw(F.lit(f"{fused_key}#{key}"), fp).alias(key))
-    return docs.select(*cols)
+    # staged like with_mock_answers: the fingerprint and each answer's
+    # hash are read more than once, so each is projected once
+    fp = docs.select(F.col(id_col), doc_fingerprint(F.col(text_col)).alias("_fp"))
+    hashed = fp.withColumns(
+        {
+            f"_h{i}": mock_answer_hash(F.lit(f"{fused_key}#{key}"), F.col("_fp"))
+            for i, key in enumerate(prompt_keys)
+        }
+    )
+    return hashed.select(
+        F.col(id_col),
+        mock_answer_hash(F.lit(fused_key), F.col("_fp")).alias("call_id"),
+        *[mock_answer_from_hash(F.col(f"_h{i}")).alias(key) for i, key in enumerate(prompt_keys)],
+    )

@@ -85,8 +85,9 @@ def kmv_estimate(sketch: DataFrame, k: int) -> DataFrame:
     (its `h` rows): (k, n_sketch, kth_hash, est_distinct). n_sketch
     < k means the sketch saw every distinct value and the estimate IS
     the count. `k` must be the k the sketch was built with (see
-    kmv_merge)."""
-    return sketch.agg(
+    kmv_merge). The sketch holds at most k rows, so the aggregate runs
+    over one partition: no Exchange, one job."""
+    return sketch.coalesce(1).agg(
         F.lit(k).cast("long").alias("k"),
         F.count(F.lit(1)).alias("n_sketch"),
         F.max("h").alias("kth_hash"),

@@ -428,10 +428,9 @@ def event_pattern_match(
     seq = F.array_join(
         F.transform(F.col("_a"), lambda x: x["_c"]), ""
     )
-    matches = F.expr(
-        f"regexp_extract_all(array_join(transform(_a, "
-        f"x -> x._c), ''), '{pattern}', 0)"
-    )
+    # the regex is a literal, never spliced into SQL text: the SQL
+    # string parser drops unknown escapes (`v\d` would scan as `vd`)
+    matches = F.regexp_extract_all(seq, F.lit(pattern), F.lit(0))
     return arr.select(
         user_col,
         F.length(seq).alias("seq_len"),
@@ -617,10 +616,7 @@ def _pattern_match_positions(
         user_col,
         "_a",
         *carry,
-        F.expr(
-            f"regexp_extract_all(array_join(transform(_a, "
-            f"x -> x._c), ''), '{pattern}', 0)"
-        ).alias("_ms"),
+        F.regexp_extract_all(seq, F.lit(pattern), F.lit(0)).alias("_ms"),
         F.split(seq, pattern, -1).alias("_gs"),
     ).filter(F.size("_ms") > 0)
     per = with_seq.select(

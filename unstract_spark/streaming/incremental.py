@@ -176,15 +176,19 @@ def _pin_bid(checkpoint_dir: str | None, bid: int, base: int = 0) -> None:
     os.replace(tmp, marker)
 
 
-def _read_parquet_or_none(spark: SparkSession, path: str):
-    """spark.read.parquet(path), with ONLY a missing path mapped to
-    None ("first fire"). Any other analysis error — schema corruption,
-    permissions surfaced as analysis — must raise: treating it as
-    first-fire would silently skip cross-corpus state for the batch."""
+def _read_parquet_or_none(
+    spark: SparkSession, path: str, schema: str | T.StructType
+):
+    """The append store at `path` read with its `schema` (DDL or
+    StructType; `batch_id` comes from partition discovery) — no parquet
+    footer-inference job — with ONLY a missing path mapped to None
+    ("first fire"). Any other analysis error — permissions surfaced as
+    analysis — must raise: treating it as first-fire would silently
+    skip cross-corpus state for the batch."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as ex:
         cls = ex.getCondition() or ""
         if "PATH_NOT_FOUND" not in cls and "Path does not exist" not in str(ex):
@@ -254,6 +258,11 @@ def _col_type(frame: DataFrame, col: str) -> str:
     """DDL type of `col` in `frame`, for state schemas that keep a
     caller's column type."""
     return frame.schema[col].dataType.simpleString()
+
+
+def _quote(name: str) -> str:
+    """`name` as a backtick-quoted SQL/DDL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _parquet_stream(
@@ -656,7 +665,7 @@ def streaming_neardup_pipeline(
         sigs_new = dedup.minhash_signatures(
             dedup.char_shingles(docs)
         ).localCheckpoint(eager=True)
-        old = _read_parquet_or_none(spark, store_dir)
+        old = _read_parquet_or_none(spark, store_dir, sigs_new.schema)
         if old is None:
             combined = sigs_new
         else:
@@ -1026,7 +1035,7 @@ def streaming_bloom_pipeline(
         fp = docs.select(
             "doc_id", F.md5("text").alias("fingerprint")
         ).localCheckpoint(eager=True)
-        old_bits = _read_parquet_or_none(spark, store_dir)
+        old_bits = _read_parquet_or_none(spark, store_dir, "bit long")
         if old_bits is None:
             decisions = fp.select(
                 "doc_id", F.lit(False).alias("maybe_seen")
@@ -1348,11 +1357,17 @@ def streaming_pattern_pipeline(
     N events, the same windowed-relaxation every bounded-state CEP
     engine offers.
 
+    A fire is one SQL statement: the batch's coded events UNION ALL the
+    prior state rows, grouped by user once (one shuffle; `max()` of the
+    state columns reads the user's one state row), then the rescan.
+    The regex, event types and codes are bound as parameters, never
+    spliced into the text, so the regex is the same Java regex the
+    batch twin's Column calls use. A NULL user id is one group, as in
+    the batch twin.
+
     Exactly-once: the module's fire discipline (`_drain_fires`), with
     the per-user state as a snapshot store. Returns fired batch count.
     """
-    if "'" in pattern:
-        raise ValueError("pattern must not contain single quotes")
     if _pattern_end_extensible(pattern):
         raise ValueError(
             "streaming_pattern_pipeline: the pattern's match end is"
@@ -1365,93 +1380,69 @@ def streaming_pattern_pipeline(
             f" the alternation shortest-first: {pattern!r}"
         )
     stream = _parquet_stream(spark, source_dir, schema)
+    state_types = {
+        "n_matches": "bigint", "total_match_len": "bigint",
+        "seq_len": "bigint", "first_match": "string", "tail": "string",
+    }
     # the state's key column keeps the source's user-id type
-    state_ddl = (
-        f"{user_col} {_col_type(stream, user_col)}, n_matches long,"
-        " total_match_len long, seq_len long, first_match string,"
-        " tail string"
+    u = _quote(user_col)
+    state_ddl = f"{u} {_col_type(stream, user_col)}, " + ", ".join(
+        f"{c} {t}" for c, t in state_types.items()
     )
+    args = {"pat": pattern}
+    whens = ""
+    for i, (etype, ch) in enumerate(code_map.items()):
+        args[f"t{i}"], args[f"c{i}"] = etype, ch
+        whens += f" WHEN :t{i} THEN :c{i}"
+    # an event type outside code_map codes as 'x'
+    code = f"CASE {_quote(type_col)}{whens} ELSE 'x' END" if whens else "'x'"
+    tail = "element_at(split(_combined, :pat, -1), -1)"
+    if max_tail is not None:
+        args["max_tail"] = int(max_tail)
+        tail = f"right({tail}, :max_tail)"
+    sql = f"""
+        WITH coded AS (
+          SELECT {u} AS _u, named_struct('_ts', {_quote(ts_col)},
+            '_id', {_quote(id_col)},
+            '_c', {code}) AS _e,
+            {", ".join(f"CAST(NULL AS {t}) AS {c}" for c, t in state_types.items())}
+          FROM _pattern_batch
+          UNION ALL
+          SELECT {u}, NULL, {", ".join(state_types)} FROM _pattern_prior
+        ), grouped AS (
+          SELECT _u,
+            array_join(transform(array_sort(collect_list(_e)), e -> e._c), '')
+              AS _new,
+            {", ".join(f"max({c}) AS {c}" for c in state_types)}
+          FROM coded GROUP BY _u
+        ), combined AS (
+          SELECT *, concat(coalesce(tail, ''), _new) AS _combined FROM grouped
+        ), scanned AS (
+          SELECT *, regexp_extract_all(_combined, :pat, 0) AS _found
+          FROM combined
+        )
+        SELECT _u AS {u},
+          CAST(coalesce(n_matches, 0) + size(_found) AS BIGINT) AS n_matches,
+          CAST(coalesce(total_match_len, 0)
+            + aggregate(_found, 0, (acc, m) -> acc + length(m)) AS BIGINT)
+            AS total_match_len,
+          CAST(coalesce(seq_len, 0) + length(_new) AS BIGINT) AS seq_len,
+          CASE WHEN coalesce(first_match, '') != '' THEN first_match
+               WHEN size(_found) > 0 THEN element_at(_found, 1)
+               ELSE '' END AS first_match,
+          {tail} AS tail
+        FROM scanned
+    """
 
     def fire(batch: DataFrame, bid: int) -> None:
-        code = None
-        for etype, ch in code_map.items():
-            br = F.when(F.col(type_col) == etype, F.lit(ch))
-            code = br if code is None else code.when(
-                F.col(type_col) == etype, F.lit(ch)
-            )
-        code = (code.otherwise(F.lit("x")) if code is not None
-                else F.lit("x")).alias("_c")
-        ns = (
-            batch.select(
-                F.col(user_col).alias("_u"),
-                F.col(ts_col).alias("_ts"),
-                F.col(id_col).alias("_id"),
-                code,
-            )
-            .groupBy("_u")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("_ts", "_id", "_c"))
-                        ),
-                        lambda x: x["_c"],
-                    ),
-                    "",
-                ).alias("_new")
-            )
-        )
-        old = _read_prior_snapshot(spark, store_dir, bid, state_ddl)
-        j = ns.join(
-            old, ns["_u"] == old[user_col], "full_outer"
-        ).withColumn(
-            "_combined",
-            F.concat(
-                F.coalesce(F.col("tail"), F.lit("")),
-                F.coalesce(F.col("_new"), F.lit("")),
-            ),
-        ).withColumn(
-            "_found",
-            F.expr(f"regexp_extract_all(_combined, '{pattern}', 0)"),
-        )
-        state = j.select(
-            F.coalesce(F.col("_u"), F.col(user_col)).alias(user_col),
-            (
-                F.coalesce(F.col("n_matches"), F.lit(0))
-                + F.size("_found")
-            ).cast("long").alias("n_matches"),
-            (
-                F.coalesce(F.col("total_match_len"), F.lit(0))
-                + F.coalesce(
-                    F.aggregate(
-                        F.transform(F.col("_found"), F.length),
-                        F.lit(0),
-                        lambda acc, x: acc + x,
-                    ),
-                    F.lit(0),
-                )
-            ).cast("long").alias("total_match_len"),
-            (
-                F.coalesce(F.col("seq_len"), F.lit(0))
-                + F.length(F.coalesce(F.col("_new"), F.lit("")))
-            ).cast("long").alias("seq_len"),
-            F.when(
-                F.coalesce(F.col("first_match"), F.lit("")) != "",
-                F.col("first_match"),
-            )
-            .when(
-                F.size("_found") > 0, F.element_at(F.col("_found"), 1)
-            )
-            .otherwise(F.lit(""))
-            .alias("first_match"),
-            F.element_at(
-                F.split(F.col("_combined"), pattern, -1), -1
-            ).alias("tail"),
-        )
-        if max_tail is not None:
-            state = state.withColumn(
-                "tail", F.expr(f"right(tail, {int(max_tail)})")
-            )
+        # the foreachBatch frame lives in a cloned session: its views,
+        # the prior read and the statement run there
+        session = batch.sparkSession
+        batch.createOrReplaceTempView("_pattern_batch")
+        _read_prior_snapshot(
+            session, store_dir, bid, state_ddl
+        ).createOrReplaceTempView("_pattern_prior")
+        state = session.sql(sql, args=args)
         # Direct write (r13): the state lineage reads only the
         # max-prior snapshot partition (< bid), never its own write
         # target, so no materialization barrier is needed — one full
@@ -1718,20 +1709,21 @@ def streaming_triangle_pipeline(
     discipline (`_drain_fires`). All joins are node-keyed equi-joins.
     Returns fired batch count."""
     stream = _parquet_stream(spark, source_dir, schema)
-    counts_ddl = f"node {_col_type(stream, 'src')}, n_triangles long"
+    node = _col_type(stream, "src")
+    edges_ddl, counts_ddl = f"src {node}, dst {node}", f"node {node}, n_triangles long"
 
     def fire(batch: DataFrame, bid: int) -> None:
         canon = batch.select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
         ).filter(F.col("src") != F.col("dst")).distinct()
-        old = _read_parquet_or_none(spark, f"{state_dir}/edges")
+        old = _read_parquet_or_none(spark, f"{state_dir}/edges", edges_ddl)
         if old is not None:
             old = old.filter(F.col("batch_id") != bid).select(
                 "src", "dst"
             ).localCheckpoint(eager=True)
         else:
-            old = spark.createDataFrame([], "src long, dst long")
+            old = spark.createDataFrame([], edges_ddl)
         de = canon.join(old, ["src", "dst"], "left_anti").localCheckpoint(
             eager=True
         )
@@ -2074,21 +2066,24 @@ def streaming_join_view_pipeline(
     double-counting. The emitted delta partitions are append-only BY
     DESIGN (they are the view's content — pruning them would delete
     the view). Returns fired batch count."""
+    stream = _parquet_stream(spark, source_dir, schema)
+    # both sides' state stores hold the stream's non-`side` columns
+    side_schema = T.StructType([f for f in stream.schema if f.name != "side"])
+    payload = side_schema.names
 
     def fire(batch: DataFrame, bid: int) -> None:
-        payload = [c for c in batch.columns if c != "side"]
         dl = batch.filter(F.col("side") == "L").select(*payload)
         dr = batch.filter(F.col("side") == "R").select(*payload)
-        l_old = _read_parquet_or_none(spark, f"{state_dir}/L")
-        r_old = _read_parquet_or_none(spark, f"{state_dir}/R")
+        l_old = _read_parquet_or_none(spark, f"{state_dir}/L", side_schema)
+        r_old = _read_parquet_or_none(spark, f"{state_dir}/R", side_schema)
         if l_old is not None:
             l_old = l_old.filter(F.col("batch_id") != bid).select(*payload)
         else:
-            l_old = spark.createDataFrame([], dl.schema)
+            l_old = spark.createDataFrame([], side_schema)
         if r_old is not None:
             r_old = r_old.filter(F.col("batch_id") != bid).select(*payload)
         else:
-            r_old = spark.createDataFrame([], dr.schema)
+            r_old = spark.createDataFrame([], side_schema)
 
         def _pair(left: DataFrame, right: DataFrame) -> DataFrame:
             lt = left.select(
@@ -2129,7 +2124,6 @@ def streaming_join_view_pipeline(
             f"{state_dir}/R/batch_id={bid}"
         )
 
-    stream = _parquet_stream(spark, source_dir, schema)
     roots = (out_dir, f"{state_dir}/L", f"{state_dir}/R")
     return _drain_fires(stream, checkpoint_dir, roots, fire)
 
@@ -2503,7 +2497,7 @@ def streaming_crawl_pipeline(
         # in-batch dedup first (a crawl drop can repeat a URL), then
         # frontier anti-join against every PRIOR epoch
         urls = urls.dropDuplicates(["url_norm"])
-        seen = _read_parquet_or_none(spark, frontier_dir)
+        seen = _read_parquet_or_none(spark, frontier_dir, "url_norm string")
         if seen is not None:
             seen = seen.filter(F.col("batch_id") != bid).select("url_norm")
             urls = urls.join(seen, "url_norm", "left_anti")
@@ -2561,7 +2555,7 @@ def streaming_crawl_pipeline(
     if fetcher is not None and seed_urls is not None:
         raw_pending = seed_urls.select("url")
         if discovered_dir is not None:
-            found = _read_parquet_or_none(spark, discovered_dir)
+            found = _read_parquet_or_none(spark, discovered_dir, "url string")
             if found is not None:
                 raw_pending = raw_pending.unionByName(found.select("url"))
         pending = (
@@ -2569,7 +2563,7 @@ def streaming_crawl_pipeline(
             .withColumn("url_path", F.parse_url(F.col("url"), F.lit("PATH")))
             .dropDuplicates(["url_norm"])
         )
-        seen = _read_parquet_or_none(spark, frontier_dir)
+        seen = _read_parquet_or_none(spark, frontier_dir, "url_norm string")
         if seen is not None:
             pending = pending.join(
                 seen.select("url_norm"), "url_norm", "left_anti"
@@ -2603,7 +2597,7 @@ def streaming_crawl_pipeline(
         ledger_dir = f"{frontier_dir.rstrip('/')}_domain_ledger"
         live = None  # (domain, ts): still-cooling-relevant ledger rows
         if polite:
-            ledger = _read_parquet_or_none(spark, ledger_dir)
+            ledger = _read_parquet_or_none(spark, ledger_dir, "domain string, ts double")
             if ledger is not None:
                 # entries older than now - delay(domain) can never gate
                 # a future claim (ts only gets staler) — drop them
@@ -2830,7 +2824,7 @@ def streaming_paragraph_dedup(
                 F.split(F.col("text"), "\\Q" + delim + "\\E", -1)
             ).alias("pos", "para"),
         ).withColumn("phash", F.xxhash64("para"))
-        seen = _read_parquet_or_none(spark, store_dir)
+        seen = _read_parquet_or_none(spark, store_dir, "phash long")
         if seen is not None:
             seen = seen.filter(F.col("batch_id") != bid).select("phash")
         # first occurrence WITHIN the fire survives; later in-fire
