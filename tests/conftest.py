@@ -35,3 +35,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """count_jobs(fn) -> (fn(), number of Spark jobs started while it ran).
+
+    Job ids come from the status store (statusTracker().getJobInfo),
+    scanned upward from the newest job without a job group, after the
+    listener bus has drained. No job group is needed, so the jobs a
+    streaming query runs on its own thread (foreachBatch) are counted,
+    and it works with spark.ui.enabled=false."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def last_job_id() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        i = max(tracker.getJobIdsForGroup(None), default=-1)
+        while tracker.getJobInfo(i + 1) is not None:
+            i += 1
+        return i
+
+    def count(fn):
+        start = last_job_id()
+        out = fn()
+        return out, last_job_id() - start
+
+    return count

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from unstract_spark.mock import doc_fingerprint, mock_answer_hash, mock_answer_raw
 from unstract_spark.operators.prompts import (
     coerce,
+    coerce_number,
     extract_structured_mock,
     single_pass_mock,
     with_mock_answers,
@@ -31,6 +32,10 @@ MAX_MD5 = 1 + len(SPECS)
 
 def _md5_calls(plan) -> int:
     return plan.toString().count("md5(")
+
+
+def _regexp_extract_calls(plan) -> int:
+    return plan.toString().count("regexp_extract(")
 
 
 def _optimized(df):
@@ -67,6 +72,33 @@ def test_extract_structured_mock_hashes_each_prompt_once(spark):
     out = extract_structured_mock(_docs(spark), SPECS)
     assert out.columns == ["doc_id", "invoice_no", "total", "vendor"]
     assert _md5_calls(_optimized(out)) <= MAX_MD5
+
+
+def test_number_prompt_extracts_its_number_once(spark):
+    n_number = sum(s["enforce_type"] == "number" for s in SPECS)
+    out = extract_structured_mock(_docs(spark), SPECS)
+    assert _regexp_extract_calls(_optimized(out)) <= n_number
+    docs = _docs(spark).withColumn("fp", doc_fingerprint(F.col("text")))
+    assert _regexp_extract_calls(_optimized(with_mock_answers(docs, SPECS, "fp"))) <= n_number
+
+
+def test_coerce_number_values_match_the_branch_per_multiplier_form(spark):
+    raws = ["NA", "", None, "-0", "1.5 million", "2 thousand", "3 billion", "abc", "7"]
+    df = spark.createDataFrame([(i, r) for i, r in enumerate(raws)], "i int, raw string")
+    raw = F.col("raw")
+    num = F.regexp_extract(raw, r"(-?\d+(?:\.\d+)?)", 1)
+    base = F.when(num == "", None).otherwise(num.cast("double"))
+    lower = F.lower(raw)
+    branches = (
+        F.when(lower.rlike("million"), base * 1e6)
+        .when(lower.rlike("thousand"), base * 1e3)
+        .when(lower.rlike("billion"), base * 1e9)
+        .otherwise(base)
+    )
+    got = df.select("i", coerce_number(raw).alias("new"), branches.alias("old")).collect()
+    # repr tells -0.0 from 0.0
+    assert [repr(r.new) for r in sorted(got)] == [repr(r.old) for r in sorted(got)]
+    assert [r.new for r in sorted(got)] == [None, None, None, -0.0, 1.5e6, 2e3, 3e9, None, 7.0]
 
 
 def test_single_pass_mock_hashes_each_answer_once_and_matches_inline(spark):

@@ -669,7 +669,7 @@ def test_streaming_similarity_two_fires_match_batch_planner(spark, tmp_path, sf_
     )
     assert len(plans2) == 1  # only the NEW files fired
 
-    streamed = sorted(map(tuple, spark.read.parquet(out).collect()))
+    streamed = sorted(map(tuple, spark.read.parquet(out).drop("batch_id").collect()))
     batch_queries = q1.unionByName(q2).selectExpr(
         "vec_id as query_id", "embedding as query_vec"
     )
@@ -700,6 +700,46 @@ def test_streaming_similarity_planner_flips_per_batch(spark, tmp_path, sf_dir):
     assert [p.strategy for p in plans] != ["brute_force"]
     assert plans[0].strategy in ("lsh", "ivf")
     assert spark.read.parquet(str(tmp_path / "o")).count() > 0
+
+
+def test_streaming_similarity_replay_overwrites_its_epoch(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """A fire that crashes after writing its results is replayed on
+    the same checkpoint: the output must equal an uninterrupted run,
+    not hold the crashed attempt's rows twice."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import DataFrameWriter
+
+    from unstract_spark.streaming.incremental import streaming_similarity_pipeline
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(120)
+    index = emb.selectExpr("vec_id", "embedding")
+    src = str(tmp_path / "q")
+    emb.limit(5).selectExpr("vec_id + 5000 as vec_id", "embedding").write.parquet(src)
+
+    def run(name):
+        out = str(tmp_path / name / "out")
+        streaming_similarity_pipeline(
+            spark, src, str(tmp_path / name / "ckpt"), index, dim=64,
+            out_dir=out, k=3, index_rows=120,
+        )
+        return sorted(map(tuple, spark.read.parquet(out).drop("batch_id").collect()))
+
+    parquet = DataFrameWriter.parquet
+
+    def crash_after_write(self, path, *args, **kwargs):
+        parquet(self, path, *args, **kwargs)
+        if "crashed" in path:
+            raise RuntimeError("crash after the results write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_after_write)
+    with pytest.raises(StreamingQueryException):
+        run("crashed")
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    replayed = run("crashed")
+    assert len(replayed) == 15 == len(set(r[:2] for r in replayed))
+    assert replayed == run("clean")
 
 
 def test_streaming_queue_consumer_union_equals_batch_and_redelivers(

@@ -40,15 +40,16 @@ def coerce_number(raw: Column) -> Column:
     Fast path of the reference's second-LLM number extraction
     (legacy_executor.py:1499-1520): regexp pull + word-multiplier.
     """
+    # `num` is read once ('' try-casts to NULL); x * 1.0 == x, -0.0 too
     num = F.regexp_extract(raw, r"(-?\d+(?:\.\d+)?)", 1)
-    base = F.when(num == "", None).otherwise(num.cast("double"))
     lower = F.lower(raw)
-    return (
-        F.when(lower.rlike("million"), base * 1e6)
-        .when(lower.rlike("thousand"), base * 1e3)
-        .when(lower.rlike("billion"), base * 1e9)
-        .otherwise(base)
+    multiplier = (
+        F.when(lower.rlike("million"), 1e6)
+        .when(lower.rlike("thousand"), 1e3)
+        .when(lower.rlike("billion"), 1e9)
+        .otherwise(1.0)
     )
+    return num.try_cast("double") * multiplier
 
 
 def coerce_boolean(raw: Column) -> Column:

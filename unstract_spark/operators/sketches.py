@@ -40,7 +40,7 @@ beyond-reference training-data toolkit, alongside dedup and ANN.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 # hash space: 15 hex chars = 60 bits
 KMV_M = float(1 << 60)
@@ -126,8 +126,6 @@ def kmv_sketch_by_group(
     batch per-group k-min member), so the shuffle carries
     <= batches*groups*k rows; the tail is one distinct + per-group
     row_number cut."""
-    from pyspark.sql import Window
-
     gtype = df.schema[group_col].dataType.simpleString()
     hashed = df.where(F.col(col).isNotNull()).select(
         F.col(group_col).alias("g"), md5_hash60(F.col(col)).alias("h")
@@ -146,12 +144,24 @@ def kmv_sketch_by_group(
             yield d.groupby("g", sort=False, dropna=False).head(k)
 
     cand = hashed.mapInPandas(batch_topk, f"g {gtype}, h long")
-    w = Window.partitionBy("g").orderBy("h")
+    return kmv_merge_by_group(cand, group_col="g", k=k).select(
+        F.col("g").alias(group_col), "h"
+    )
+
+
+def kmv_merge_by_group(*sketches: DataFrame, group_col: str, k: int):
+    """kmv_merge per group: the k smallest distinct `h` of each
+    `group_col` value across the (group, h) inputs — one distinct and
+    one row_number window per group, in the JVM."""
+    out = sketches[0]
+    for s in sketches[1:]:
+        out = out.unionByName(s)
+    w = Window.partitionBy(group_col).orderBy("h")
     return (
-        cand.distinct()
+        out.distinct()
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
-        .select(F.col("g").alias(group_col), "h")
+        .select(group_col, "h")
     )
 
 
@@ -226,8 +236,6 @@ def kmv_row_sample_by_group(
     principle prune a tied row the full (h, cols) order would keep —
     the same collision-free-md5 assumption every fingerprint family
     in this engine already makes)."""
-    from pyspark.sql import Window
-
     if bad := [c for c in cols if c in ("g", "h")]:
         raise ValueError(
             f"payload columns {bad} collide with the sampler's internal "
@@ -352,8 +360,6 @@ def range_split_plan(
     through raw, so the plan hash-gates exactly. Duplicate boundary
     values yield empty middle splits (absent rows), identically in
     the twin."""
-    from pyspark.sql import Window
-
     smp = kmv_row_sample(df, key_col, [value_col], k)
     # rank AND size from ONE window pass over the <= k sample rows so
     # the sample's lineage (a full scan + hash) executes exactly once

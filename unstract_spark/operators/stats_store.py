@@ -20,13 +20,14 @@ deterministic), and answers planning questions from disk:
 - broadcast_advice(table, threshold_bytes) — n_rows·avg_row_bytes vs
   the autoBroadcastJoinThreshold-style knob.
 
-Layout: <path>/sketch/table=<t>/column=<c>/*.parquet (the h rows) and
-<path>/meta/table=<t>/column=<c>/*.parquet (one row: n_rows,
-n_nonnull, n_sketch, kth_hash, k, avg_len). analyze() is one scan per
-column (ANALYZE is offline/maintenance work — the scans it spends are
-the ones every future planning decision saves); per-shard sketches
-from different analyze() runs of table PARTITIONS could be kmv_merge'd,
-but the store keeps whole-table analyze for auditability.
+Layout: <path>/{sketch,meta,heavy}/table=<t>/column=<c>/*.parquet —
+the h rows; one (n_rows, n_nonnull, n_sketch, kth_hash, k, avg_len)
+row; the top keys. `_write` is the one writer (partitionBy column,
+dynamic overwrite: re-analyzing some columns keeps the others).
+analyze() and streaming_stats_pipeline compute every column in one
+grouped pass over the (column, value) unpivot and both write through
+`publish`. ANALYZE is offline work: the scan it spends is the one
+every future planning decision saves.
 
 Reference anchor: the reference platform has no optimizer surface (its
 joins are fixed-shape file-pipeline anti-joins); this is part of the
@@ -37,10 +38,35 @@ data for a sharper sampled-key estimate when a scan is affordable).
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from unstract_spark.operators import sketches
+from unstract_spark.schemas import quote_ident
+
+
+def column_values(df: DataFrame, columns: list[str]) -> DataFrame:
+    """(column, v): each of `columns` unpivoted into one string column,
+    one row per input row and column (NULLs kept)."""
+    as_str = df.select(
+        *[F.col(quote_ident(c)).cast("string").alias(c) for c in columns]
+    )
+    return as_str.unpivot(
+        [], [F.col(quote_ident(c)) for c in columns], "column", "v"
+    )
+
+
+def column_counters(values: DataFrame) -> DataFrame:
+    """(column, n_rows, n_nonnull, len_sum) of `column_values` rows in
+    one aggregate. len_sum, the summed rendered length, is decimal:
+    counters of disjoint batches add up exactly to their union's."""
+    length = F.coalesce(F.length("v"), F.lit(0)).cast("decimal(18,6)")
+    return values.groupBy("column").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count("v").alias("n_nonnull"),
+        F.sum(length).alias("len_sum"),
+    )
 
 
 class TableStatsStore:
@@ -53,9 +79,50 @@ class TableStatsStore:
         self.path = path
 
     def _dir(self, kind: str, table: str, column: str) -> str:
+        # column= escaped as Spark's partition writer escapes it
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+        column = utils.ExternalCatalogUtils.escapePathName(column)
         return os.path.join(
             self.path, kind, f"table={table}", f"column={column}"
         )
+
+    def _write(
+        self, kind: str, table: str, columns: list[str], frame: DataFrame
+    ) -> None:
+        """Replace the `kind` rows of `columns` with `frame`'s, partitioned
+        by its `column` field; other columns keep theirs. A column with no
+        rows (all NULL) writes no partition, so its directory is cleared
+        first and left empty."""
+        for c in columns:
+            shutil.rmtree(self._dir(kind, table, c), ignore_errors=True)
+        frame.write.partitionBy("column").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(os.path.join(self.path, kind, f"table={table}"))
+        for c in columns:
+            os.makedirs(self._dir(kind, table, c), exist_ok=True)
+
+    def publish(
+        self, table: str, columns: list[str], k: int, acc: DataFrame
+    ) -> None:
+        """Write the sketch and meta rows of `columns` from `acc`
+        (column, h, n_rows, n_nonnull, len_sum): each column's k-min
+        hashes carrying its counters, one NULL-h row for an all-NULL
+        column. At most k rows per column: meta aggregates unshuffled."""
+        self._write(
+            "sketch", table, columns,
+            acc.where(F.col("h").isNotNull()).select("h", "column"),
+        )
+        meta = acc.coalesce(1).groupBy("column").agg(
+            F.max("n_rows").alias("n_rows"),
+            F.max("n_nonnull").alias("n_nonnull"),
+            F.count("h").alias("n_sketch"),
+            F.max("h").alias("kth_hash"),
+            F.lit(k).cast("long").alias("k"),
+            F.try_divide(
+                F.max("len_sum").cast("double"), F.max("n_nonnull")
+            ).alias("avg_len"),
+        )
+        self._write("meta", table, columns, meta)
 
     def analyze(
         self,
@@ -65,7 +132,7 @@ class TableStatsStore:
         k: int = 256,
         heavy_n: int = 8,
     ) -> None:
-        """Compute and persist stats for `columns` (one scan each).
+        """Compute and persist stats for `columns` in one grouped pass.
 
         Alongside the sketch and meta row, the top `heavy_n` keys by
         exact count (ties by key string — deterministic) land under
@@ -73,51 +140,26 @@ class TableStatsStore:
         total is the 'will this shuffle partition melt?' number, and
         it must come from statistics, not from running the query the
         plan is for."""
-        for c in columns:
-            col = F.col(c)
-            sk = sketches.kmv_sketch(
-                df.select(col.cast("string").alias("_s")), "_s", k
-            )
-            sk.write.mode("overwrite").parquet(self._dir("sketch", table, c))
-            heavy = (
-                df.filter(col.isNotNull())
-                .groupBy(col.cast("string").alias("key"))
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .orderBy(F.col("cnt").desc(), F.col("key").asc())
-                .limit(heavy_n)
-            )
-            heavy.coalesce(1).write.mode("overwrite").parquet(
-                self._dir("heavy", table, c)
-            )
-            sk_back = self.spark.read.parquet(self._dir("sketch", table, c))
-            meta = df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count(col).alias("n_nonnull"),
-                F.sum(
-                    F.length(col.cast("string")).cast("decimal(18,6)")
-                ).alias("_len_sum"),
-            ).crossJoin(
-                F.broadcast(
-                    sk_back.agg(
-                        F.count(F.lit(1)).alias("n_sketch"),
-                        F.max("h").alias("kth_hash"),
-                    )
-                )
-            ).select(
-                "n_rows",
-                "n_nonnull",
-                "n_sketch",
-                "kth_hash",
-                F.lit(k).cast("long").alias("k"),
-                F.when(F.col("n_nonnull") == 0, F.lit(None).cast("double"))
-                .otherwise(
-                    F.col("_len_sum").cast("double") / F.col("n_nonnull")
-                )
-                .alias("avg_len"),
-            )
-            meta.coalesce(1).write.mode("overwrite").parquet(
-                self._dir("meta", table, c)
-            )
+        columns = list(dict.fromkeys(columns))
+        values = column_values(df, columns)
+        by_key = Window.partitionBy("column").orderBy(F.desc("cnt"), "key")
+        heavy = (
+            values.groupBy("column", F.col("v").alias("key"))
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .where(F.col("key").isNotNull())
+            .withColumn("_rn", F.row_number().over(by_key))
+            .where(F.col("_rn") <= heavy_n)
+            .drop("_rn")
+        )
+        self._write("heavy", table, columns, heavy)
+        sk = sketches.kmv_sketch_by_group(values, "column", "v", k)
+        # at most k rows per column, cached: publish's two writes share
+        # one scan and one sketch
+        acc = column_counters(values).join(sk, "column", "left").cache()
+        try:
+            self.publish(table, columns, k, acc)
+        finally:
+            acc.unpersist()
 
     def _meta(self, table: str, column: str):
         rows = self.spark.read.parquet(
@@ -208,7 +250,7 @@ class TableStatsStore:
 
     def heavy_keys(self, table: str, column: str) -> list:
         """The persisted top keys, (key, cnt) by cnt desc / key asc."""
-        rows = self.spark.read.parquet(
+        rows = self.spark.read.schema("key string, cnt long").parquet(
             self._dir("heavy", table, column)
         ).collect()
         return sorted(rows, key=lambda r: (-r.cnt, r.key))

@@ -176,6 +176,10 @@ def _davg(col, scale: int = 4):
 
 # Per-round manual input: queries whose semantics changed this round.
 _CHANGED_THIS_ROUND = [
+    # analyze() runs one grouped pass for all columns; re-gate.
+    "sk_stats_store",
+    "sk_join_plan",
+    "sk_plan_unknown",
     # r14: repetition_features moved from the two-exchange grouped
     # spelling to the per-row sorted-array run-length reduction;
     # output identical, re-gate.

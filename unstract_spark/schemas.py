@@ -11,6 +11,12 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+
+def quote_ident(name: str) -> str:
+    """`name` as a backtick-quoted SQL/DDL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # --- file catalog (reference: endpoint_v2/source.py:891-912 FileHash) ---
 FILES = T.StructType(
     [

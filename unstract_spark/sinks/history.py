@@ -163,9 +163,9 @@ class FileHistoryStore:
     def _analyze(self) -> None:
         """ANALYZE-on-write: refresh the ledger's persisted stats so
         the NEXT run's joins are priced from disk with zero read-side
-        scans. A pass per analyzed column over the just-committed
-        table — the offline cost the stats store's contract budgets
-        for. The payload columns (file_path/result/metadata) are
+        scans. One grouped pass over the just-committed table for all
+        analyzed columns — the offline cost the stats store's contract
+        budgets for. The payload columns (file_path/result/metadata) are
         analyzed alongside the key so the replay join's execution
         repricing (stats_store.apply_using_join, r12 verdict #2) sees
         REAL widths for the rows it would broadcast — a ledger with

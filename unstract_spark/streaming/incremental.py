@@ -52,6 +52,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from unstract_spark.schemas import quote_ident
+
 
 class StaleCheckpointError(RuntimeError):
     """Resuming a checkpoint whose run-base lineage is OLDER than
@@ -258,11 +260,6 @@ def _col_type(frame: DataFrame, col: str) -> str:
     """DDL type of `col` in `frame`, for state schemas that keep a
     caller's column type."""
     return frame.schema[col].dataType.simpleString()
-
-
-def _quote(name: str) -> str:
-    """`name` as a backtick-quoted SQL/DDL identifier."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _parquet_stream(
@@ -577,7 +574,8 @@ def streaming_similarity_pipeline(
 ) -> list:
     """Streaming similarity_top_k: each AvailableNow fire runs the NEW
     query vectors through the cost-based ANN planner against a fixed
-    index, appending (query_id, vec_id, score, rank) parquet results.
+    index, writing (query_id, vec_id, score, rank) parquet results to
+    `out_dir/batch_id=N`.
 
     The planner prices each micro-batch separately — a trickle of 5
     queries gets the exact brute-force plan, a 100k-query backfill
@@ -585,10 +583,11 @@ def streaming_similarity_pipeline(
     streaming payoff of having a cost model at all: strategy tracks the
     ACTUAL batch size instead of a config frozen at stream start. The
     index row count is computed once outside the loop (one metadata
-    scan), not per fire. Results append per batch; the stream
-    checkpoint guarantees each query file is planned exactly once, and
-    a retried batch overwrites deterministically (same plan, same
-    rows). Returns the TopkPlan per fired batch for observability.
+    scan), not per fire. Exactly-once: the module's fire discipline
+    (`_drain_fires`), so a batch replayed after a crash overwrites its
+    own `batch_id=` partition (same plan, same rows) instead of
+    appending a second copy. Returns the TopkPlan per fired batch for
+    observability.
 
     Source is a parquet directory in the embeddings shape
     (`vec_id`/`embedding` by default) — at scale this is the drop zone
@@ -599,31 +598,28 @@ def streaming_similarity_pipeline(
     n = index_rows if index_rows is not None else index.count()
     plans: list = []
 
-    def score_batch(batch: DataFrame, _epoch: int) -> None:
+    def fire(batch: DataFrame, bid: int) -> None:
         queries = batch.select(
             F.col(query_id).alias("query_id"),
             F.col(query_vec).alias("query_vec"),
         )
-        q_count = queries.count()
-        if q_count == 0:
-            return
         out, plan = similarity_topk(
             queries,
             index,
             dim,
             k=k,
             index_rows=n,
-            n_queries=q_count,
+            n_queries=queries.count(),
             exact_budget=exact_budget,
             index_id="vec_id",
             index_vec="embedding",
         )
-        out.write.mode("append").parquet(out_dir)
+        out.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
         plans.append(plan)
 
     schema = spark.read.parquet(source_dir).schema
     stream = _parquet_stream(spark, source_dir, schema, 1000)
-    _drain(stream, score_batch, checkpoint_dir)
+    _drain_fires(stream, checkpoint_dir, (out_dir,), fire)
     return plans
 
 
@@ -1179,7 +1175,7 @@ def streaming_feed_pipeline(
             | (F.col("published_epoch") > F.col("hwm_epoch"))
         ).select(
             "feed_id", "format", "link", "entry_id", "published_epoch"
-        ).localCheckpoint(eager=True)
+        )
         fresh.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
         new_state = (
             entries.select("feed_id", "published_epoch")
@@ -1191,7 +1187,6 @@ def streaming_feed_pipeline(
             )
             .groupBy("feed_id")
             .agg(F.max("published_epoch").alias("hwm_epoch"))
-            .localCheckpoint(eager=True)
         )
         new_state.write.mode("overwrite").parquet(
             f"{state_dir}/batch_id={bid}"
@@ -1385,7 +1380,7 @@ def streaming_pattern_pipeline(
         "seq_len": "bigint", "first_match": "string", "tail": "string",
     }
     # the state's key column keeps the source's user-id type
-    u = _quote(user_col)
+    u = quote_ident(user_col)
     state_ddl = f"{u} {_col_type(stream, user_col)}, " + ", ".join(
         f"{c} {t}" for c, t in state_types.items()
     )
@@ -1395,15 +1390,15 @@ def streaming_pattern_pipeline(
         args[f"t{i}"], args[f"c{i}"] = etype, ch
         whens += f" WHEN :t{i} THEN :c{i}"
     # an event type outside code_map codes as 'x'
-    code = f"CASE {_quote(type_col)}{whens} ELSE 'x' END" if whens else "'x'"
+    code = f"CASE {quote_ident(type_col)}{whens} ELSE 'x' END" if whens else "'x'"
     tail = "element_at(split(_combined, :pat, -1), -1)"
     if max_tail is not None:
         args["max_tail"] = int(max_tail)
         tail = f"right({tail}, :max_tail)"
     sql = f"""
         WITH coded AS (
-          SELECT {u} AS _u, named_struct('_ts', {_quote(ts_col)},
-            '_id', {_quote(id_col)},
+          SELECT {u} AS _u, named_struct('_ts', {quote_ident(ts_col)},
+            '_id', {quote_ident(id_col)},
             '_c', {code}) AS _e,
             {", ".join(f"CAST(NULL AS {t}) AS {c}" for c, t in state_types.items())}
           FROM _pattern_batch
@@ -2220,112 +2215,67 @@ def streaming_stats_pipeline(
     schema: str = "doc_id long, text string",
 ) -> int:
     """Incremental ANALYZE: keep a TableStatsStore FRESH as data
-    streams in, never re-scanning history. Each fire sketches the new
-    rows' columns (sketches.kmv_sketch), kmv_merges with the
-    accumulated per-column sketch, adds the additive meta counters
-    (n_rows, n_nonnull, rendered-length sum — decimal, exact), writes
-    the cumulative accumulator snapshot, and PUBLISHES the result
-    into the TableStatsStore layout — so stats_store.distinct_estimate
-    / join_estimate / broadcast_advice answer from statistics that
-    are exactly what a batch analyze() of everything-so-far would
-    have produced (pytest pins this: merged sketch == sketch of the
-    union by the mergeability law; counters add exactly).
+    streams in, never re-scanning history. Each fire adds the new rows'
+    counters (stats_store.column_counters: n_rows, n_nonnull and the
+    exact decimal rendered-length sum) to the accumulated ones, folds
+    their hashes into each column's accumulated k-min sketch in the
+    JVM (sketches.kmv_merge_by_group), writes the accumulator once,
+    and publishes it with TableStatsStore.publish — so the store
+    answers exactly as a batch analyze() of everything so far
+    (mergeability; exact addition). All columns share one unpivot, so
+    a fire's Spark jobs do not grow with the column count.
 
-    State per column is k hash longs + 3 counters however much
-    history has streamed. Exactly-once: the accumulator follows the
-    module's fire discipline (`_drain_fires`); the publish step is a
-    pure function of the committed accumulator, so a crash between
-    commit and publish republishes identically on replay. Returns
-    fired batches."""
+    State per column is k hash longs + 3 counters however much history
+    has streamed; an all-NULL column keeps its counters on one row with
+    a NULL hash. Exactly-once: the accumulator follows the module's
+    fire discipline (`_drain_fires`), and the publish is a pure function
+    of the committed accumulator, read back with its schema, so a crash
+    between commit and publish republishes identically on replay.
+    Returns fired batches."""
     from unstract_spark.operators import sketches
+    from unstract_spark.operators.stats_store import (
+        TableStatsStore,
+        column_counters,
+        column_values,
+    )
 
+    columns = list(dict.fromkeys(columns))
+    store = TableStatsStore(spark, stats_path)
     # the column= path partition carries the column name on read
     acc_ddl = (
         "h long, n_rows long, n_nonnull long, len_sum decimal(18,6),"
         " column string"
     )
 
-    def _publish(col: str, sk: DataFrame, meta_row) -> None:
-        sdir = os.path.join(stats_path, "sketch", f"table={table}",
-                             f"column={col}")
-        mdir = os.path.join(stats_path, "meta", f"table={table}",
-                             f"column={col}")
-        sk.select("h").write.mode("overwrite").parquet(sdir)
-        n_nonnull = meta_row["n_nonnull"]
-        avg = (
-            None
-            if n_nonnull == 0
-            else float(meta_row["len_sum"]) / float(n_nonnull)
-        )
-        spark.createDataFrame(
-            [(
-                meta_row["n_rows"], n_nonnull, meta_row["n_sketch"],
-                meta_row["kth_hash"], k, avg,
-            )],
-            "n_rows long, n_nonnull long, n_sketch long, "
-            "kth_hash long, k long, avg_len double",
-        ).coalesce(1).write.mode("overwrite").parquet(mdir)
-
     def fire(batch: DataFrame, bid: int) -> None:
-        old = _read_prior_snapshot(spark, acc_dir, bid, acc_ddl)
-        for col in columns:
-            c = F.col(col)
-            bsk = sketches.kmv_sketch(
-                batch.select(c.cast("string").alias("_s")), "_s", k
+        old = _read_prior_snapshot(spark, acc_dir, bid, acc_ddl).where(
+            F.col("column").isin(columns)
+        )
+        values = column_values(batch, columns)
+        # one counter row per column on each side: added on one partition
+        prior = old.coalesce(1).groupBy("column").agg(
+            *[F.max(c).alias(c) for c in ("n_rows", "n_nonnull", "len_sum")]
+        )
+        total = (
+            column_counters(values).unionByName(prior).coalesce(1)
+            .groupBy("column").agg(
+                F.sum("n_rows").alias("n_rows"),
+                F.sum("n_nonnull").alias("n_nonnull"),
+                F.sum("len_sum").cast("decimal(18,6)").alias("len_sum"),
             )
-            counts = batch.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count(c).alias("n_nonnull"),
-                F.coalesce(
-                    F.sum(
-                        F.length(c.cast("string")).cast("decimal(18,6)")
-                    ),
-                    F.lit(0).cast("decimal(18,6)"),
-                ).alias("len_sum"),
-            ).collect()[0]
-            n_rows, n_nonnull = counts["n_rows"], counts["n_nonnull"]
-            len_sum = counts["len_sum"]
-            oc = old.filter(F.col("column") == col)
-            prev = oc.agg(
-                F.max("n_rows").alias("n_rows"),
-                F.max("n_nonnull").alias("n_nonnull"),
-                F.max("len_sum").alias("len_sum"),
-            ).collect()[0]
-            if prev["n_rows"] is not None:
-                n_rows += prev["n_rows"]
-                n_nonnull += prev["n_nonnull"]
-                len_sum = len_sum + prev["len_sum"]
-            merged = sketches.kmv_merge(
-                bsk, oc.select("h").where(F.col("h").isNotNull()), k=k
-            ).localCheckpoint(eager=True)
-            est = merged.agg(
-                F.count(F.lit(1)).alias("n_sketch"),
-                F.max("h").alias("kth_hash"),
-            ).collect()[0]
-            # snap holds only data fields (column= is the path)
-            snap = merged.select(
-                "h",
-                F.lit(n_rows).cast("long").alias("n_rows"),
-                F.lit(n_nonnull).cast("long").alias("n_nonnull"),
-                F.lit(len_sum).cast("decimal(18,6)").alias("len_sum"),
-            )
-            if est["n_sketch"] == 0:
-                # an all-null column still accumulates its row
-                # counters: carry them on one null-hash sentinel row
-                # (excluded from future merges by the isNotNull filter)
-                snap = spark.createDataFrame(
-                    [(None, n_rows, n_nonnull, len_sum)],
-                    "h long, n_rows long, "
-                    "n_nonnull long, len_sum decimal(18,6)",
-                )
-            snap.write.mode("overwrite").parquet(
-                f"{acc_dir}/batch_id={bid}/column={col}"
-            )
-            _publish(col, merged, {
-                "n_rows": n_rows, "n_nonnull": n_nonnull,
-                "len_sum": len_sum, "n_sketch": est["n_sketch"],
-                "kth_hash": est["kth_hash"],
-            })
+        )
+        hashes = values.where(F.col("v").isNotNull()).select(
+            "column", sketches.md5_hash60(F.col("v")).alias("h")
+        )
+        sk = sketches.kmv_merge_by_group(
+            hashes, old.where(F.col("h").isNotNull()).select("column", "h"),
+            group_col="column", k=k,
+        )
+        path = f"{acc_dir}/batch_id={bid}"
+        total.join(sk, "column", "left").write.partitionBy("column").mode(
+            "overwrite"
+        ).parquet(path)
+        store.publish(table, columns, k, spark.read.schema(acc_ddl).parquet(path))
         _prune_superseded(acc_dir, bid)
 
     stream = _parquet_stream(spark, source_dir, schema)
@@ -3073,25 +3023,14 @@ def streaming_drift_monitor(
         fire_tot = hb.groupBy("source").agg(
             F.sum("o").cast("long").alias("fire_docs")
         )
-        if _prior_bids(state_dir, bid):
-            drift = profile.chisq_drift(hb, old)
-        else:  # first fire, told by the listing: no baseline, NULL
-            drift = fire_tot.select(
-                "source", F.lit(None).cast("long").alias("chisq_micro")
-            )
-        report = fire_tot.join(drift, "source", "left").select(
-            "source", "chisq_micro", "fire_docs"
-        ).localCheckpoint(eager=True)
+        # against an empty baseline (first fire) chisq_drift is NULL
+        report = fire_tot.join(
+            profile.chisq_drift(hb, old), "source", "left"
+        ).select("source", "chisq_micro", "fire_docs")
         report.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
-        new_state = (
-            hb.unionByName(old)
-            .groupBy("source", "bucket")
-            .agg(F.sum("o").cast("long").alias("o"))
-            .localCheckpoint(eager=True)
-        )
-        new_state.write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={bid}"
-        )
+        hb.unionByName(old).groupBy("source", "bucket").agg(
+            F.sum("o").cast("long").alias("o")
+        ).write.mode("overwrite").parquet(f"{state_dir}/batch_id={bid}")
         _prune_superseded(state_dir, bid)
 
     stream = _parquet_stream(
