@@ -62,3 +62,23 @@ def count_jobs(spark):
         return out, last_job_id() - start
 
     return count
+
+
+@pytest.fixture(scope="session")
+def count_forks():
+    """count_forks(fn) -> (fn(), processes the machine created while it ran).
+
+    The delta of /proc/stat's `processes`, which counts every fork and
+    every new thread on the machine, so a shell-out (one process and one
+    reader thread) counts two."""
+
+    def processes() -> int:
+        with open("/proc/stat") as f:
+            return next(int(line.split()[1]) for line in f if line.startswith("processes "))
+
+    def count(fn):
+        start = processes()
+        out = fn()
+        return out, processes() - start
+
+    return count

@@ -106,3 +106,28 @@ def test_stats_jobs_do_not_grow_with_columns(spark, tmp_path, count_jobs, four_c
     _, analyze1 = count_jobs(lambda: store.analyze(union, "docs", ["text"], k=K))
     _, analyze4 = count_jobs(lambda: store.analyze(union, "docs", COLUMNS, k=K))
     assert analyze1 == analyze4, (analyze1, analyze4)
+
+
+def test_stream_published_store_plans_without_skew_data(spark, four_columns):
+    """The stream writes no heavy/ rows: its columns read as skew
+    unknown, and every plan over them prices without skew data and
+    joins to the same rows."""
+    live, _, _ = four_columns
+    assert live.heavy_keys("docs", "kind") == []
+    assert live.top_share_ppm("docs", "kind") == 0
+    assert live.join_plan("docs", "kind", "docs", "n")["strategy"] == "broadcast_a"
+    left = spark.range(12).select(
+        F.element_at(F.array(F.lit("a"), F.lit("b"), F.lit("z")), (F.col("id") % 3 + 1).cast("int")).alias("kind"),
+        F.col("id").alias("lid"),
+    )
+    right = _docs(spark, 0, 150).select("kind", "doc_id")
+    want = sorted(left.join(right, ["kind"]).collect())
+    plans = [
+        live.plan_against_unknown("docs", "kind"),
+        live.plan_against_unknown("docs", "kind", broadcast_threshold_bytes=0),
+        live.plan_against_unknown("docs", "kind", broadcast_threshold_bytes=0, skew_threshold_ppm=0),
+    ]
+    assert [p["strategy"] for p in plans] == ["broadcast_known", "shuffle", "shuffle_salted"]
+    assert all(p["share_ppm"] == 0 for p in plans)
+    for plan in plans:
+        assert sorted(live.apply_using_join(left, right, ["kind"], plan).collect()) == want, plan

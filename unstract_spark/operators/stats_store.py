@@ -249,9 +249,16 @@ class TableStatsStore:
         return float(m.n_rows) * float(m.avg_len) <= threshold_bytes
 
     def heavy_keys(self, table: str, column: str) -> list:
-        """The persisted top keys, (key, cnt) by cnt desc / key asc."""
+        """The persisted top keys, (key, cnt) by cnt desc / key asc.
+        [] when the column has no heavy/ directory: skew unknown. The
+        stream publishes sketch and meta rows only (exact top-k counts
+        do not merge across fires), so plans over a stream-published
+        column price it without skew data."""
+        path = self._dir("heavy", table, column)
+        if not os.path.isdir(path):
+            return []
         rows = self.spark.read.schema("key string, cnt long").parquet(
-            self._dir("heavy", table, column)
+            path
         ).collect()
         return sorted(rows, key=lambda r: (-r.cnt, r.key))
 
