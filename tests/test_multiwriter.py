@@ -311,7 +311,7 @@ def test_object_store_put_if_absent_semantics():
     ifGenerationMatch=0 guarantee: first PUT wins with its payload
     atomic, second PUT on the same key is rejected with nothing
     changed."""
-    from unstract_spark.sinks.manifest import FakeObjectStoreBackend
+    from tests.fakes import FakeObjectStoreBackend
 
     b = FakeObjectStoreBackend()
     assert b.put_if_absent("v000.json", b"one") is True
@@ -328,7 +328,7 @@ def test_manifest_on_object_store_concurrent_merges_lose_nothing(
     lock-free merges, versions advance one per commit, and losers
     retried (version count >= commit count proves each commit burned a
     distinct conditional PUT)."""
-    from unstract_spark.sinks.manifest import FakeObjectStoreBackend
+    from tests.fakes import FakeObjectStoreBackend
 
     bucket = FakeObjectStoreBackend()
     store = FileHistoryStore(spark, str(tmp_path / "h"), backend=bucket)
@@ -353,10 +353,8 @@ def test_manifest_on_object_store_crash_orphan_invisible(spark, tmp_path):
     """Crash safety is backend-independent: a segment written but never
     manifested through the bucket is invisible to readers and
     vacuumable."""
-    from unstract_spark.sinks.manifest import (
-        FakeObjectStoreBackend,
-        ManifestTable,
-    )
+    from tests.fakes import FakeObjectStoreBackend
+    from unstract_spark.sinks.manifest import ManifestTable
 
     bucket = FakeObjectStoreBackend()
     path = str(tmp_path / "h")

@@ -14,6 +14,8 @@
    identifier-shaped string constant (getattr / registry lookups).
    Functions registered by a `register*` decorator are used by the
    registry that decorator fills.
+3. No top-level def or class in `unstract_spark/` has `fake` in its
+   name (any case): test doubles live in `tests/fakes.py`.
 """
 
 from __future__ import annotations
@@ -187,3 +189,11 @@ def test_coverage_names_resolve_to_package_defs():
             if re.fullmatch(r"[\w/.:]+(\(.*\))?", tok) and not resolves(tok):
                 missing.append(f"COVERAGE.md:{lineno}: {tok}")
     assert not missing, "COVERAGE.md names code that does not exist:\n" + "\n".join(missing)
+
+
+def test_no_test_doubles_in_package():
+    defs, _ = _package_defs()
+    doubles = [
+        f"{f.relative_to(ROOT)}::{n.name}" for f, n in defs if "fake" in n.name.lower()
+    ]
+    assert not doubles, f"test doubles in the package (move them to tests/fakes.py): {doubles}"

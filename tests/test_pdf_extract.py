@@ -102,7 +102,8 @@ def test_ocr_adapter_deterministic_stub(spark):
     function of the bytes via the deterministic stand-in transport."""
     import hashlib
 
-    from unstract_spark.operators.extract import fake_ocr_transport, make_ocr_adapter
+    from tests.fakes import fake_ocr_transport
+    from unstract_spark.operators.extract import make_ocr_adapter
 
     adapters = dict(DEFAULT_ADAPTERS)
     adapters["image/png"] = make_ocr_adapter(

@@ -9,10 +9,10 @@ unstructured_community.py (process → UnstructuredHelper) + helper.py
 
 import pytest
 
+from tests.fakes import make_fake_llamaparse_transport, make_fake_unstructured_transport
 from unstract_spark.operators.extract import (
     DEFAULT_ADAPTERS,
     extract_text,
-    make_fake_unstructured_transport,
     make_unstructured_adapter,
 )
 
@@ -95,10 +95,7 @@ def test_unstructured_in_extract_dispatch(spark):
 
 
 def _llama(**kw):
-    from unstract_spark.operators.extract import (
-        make_fake_llamaparse_transport,
-        make_llamaparse_adapter,
-    )
+    from unstract_spark.operators.extract import make_llamaparse_adapter
 
     transport, state = make_fake_llamaparse_transport(
         polls_until_done=kw.pop("polls_until_done", 2)

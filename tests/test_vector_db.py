@@ -1,14 +1,22 @@
-"""External vector-store adapter (pgvector-shaped JDBC backend): DDL /
-pushdown SQL generation, and a full Derby round-trip proving the second
-VectorStoreBackend implementation matches the in-engine parquet one.
+"""Vector-store backends: DDL / pushdown SQL generation, a Derby
+round-trip of the pgvector-shaped JDBC store, the four point stores
+over the file-backed services of tests/fakes.py, and every backend
+checked against the in-engine parquet index.
 """
+
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests import fakes
 from unstract_spark.operators.index_store import VectorIndexStore, embed_chunks
 from unstract_spark.sinks.vector_db import (
     JdbcVectorStore,
+    MilvusVectorStore,
+    PineconeVectorStore,
+    RestVectorStore,
+    WeaviateVectorStore,
     pgvector_topk_sql,
     vector_table_ddl,
 )
@@ -112,17 +120,12 @@ def test_jdbc_vector_store_rejects_unsafe_doc_id(spark, tmp_path, chunk_rows):
         store.delete_docs(["ok_id", "bad id with spaces"])
 
 
-# -- Qdrant-shaped REST backend ------------------------------------------
+# -- point stores ---------------------------------------------------------
 
 
 def _rest_store(spark, tmp_path, **kw):
-    from unstract_spark.sinks.vector_db import (
-        RestVectorStore,
-        make_fake_qdrant_transport,
-    )
-
-    transport = make_fake_qdrant_transport(str(tmp_path / "qdrant_state"))
-    store = RestVectorStore(
+    transport = fakes.make_fake_qdrant_transport(str(tmp_path / "qdrant_state"))
+    return RestVectorStore(
         spark,
         "http://vectors.local:6333",
         transport=transport,
@@ -130,19 +133,48 @@ def _rest_store(spark, tmp_path, **kw):
         dim=64,
         **kw,
     )
-    return store
 
 
-def test_rest_collection_naming():
+def _pinecone_store(spark, tmp_path, **kw):
+    transport = fakes.make_fake_pinecone_transport(str(tmp_path / "pinecone_state"))
+    return PineconeVectorStore(
+        spark, "http://idx-abc.svc.pinecone.local", transport=transport, **kw
+    )
+
+
+def _milvus_store(spark, tmp_path, **kw):
+    transport = fakes.make_fake_milvus_transport(str(tmp_path / "milvus_state"))
+    return MilvusVectorStore(
+        spark, "http://milvus.local:19530", transport=transport, prefix="t", **kw
+    )
+
+
+def _weaviate_store(spark, tmp_path, **kw):
+    transport = fakes.make_fake_weaviate_transport(str(tmp_path / "weaviate_state"))
+    return WeaviateVectorStore(
+        spark, "http://weaviate.local:8080", transport=transport, prefix="t", **kw
+    )
+
+
+POINT_STORES = {
+    "qdrant": _rest_store,
+    "pinecone": _pinecone_store,
+    "milvus": _milvus_store,
+    "weaviate": _weaviate_store,
+}
+
+
+def test_rest_collection_naming(spark, tmp_path):
     from unstract_spark.sinks.vector_db import collection_name
 
     assert collection_name("mydb", 384) == "mydb_384"
     assert collection_name(None, 64) == "unstract_vector_db_64"
+    assert _rest_store(spark, tmp_path).collection == "t_64"
+    assert _milvus_store(spark, tmp_path).collection == "t_64"
+    assert _weaviate_store(spark, tmp_path).cls == "T_64"  # class names start uppercase
 
 
-def test_rest_vector_store_upsert_probe_and_roundtrip(spark, tmp_path, chunk_rows):
-    store = _rest_store(spark, tmp_path)
-    assert store.collection == "t_64"
+def _check_upsert_probe_and_roundtrip(store, chunk_rows):
     assert store.upsert(chunk_rows) == 7
     assert store.upsert(chunk_rows) == 0  # probe-before-write idempotency
     back = store.read_chunks()
@@ -160,8 +192,7 @@ def test_rest_vector_store_upsert_probe_and_roundtrip(spark, tmp_path, chunk_row
     assert {r.doc_id for r in store.existing_doc_ids().collect()} == {"docA", "docB"}
 
 
-def test_rest_vector_store_reindex_replaces(spark, tmp_path, chunk_rows):
-    store = _rest_store(spark, tmp_path)
+def _check_reindex_replaces(store, chunk_rows):
     store.upsert(chunk_rows)
     reduced = chunk_rows.filter(F.col("doc_id") == "docA").limit(2)
     store.upsert(reduced, reindex=True)
@@ -172,28 +203,34 @@ def test_rest_vector_store_reindex_replaces(spark, tmp_path, chunk_rows):
         .agg(F.count("*").alias("n"))
         .collect()
     }
-    assert counts == {"docA": 2, "docB": 3}
+    assert counts == {"docA": 2, "docB": 3}  # delete-then-add for docA only
 
 
-def test_three_backends_agree_on_topk(spark, tmp_path, chunk_rows):
-    """Contract test across ALL VectorStoreBackend implementations:
-    in-engine parquet, pgvector-shaped JDBC, qdrant-shaped REST."""
-    from unstract_spark.mock import mock_embed_texts
+def test_rest_vector_store_upsert_probe_and_roundtrip(spark, tmp_path, chunk_rows):
+    _check_upsert_probe_and_roundtrip(_rest_store(spark, tmp_path), chunk_rows)
 
-    stores = [
-        _derby_store(spark, tmp_path),
-        VectorIndexStore(spark, str(tmp_path / "idx")),
-        _rest_store(spark, tmp_path),
-    ]
-    qv = mock_embed_texts(["chunk text 2 about spark engines"])[0].tolist()
-    results = []
-    for store in stores:
-        store.upsert(chunk_rows)
-        results.append(
-            [tuple(r) for r in store.query_topk("docA", qv, k=3).collect()]
-        )
-    assert results[0] == results[1] == results[2]
-    assert results[0][0][1] == 2
+
+def test_rest_vector_store_reindex_replaces(spark, tmp_path, chunk_rows):
+    _check_reindex_replaces(_rest_store(spark, tmp_path), chunk_rows)
+
+
+@pytest.mark.parametrize("kind", ["pinecone", "milvus", "weaviate"])
+def test_point_store_roundtrip_probe_and_reindex(spark, tmp_path, chunk_rows, kind):
+    store = POINT_STORES[kind](spark, tmp_path)
+    _check_upsert_probe_and_roundtrip(store, chunk_rows)
+    _check_reindex_replaces(store, chunk_rows)
+
+
+@pytest.mark.parametrize("kind", ["jdbc", *POINT_STORES])
+def test_upsert_refuses_unsafe_doc_id(spark, tmp_path, chunk_rows, kind):
+    """Both upsert paths check every incoming doc_id, so no store writes
+    a document that its delete and query paths would refuse."""
+    store = {"jdbc": _derby_store, **POINT_STORES}[kind](spark, tmp_path)
+    bad = chunk_rows.withColumn("doc_id", F.lit("bad id"))
+    for reindex in (False, True):
+        with pytest.raises(ValueError, match="unsafe doc_id"):
+            store.upsert(bad, reindex=reindex)
+    assert store.read_chunks().count() == 0
 
 
 def test_rest_search_request_shape(spark, tmp_path):
@@ -223,61 +260,6 @@ def test_backend_registry(spark, tmp_path):
         V.register_backend("rest")(V.RestVectorStore)
 
 
-# -- Pinecone-shaped backend ---------------------------------------------
-
-
-def _pinecone_store(spark, tmp_path, **kw):
-    from unstract_spark.sinks.vector_db import (
-        PineconeVectorStore,
-        make_fake_pinecone_transport,
-    )
-
-    transport = make_fake_pinecone_transport(str(tmp_path / "pinecone_state"))
-    return PineconeVectorStore(
-        spark, "http://idx-abc.svc.pinecone.local", transport=transport, **kw
-    )
-
-
-def test_pinecone_store_roundtrip_and_reindex(spark, tmp_path, chunk_rows):
-    store = _pinecone_store(spark, tmp_path)
-    assert store.upsert(chunk_rows) == 7
-    assert store.upsert(chunk_rows) == 0  # probe-before-write idempotency
-    assert store.read_chunks().count() == 7
-    assert {r.doc_id for r in store.existing_doc_ids().collect()} == {"docA", "docB"}
-
-    reduced = chunk_rows.filter(F.col("doc_id") == "docA").limit(2)
-    store.upsert(reduced, reindex=True)
-    counts = {
-        r.doc_id: r.n
-        for r in store.read_chunks()
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert counts == {"docA": 2, "docB": 3}
-
-
-def test_four_backends_agree_on_topk(spark, tmp_path, chunk_rows):
-    """Every VectorStoreBackend — parquet, pgvector-JDBC, qdrant-REST,
-    pinecone-REST — returns identical doc-scoped top-k rows."""
-    from unstract_spark.mock import mock_embed_texts
-
-    stores = [
-        VectorIndexStore(spark, str(tmp_path / "idx")),
-        _derby_store(spark, tmp_path),
-        _rest_store(spark, tmp_path),
-        _pinecone_store(spark, tmp_path),
-    ]
-    qv = mock_embed_texts(["chunk text 2 about spark engines"])[0].tolist()
-    results = []
-    for store in stores:
-        store.upsert(chunk_rows)
-        results.append(
-            [tuple(r) for r in store.query_topk("docA", qv, k=3).collect()]
-        )
-    assert results[0] == results[1] == results[2] == results[3]
-
-
 def test_pinecone_query_request_shape(spark, tmp_path):
     store = _pinecone_store(spark, tmp_path, namespace="ns1")
     path, body = store.search_topk_request("a" * 64, [0.5], k=4)
@@ -295,12 +277,7 @@ def test_rest_store_concurrent_writers_no_duplicates(spark, tmp_path, chunk_rows
     external stores — no lock needed)."""
     import threading
 
-    from unstract_spark.sinks.vector_db import (
-        RestVectorStore,
-        make_fake_qdrant_transport,
-    )
-
-    transport = make_fake_qdrant_transport(str(tmp_path / "qshared"))
+    transport = fakes.make_fake_qdrant_transport(str(tmp_path / "qshared"))
     mk = lambda: RestVectorStore(  # noqa: E731
         spark, "http://vectors.local:6333", transport=transport, prefix="t", dim=64
     )
@@ -326,61 +303,18 @@ def test_rest_store_concurrent_writers_no_duplicates(spark, tmp_path, chunk_rows
     assert back.select("doc_id", "chunk_no").distinct().count() == 7
 
 
-def test_rest_point_ids_are_live_qdrant_legal(spark, tmp_path, chunk_rows):
-    """Live Qdrant rejects arbitrary string point ids (only unsigned
-    ints or UUIDs) — every stored point id must be a UUID, and the same
-    chunk must map to the same id on re-upsert (idempotent writes)."""
-    import json
-    import os
-    import uuid
-
-    store = _rest_store(spark, tmp_path)
-    store.upsert(chunk_rows)
-    state = tmp_path / "qdrant_state"
-    ids = set()
-    for name in os.listdir(state):
-        if name.endswith(".json"):
-            with open(state / name) as fh:
-                ids.update(str(p["id"]) for p in json.load(fh))
+@pytest.mark.parametrize("kind", ["qdrant", "weaviate"])
+def test_point_ids_are_uuids(spark, tmp_path, chunk_rows, kind):
+    """Live Qdrant accepts only unsigned-int or UUID point ids and
+    Weaviate requires UUID object ids: every stored id must parse as a
+    UUID and be the deterministic uuid5 of `doc:chunk`, so the same
+    chunk keeps its id on re-upsert (idempotent writes)."""
+    POINT_STORES[kind](spark, tmp_path).upsert(chunk_rows)
+    ids = set(fakes.BatchFiles(str(tmp_path / f"{kind}_state")).merged())
     assert len(ids) == 7
     for pid in ids:
         uuid.UUID(pid)  # raises if not a real UUID
     assert str(uuid.uuid5(uuid.NAMESPACE_URL, "docA:2")) in ids
-
-
-# -- Milvus-shaped backend -----------------------------------------------
-
-
-def _milvus_store(spark, tmp_path, **kw):
-    from unstract_spark.sinks.vector_db import (
-        MilvusVectorStore,
-        make_fake_milvus_transport,
-    )
-
-    transport = make_fake_milvus_transport(str(tmp_path / "milvus_state"))
-    return MilvusVectorStore(
-        spark, "http://milvus.local:19530", transport=transport, prefix="t", **kw
-    )
-
-
-def test_milvus_store_roundtrip_and_reindex(spark, tmp_path, chunk_rows):
-    store = _milvus_store(spark, tmp_path)
-    assert store.collection == "t_64"
-    assert store.upsert(chunk_rows) == 7
-    assert store.upsert(chunk_rows) == 0  # probe-before-write idempotency
-    assert store.read_chunks().count() == 7
-    assert {r.doc_id for r in store.existing_doc_ids().collect()} == {"docA", "docB"}
-
-    reduced = chunk_rows.filter(F.col("doc_id") == "docA").limit(2)
-    store.upsert(reduced, reindex=True)
-    counts = {
-        r.doc_id: r.n
-        for r in store.read_chunks()
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert counts == {"docA": 2, "docB": 3}
 
 
 def test_milvus_filter_injection_guard(spark, tmp_path):
@@ -391,62 +325,6 @@ def test_milvus_filter_injection_guard(spark, tmp_path):
     assert path == "v2/vectordb/entities/search"
     assert body["filter"] == f'doc_id == "{"a" * 64}"'
     assert body["limit"] == 2
-
-
-# -- Weaviate-shaped backend ---------------------------------------------
-
-
-def _weaviate_store(spark, tmp_path, **kw):
-    from unstract_spark.sinks.vector_db import (
-        WeaviateVectorStore,
-        make_fake_weaviate_transport,
-    )
-
-    transport = make_fake_weaviate_transport(str(tmp_path / "weaviate_state"))
-    return WeaviateVectorStore(
-        spark, "http://weaviate.local:8080", transport=transport, prefix="t", **kw
-    )
-
-
-def test_weaviate_store_roundtrip_and_reindex(spark, tmp_path, chunk_rows):
-    store = _weaviate_store(spark, tmp_path)
-    assert store.cls == "T_64"  # class names start uppercase
-    assert store.upsert(chunk_rows) == 7
-    assert store.upsert(chunk_rows) == 0
-    assert store.read_chunks().count() == 7
-    assert {r.doc_id for r in store.existing_doc_ids().collect()} == {"docA", "docB"}
-
-    reduced = chunk_rows.filter(F.col("doc_id") == "docA").limit(2)
-    store.upsert(reduced, reindex=True)
-    counts = {
-        r.doc_id: r.n
-        for r in store.read_chunks()
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert counts == {"docA": 2, "docB": 3}
-
-
-def test_weaviate_object_ids_are_uuids(spark, tmp_path, chunk_rows):
-    """Weaviate requires UUID object ids — every stored id must parse
-    as a UUID and be the deterministic uuid5 of doc:chunk."""
-    import json
-    import os
-    import uuid
-
-    store = _weaviate_store(spark, tmp_path)
-    store.upsert(chunk_rows)
-    state = tmp_path / "weaviate_state"
-    ids = set()
-    for name in os.listdir(state):
-        if name.endswith(".json"):
-            with open(state / name) as fh:
-                ids.update(str(o["id"]) for o in json.load(fh))
-    assert len(ids) == 7
-    for oid in ids:
-        uuid.UUID(oid)
-    assert str(uuid.uuid5(uuid.NAMESPACE_URL, "docA:2")) in ids
 
 
 def test_weaviate_near_vector_request_shape(spark, tmp_path):

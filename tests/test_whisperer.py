@@ -10,10 +10,10 @@ constants.py (endpoints, param names, `<<<` page separator).
 import pytest
 from pyspark.sql import functions as F
 
+from tests.fakes import make_fake_whisperer_transport
 from unstract_spark.operators.extract import (
     DEFAULT_ADAPTERS,
     extract_text,
-    make_fake_whisperer_transport,
     make_whisperer_adapter,
 )
 

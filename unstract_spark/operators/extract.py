@@ -127,27 +127,6 @@ def make_ocr_adapter(
     return adapter
 
 
-def fake_ocr_transport(url: str, payload: dict, headers: dict) -> dict:
-    """Deterministic in-container OCR stand-in: 'recognized' text is a
-    pure function of the image bytes (the real service isn't reachable
-    from tests; the Spark-side plumbing — dispatch, batching, error
-    rows — is identical either way)."""
-    import base64
-    import hashlib
-
-    content = base64.b64decode(payload["rawDocument"]["content"])
-    if not content:
-        raise ValueError("empty image payload")
-    sha = hashlib.sha256(content).hexdigest()
-    n_pages = max(1, len(content) // 1024)
-    return {
-        "document": {
-            "text": f"ocr:{sha[:12]}:{len(content)}b",
-            "pages": [{"pageNumber": i + 1} for i in range(n_pages)],
-        }
-    }
-
-
 def make_whisperer_adapter(
     base_url: str,
     api_key: str,
@@ -241,45 +220,6 @@ def make_whisperer_adapter(
         return text, text.count(page_separator) + 1
 
     return adapter
-
-
-def make_fake_whisperer_transport(polls_until_processed: int = 2):
-    """In-container whisperer service stand-in: deterministic text from
-    the document bytes, async accept + N status polls before
-    `processed` (exercises the full submit/poll/retrieve path without a
-    network). Returns (transport, state) — state records call counts so
-    tests can assert the polling discipline."""
-    import base64
-    import hashlib
-
-    state = {"submits": 0, "polls": 0, "retrieves": 0, "docs": {}}
-
-    def transport(url: str, payload: dict, headers: dict) -> dict:
-        if url.endswith("/whisper"):
-            state["submits"] += 1
-            content = base64.b64decode(payload["content_b64"])
-            wh = hashlib.sha256(content).hexdigest()[:16]
-            sep = payload.get("page_seperator", "<<<")
-            n_pages = max(1, len(content) // 512)
-            text = sep.join(
-                f"whisper:{wh}:page{i + 1}" for i in range(n_pages)
-            )
-            state["docs"][wh] = {"polls_left": polls_until_processed, "text": text}
-            return {"status_code": 202, "whisper_hash": wh, "status": "processing"}
-        if url.endswith("/whisper-status"):
-            state["polls"] += 1
-            doc = state["docs"][payload["whisper_hash"]]
-            if doc["polls_left"] > 0:
-                doc["polls_left"] -= 1
-                return {"status": "processing"}
-            return {"status": "processed"}
-        if url.endswith("/whisper-retrieve"):
-            state["retrieves"] += 1
-            doc = state["docs"][payload["whisper_hash"]]
-            return {"result_text": doc["text"]}
-        raise ValueError(f"unexpected whisperer endpoint: {url}")
-
-    return transport, state
 
 
 def make_unstructured_adapter(
@@ -423,85 +363,6 @@ def make_llamaparse_adapter(
         return text, pages
 
     return adapter
-
-
-def make_fake_llamaparse_transport(polls_until_done: int = 2):
-    """In-container LlamaParse stand-in: upload -> PENDING polls ->
-    SUCCESS -> deterministic text from the bytes. Returns (transport,
-    state) with call accounting, like the whisperer fake."""
-    import base64
-    import hashlib
-    import re as _re
-
-    state = {"uploads": 0, "polls": 0, "results": 0, "jobs": {}}
-
-    def transport(url: str, payload: dict, headers: dict) -> dict:
-        if url.endswith("/parsing/upload"):
-            state["uploads"] += 1
-            content = base64.b64decode(payload["content_b64"])
-            jid = hashlib.sha256(content).hexdigest()[:12]
-            n_pages = max(1, len(content) // 800)
-            state["jobs"][jid] = {
-                "polls_left": polls_until_done,
-                "text": f"llamaparse:{jid}:{len(content)}b",
-                "pages": n_pages,
-            }
-            return {"id": jid, "status": "PENDING"}
-        m = _re.search(r"/parsing/job/([0-9a-f]+)$", url)
-        if m:
-            state["polls"] += 1
-            job = state["jobs"][m.group(1)]
-            if job["polls_left"] > 0:
-                job["polls_left"] -= 1
-                return {"status": "PENDING"}
-            return {"status": "SUCCESS"}
-        m = _re.search(r"/parsing/job/([0-9a-f]+)/result/(\w+)$", url)
-        if m:
-            state["results"] += 1
-            job = state["jobs"][m.group(1)]
-            return {
-                m.group(2): job["text"],
-                "job_metadata": {"job_pages": job["pages"]},
-            }
-        raise ValueError(f"unexpected llamaparse endpoint: {url}")
-
-    return transport, state
-
-
-def make_fake_unstructured_transport():
-    """In-container Unstructured partition stand-in: splits the decoded
-    bytes into deterministic paragraph elements (double-newline
-    boundaries) with alternating Title/NarrativeText types and
-    page_number metadata every 2 elements — enough structure to
-    exercise the element-join and page-count paths. Returns
-    (transport, state) with request accounting."""
-    import base64
-
-    state = {"requests": 0, "auth_headers": []}
-
-    def transport(url: str, payload: dict, headers: dict):
-        if not url.endswith("/general/v0/general"):
-            raise ValueError(f"unexpected unstructured endpoint: {url}")
-        state["requests"] += 1
-        state["auth_headers"].append(headers.get("unstructured-api-key"))
-        content = base64.b64decode(payload["content_b64"])
-        paras = [
-            p.strip()
-            for p in content.decode("utf-8", errors="replace").split("\n\n")
-            if p.strip()
-        ]
-        if not paras:
-            raise ValueError("nothing to partition")
-        return [
-            {
-                "type": "Title" if i % 2 == 0 else "NarrativeText",
-                "text": p,
-                "metadata": {"page_number": i // 2 + 1},
-            }
-            for i, p in enumerate(paras)
-        ]
-
-    return transport, state
 
 
 DEFAULT_ADAPTERS: dict[str, Adapter] = {

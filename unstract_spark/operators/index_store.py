@@ -17,14 +17,13 @@ is the J4 join from operators/retrieval, scoped by the doc_id filter
 from __future__ import annotations
 
 import os
-import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unstract_spark.schemas import CHUNKS
-from unstract_spark.sinks.ledger_lock import LedgerLock
+from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit
+from unstract_spark.sinks.manifest import ledger_manifest
 from unstract_spark.sinks.vector_db import VectorStoreBackend
 
 
@@ -56,16 +55,7 @@ class VectorIndexStore(VectorStoreBackend):
         self.spark = spark
         self.path = path
         self.stats = stats
-        from unstract_spark.sinks.manifest import CommitBackend, ManifestTable
-
-        if isinstance(backend, CommitBackend):
-            self._manifest = ManifestTable(spark, path, commit_backend=backend)
-        elif backend == "manifest":
-            self._manifest = ManifestTable(spark, path)
-        elif backend == "swap":
-            self._manifest = None
-        else:
-            raise ValueError(f"unknown ledger backend {backend!r}")
+        self._manifest = ledger_manifest(spark, path, backend)
 
     def read(self) -> DataFrame:
         if self._manifest is not None:
@@ -133,24 +123,12 @@ class VectorIndexStore(VectorStoreBackend):
             self._analyze()
             return written["incoming"].count()
 
+        # the read-modify-swap runs under LedgerLock so concurrent
+        # upserts serialize instead of basing on the same snapshot and
+        # losing rows
         with LedgerLock(self.path):
             merged, incoming = merge_fn(self.read(), chunks)
-            staging = f"{self.path}.staging-{int(time.time() * 1000)}"
-            merged.write.mode("overwrite").parquet(staging)
-            # Swap order matters: the live path must never be absent. Move
-            # the old dir aside, rename staging into place, and only then
-            # delete the old copy — a crash between steps leaves a usable
-            # index at either the canonical or the .old path (same order
-            # as sinks/history.merge). The read-modify-swap runs under
-            # LedgerLock so concurrent upserts serialize instead of
-            # basing on the same snapshot and losing rows.
-            old = None
-            if os.path.exists(self.path):
-                old = f"{self.path}.old-{int(time.time() * 1000)}"
-                os.rename(self.path, old)
-            os.rename(staging, self.path)
-            if old is not None:
-                shutil.rmtree(old, ignore_errors=True)
+            swap_commit(self.path, merged.write)
             n = incoming.count()
         self._analyze()
         return n

@@ -19,15 +19,13 @@ Delta `MERGE ... WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT` keyed on
 from __future__ import annotations
 
 import os
-import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unstract_spark.schemas import FILE_HISTORY
-from unstract_spark.sinks.ledger_lock import LedgerLock
-from unstract_spark.sinks.manifest import ManifestTable
+from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit
+from unstract_spark.sinks.manifest import ledger_manifest
 
 MERGE_KEYS = ["cache_key", "workflow_id", "file_path"]
 # ledger columns a replayed catalog row carries (destination.py:593-612)
@@ -86,21 +84,12 @@ class FileHistoryStore:
         per-run frame with no stats, so only the ledger side is
         priced). Without stats — or before the first analyzed merge —
         the join takes Spark's default plan, unchanged."""
-        from unstract_spark.sinks.manifest import CommitBackend
-
         self.spark = spark
         self.path = path
         self.stats = stats
         self._bc_bytes = broadcast_threshold_bytes
         self._skew_ppm = skew_threshold_ppm
-        if isinstance(backend, CommitBackend):
-            self._manifest = ManifestTable(spark, path, commit_backend=backend)
-        elif backend == "manifest":
-            self._manifest = ManifestTable(spark, path)
-        elif backend == "swap":
-            self._manifest = None
-        else:
-            raise ValueError(f"unknown ledger backend {backend!r}")
+        self._manifest = ledger_manifest(spark, path, backend)
 
     def _scan(self) -> DataFrame:
         """The ledger as a lazy frame. Swap backend: a parquet scan
@@ -149,15 +138,7 @@ class FileHistoryStore:
             self._analyze()
             return
         with LedgerLock(self.path):
-            deduped = _merge_newest_wins(self._scan(), updates)
-            staging = f"{self.path}.staging-{int(time.time() * 1000)}"
-            deduped.write.mode("overwrite").parquet(staging)
-            old = f"{self.path}.old-{int(time.time() * 1000)}"
-            if os.path.exists(self.path):
-                os.rename(self.path, old)
-            os.rename(staging, self.path)
-            if os.path.exists(old):
-                shutil.rmtree(old, ignore_errors=True)
+            swap_commit(self.path, _merge_newest_wins(self._scan(), updates).write)
         self._analyze()
 
     def _analyze(self) -> None:

@@ -16,12 +16,14 @@ locks (a writer that died mid-merge) are broken after `stale_s` by
 mtime. At cluster scale the ledgers become Delta/Iceberg tables and
 this file is replaced by their optimistic-concurrency commit protocol
 — the store APIs don't change (same reasoning as sinks/history.py's
-MERGE contract note).
+MERGE contract note). `swap_commit` is the directory swap those
+writers run under the lock.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 
@@ -90,3 +92,21 @@ class LedgerLock:
             os.unlink(self.lock_path)
         except OSError:
             pass
+
+
+def swap_commit(path: str, writer) -> None:
+    """Replace the parquet table at `path` with what `writer` (a
+    DataFrameWriter, partitioning included) writes: write a staging
+    directory, move the live table aside to `.old-*`, rename staging
+    into place, then delete the old copy. A crash at any step leaves a
+    usable table at `path` or at its `.old-*` copy, never neither.
+    Callers hold `LedgerLock(path)` across their read and this swap."""
+    stamp = int(time.time() * 1000)
+    staging, old = f"{path}.staging-{stamp}", f"{path}.old-{stamp}"
+    writer.mode("overwrite").parquet(staging)
+    moved = os.path.exists(path)
+    if moved:
+        os.rename(path, old)
+    os.rename(staging, path)
+    if moved:
+        shutil.rmtree(old, ignore_errors=True)

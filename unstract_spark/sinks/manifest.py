@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import time
 import uuid
 
@@ -115,42 +114,14 @@ class PosixLinkBackend(CommitBackend):
         return True
 
 
-class FakeObjectStoreBackend(CommitBackend):
-    """Object-store-shaped fake: a flat key->bytes bucket whose
-    conditional PUT rejects existing keys — the exact semantics of S3
-    `If-None-Match: *` / GCS `ifGenerationMatch=0`. The internal lock
-    models the atomicity the store's API guarantees (each PUT is one
-    all-or-nothing request); there is NO rename, NO link, NO directory
-    — proving the commit protocol needs nothing POSIX."""
-
-    def __init__(self):
-        self._objects: dict[str, bytes] = {}
-        self._lock = threading.Lock()
-
-    def list_manifests(self) -> list[str]:
-        with self._lock:
-            return list(self._objects)
-
-    def read_manifest(self, name: str) -> bytes:
-        with self._lock:
-            return self._objects[name]
-
-    def put_if_absent(self, name: str, payload: bytes) -> bool:
-        with self._lock:
-            if name in self._objects:
-                return False
-            self._objects[name] = payload
-            return True
-
-
 class HttpObjectStoreBackend(CommitBackend):
     """S3-wire-shaped client binding: list/read via GET, commit via
     PUT with `If-None-Match: *` — True on 2xx, False on HTTP 412
     Precondition Failed, which is byte-for-byte S3's conditional-PUT
     contract (GCS speaks `x-goog-if-generation-match: 0`, same shape).
     Exists so the commit protocol is exercised over a REAL network hop
-    with no shared memory between writer and store (the in-process
-    fake models atomicity; this binding proves the client side issues
+    with no shared memory between writer and store (an in-process
+    bucket models atomicity; this binding proves the client side issues
     the right request and interprets the right status)."""
 
     def __init__(self, endpoint: str, prefix: str = "manifests/"):
@@ -194,6 +165,23 @@ class HttpObjectStoreBackend(CommitBackend):
             if e.code == 412:
                 return False
             raise
+
+
+def ledger_manifest(
+    spark: SparkSession, path: str, backend
+) -> "ManifestTable | None":
+    """The `backend=` switch of the parquet ledgers (FileHistoryStore,
+    VectorIndexStore): "swap" -> None (plain parquet, directory swap
+    under LedgerLock), "manifest" -> a ManifestTable committing through
+    POSIX put-if-absent, a `CommitBackend` instance -> a ManifestTable
+    committing through it (e.g. an object store's conditional PUT)."""
+    if isinstance(backend, CommitBackend):
+        return ManifestTable(spark, path, commit_backend=backend)
+    if backend == "manifest":
+        return ManifestTable(spark, path)
+    if backend == "swap":
+        return None
+    raise ValueError(f"unknown ledger backend {backend!r}")
 
 
 class ManifestTable:

@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from unstract_spark.sinks.ledger_lock import LedgerLock
+from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit
 
 OUTBOX_SCHEMA = (
     "notification_id string, execution_id string, url string, payload string,"
@@ -297,13 +297,5 @@ def drain_outbox(
                     "provider",
                 )
             )
-            staging = f"{path}.staging-{int(time.time() * 1000)}"
-            rewritten.write.mode("overwrite").parquet(staging)
-            import os
-            import shutil
-
-            old = f"{path}.old-{int(time.time() * 1000)}"
-            os.rename(path, old)
-            os.rename(staging, path)
-            shutil.rmtree(old, ignore_errors=True)
+            swap_commit(path, rewritten.write)
     return {"sent": sent, "failed": failed, "pending": still_pending}

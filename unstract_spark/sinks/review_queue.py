@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from unstract_spark.schemas import DEFAULT_HITL_TTL_SECONDS
-from unstract_spark.sinks.ledger_lock import LedgerLock
+from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit
 
 
 def sample_predicate(key: Column, pct: float) -> Column:
@@ -126,10 +126,6 @@ def sweep_expired(spark, path: str) -> int:
     queue (human-scale, partitioned by queue_name); at a larger scale
     the same call works per-partition by pointing `path` at one
     queue's subdirectory."""
-    import os
-    import shutil
-    import time
-
     with LedgerLock(path):
         df = spark.read.parquet(path)
         expiry = F.col("enqueued_at") + F.make_dt_interval(
@@ -148,14 +144,7 @@ def sweep_expired(spark, path: str) -> int:
             # expired store as-is — consumers already filter, and the
             # next sweep after new live rows arrive drops these files.
             return 0
-        staging = f"{path}.staging-{int(time.time() * 1000)}"
-        live.write.mode("overwrite").partitionBy(
-            "queue_name"
-        ).parquet(staging)
-        old = f"{path}.old-{int(time.time() * 1000)}"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_commit(path, live.write.partitionBy("queue_name"))
         return n_total - n_live
 
 

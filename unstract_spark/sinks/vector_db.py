@@ -1,5 +1,5 @@
-"""External vector-DB adapters (T5/T6) — pgvector-shaped storage behind
-the engine's vector-store interface.
+"""External vector-DB adapters (T5/T6) behind the engine's vector-store
+interface.
 
 Reference: unstract/sdk1/src/unstract/sdk1/adapters/vectordb/ registers
 six backends (postgres/pgvector, milvus, pinecone, qdrant, weaviate,
@@ -10,7 +10,8 @@ sdk1/index.py:65-131, Constants.TOP_K; delete-then-add reindex
 index.py:223-375).
 
 Spark-first: `VectorStoreBackend` is that contract as an interface over
-DataFrames. Two engine backends implement it:
+DataFrames, with the upsert prelude (validate, probe or delete) and the
+ranking written once. Its implementations:
 
 - `operators.index_store.VectorIndexStore` — the in-engine parquet/
   Delta-shaped index (partition-pruned, the 100 TB path);
@@ -21,25 +22,31 @@ DataFrames. Two engine backends implement it:
   works for both, because pgvector's input format IS a JSON-style
   array). DDL reuses the dialect machinery in sinks/jdbc.py; reads come
   back through Spark's JDBC source with the doc_id filter pushed into
-  the remote query, so only one document's chunks ever cross the wire.
+  the remote query, so only one document's chunks ever cross the wire;
+- four point-store services (Qdrant, Pinecone, Milvus, Weaviate) on one
+  `_PointStore` body; each class keeps only its wire spelling.
 
-Scoring parity: both backends rank with the same rounded-cosine +
+Scoring parity: every backend ranks with the same rounded-cosine +
 chunk_no tie-break, so swapping backends cannot reorder results. On a
 real pgvector deployment the top-k itself can be pushed down —
 `pgvector_topk_sql` emits that `ORDER BY embedding <=> q LIMIT k`
 query; it is generated (and unit-tested) here, executed only where a
-pgvector server exists.
+pgvector server exists. The point stores emit theirs with
+`search_topk_request`.
 """
 
 from __future__ import annotations
 
 import abc
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unstract_spark.operators.retrieval import cosine
+from unstract_spark.providers import http_json_transport
+from unstract_spark.schemas import CHUNKS
 from unstract_spark.sinks.jdbc import _DIALECT_TYPES, _quote_ident, execute_ddl
 
 CHUNK_COLS = ("doc_id", "file_hash", "chunk_no", "chunk_text", "embedding")
@@ -61,8 +68,9 @@ class VectorStoreBackend(abc.ABC):
     Chunks carry (doc_id, file_hash, chunk_no, chunk_text, embedding)
     — schemas.CHUNKS. Upserts are idempotent on doc_id (probe before
     write; reindex = delete-then-add), queries are doc-scoped top-k
-    cosine. Backends only supply storage; ranking semantics live here
-    so every backend returns identical rows.
+    cosine. Backends only supply storage through the hooks below; the
+    upsert prelude and the ranking live here so every backend stores
+    and returns identical rows.
     """
 
     @abc.abstractmethod
@@ -71,16 +79,47 @@ class VectorStoreBackend(abc.ABC):
 
     @abc.abstractmethod
     def existing_doc_ids(self) -> DataFrame:
-        """Distinct doc_id single-column DataFrame (the upsert probe)."""
-
-    @abc.abstractmethod
-    def upsert(self, chunks: DataFrame, reindex: bool = False) -> int:
-        """Idempotent write; returns rows written (0 when all probed)."""
+        """Distinct doc_id single-column DataFrame."""
 
     @abc.abstractmethod
     def _chunks_for_doc(self, doc_id: str) -> DataFrame:
         """One document's chunks, with the doc_id filter pushed into
         storage (partition pruning / remote WHERE)."""
+
+    def delete_docs(self, doc_ids: list[str]) -> None:
+        """Drop every chunk of `doc_ids` (the reindex delete)."""
+        raise NotImplementedError
+
+    def _docs_present(self, doc_ids: list[str]) -> set[str]:
+        """The stored subset of `doc_ids` (the upsert probe; the ids
+        are already `_safe_doc_id`-checked)."""
+        raise NotImplementedError
+
+    def _write(self, incoming: DataFrame) -> int:
+        """Store `incoming` chunks; returns rows written."""
+        raise NotImplementedError
+
+    def upsert(self, chunks: DataFrame, reindex: bool = False) -> int:
+        """Idempotent write; returns rows written (0 when all probed).
+
+        Every incoming doc_id must pass `_safe_doc_id`, on both paths,
+        so no backend stores a document its delete and query refuse.
+        reindex=True deletes the incoming documents first
+        (index.py:408-418); otherwise documents already stored are
+        skipped (the query-before-write probe, index.py:293-335).
+        """
+        incoming = chunks.select(*CHUNK_COLS)
+        ids = [
+            _safe_doc_id(r.doc_id)
+            for r in incoming.select("doc_id").distinct().collect()
+        ]
+        if reindex:
+            self.delete_docs(ids)
+        else:
+            present = self._docs_present(ids)
+            if present:
+                incoming = incoming.filter(~F.col("doc_id").isin(list(present)))
+        return self._write(incoming)
 
     def query_topk(
         self,
@@ -254,46 +293,38 @@ class JdbcVectorStore(VectorStoreBackend):
         sql = f"SELECT DISTINCT {self._q('doc_id')} FROM {self._q(self.table)}"
         return self._read_sql(sql).toDF("doc_id")
 
+    def _in_lists(self, doc_ids: list[str]):
+        """`doc_id IN (...)` predicates over checked ids, 256 per list."""
+        safe = [_safe_doc_id(d) for d in doc_ids]
+        for i in range(0, len(safe), 256):
+            in_list = ", ".join(f"'{d}'" for d in safe[i : i + 256])
+            yield f"{self._q('doc_id')} IN ({in_list})"
+
     def delete_docs(self, doc_ids: list[str]) -> None:
         """Driver-side delete (reindex path, index.py:408-418). Bounded:
         one pipeline run touches at most its own batch of documents."""
         if not doc_ids:
             return
-        safe = [_safe_doc_id(d) for d in doc_ids]
-        stmts = []
-        for i in range(0, len(safe), 256):
-            in_list = ", ".join(f"'{d}'" for d in safe[i : i + 256])
-            stmts.append(
-                f"DELETE FROM {self._q(self.table)} WHERE {self._q('doc_id')} IN ({in_list})"
-            )
+        stmts = [
+            f"DELETE FROM {self._q(self.table)} WHERE {pred}"
+            for pred in self._in_lists(doc_ids)
+        ]
         execute_ddl(self.spark, self.url, stmts, self.properties, ignore_existing=False)
 
     def _docs_present(self, doc_ids: list[str]) -> set[str]:
-        """Pushed-down per-batch probe: ONE remote query over the
-        incoming id set (O(batch) with a doc_id index), never a
-        DISTINCT scan of the whole remote table."""
-        if not doc_ids:
-            return set()
-        safe = [_safe_doc_id(d) for d in doc_ids]
+        """Pushed-down per-batch probe: one remote query per 256
+        incoming ids (O(batch) with a doc_id index), never a DISTINCT
+        scan of the whole remote table."""
         present: set[str] = set()
-        for i in range(0, len(safe), 256):
-            in_list = ", ".join(f"'{d}'" for d in safe[i : i + 256])
+        for pred in self._in_lists(doc_ids):
             sql = (
                 f"SELECT DISTINCT {self._q('doc_id')} FROM {self._q(self.table)} "
-                f"WHERE {self._q('doc_id')} IN ({in_list})"
+                f"WHERE {pred}"
             )
             present.update(r.doc_id for r in self._read_sql(sql).toDF("doc_id").collect())
         return present
 
-    def upsert(self, chunks: DataFrame, reindex: bool = False) -> int:
-        incoming = chunks.select(*CHUNK_COLS)
-        ids = [r.doc_id for r in incoming.select("doc_id").distinct().collect()]
-        if reindex:
-            self.delete_docs(ids)
-        else:
-            present = self._docs_present(ids)
-            if present:
-                incoming = incoming.filter(~F.col("doc_id").isin(list(present)))
+    def _write(self, incoming: DataFrame) -> int:
         incoming = incoming.localCheckpoint(eager=True)  # pin before the write mutates the probe
         n = incoming.count()
         if n == 0:
@@ -329,56 +360,146 @@ def collection_name(prefix: str | None, dim: int) -> str:
     return f"{prefix or 'unstract_vector_db'}_{int(dim)}"
 
 
-def _distributed_point_upsert(
-    incoming: DataFrame,
-    batch_size: int,
-    transport,
-    headers: dict,
-    build_request,
-) -> int:
-    """Shared distributed write path for point-store backends: one HTTP
-    batch per `batch_size` rows per Arrow batch per partition — N
-    executors post concurrently, nothing funnels through the driver.
-    `build_request(points) -> (url, payload)` supplies the service's
-    request spelling; points are the generic {id, vector, payload}
-    triple every point store stores."""
-    import pandas as pd
+class _PointStore(VectorStoreBackend):
+    """The body the four point-store services share. Reference
+    adapters/vectordb/{qdrant,pinecone,milvus,weaviate}/ all wrap the
+    same access pattern: ensure a collection sized to the embedding
+    dimension, upsert points `{id, vector, payload}` in batches, probe
+    and delete per doc_id, and read one document's chunks back. The
+    subclasses differ only in how the service spells those requests,
+    which they supply through the hooks below.
 
-    def post_batches(batches):
-        for pdf in batches:
-            for i in range(0, len(pdf), batch_size):
-                part = pdf.iloc[i : i + batch_size]
-                points = [
-                    {
-                        "id": f"{r.doc_id}:{int(r.chunk_no)}",
-                        "vector": [float(x) for x in r.embedding],
-                        "payload": {
-                            "doc_id": r.doc_id,
-                            "file_hash": r.file_hash,
-                            "chunk_no": int(r.chunk_no),
-                            "chunk_text": r.chunk_text,
-                        },
-                    }
-                    for r in part.itertuples()
-                ]
-                req_url, payload = build_request(points)
-                transport(req_url, payload, headers)
-                yield pd.DataFrame({"n": [len(points)]})
+    Scale shape: upserts run inside `mapInPandas`, one HTTP batch per
+    `batch_size` rows per Arrow batch per partition — N executors post
+    concurrently and nothing funnels through the driver. Probes and
+    deletes are one request per incoming doc_id — O(batch docs), never
+    a scan of the remote index (the reference probes per doc_id the
+    same way, index.py:293-335). Reads are doc-scoped by contract (one
+    document's chunks, the reference's only query shape), so a scoped
+    read is bounded by one document regardless of index size; the
+    unbounded reads (`read_chunks`, `existing_doc_ids`) page through
+    the collection and exist for tests and small indexes — the 100 TB
+    index lives in the in-engine store, with external stores fed
+    doc-by-doc exactly like the reference feeds pgvector/Qdrant.
 
-    written = incoming.mapInPandas(post_batches, schema="n long")
-    total = written.agg(F.sum("n").alias("n")).collect()[0]["n"]
-    return int(total or 0)
+    Ranking runs engine-side through the shared `query_topk` so results
+    are bit-identical across backends; `search_topk_request` emits the
+    pushed-down server-side query for live deployments.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        base_url: str,
+        transport,
+        headers: dict,
+        batch_size: int,
+        dim: int | None = None,
+    ):
+        self.spark = spark
+        self.base_url = base_url.rstrip("/")
+        self.transport = transport or http_json_transport
+        self.headers = headers
+        self.batch_size = batch_size
+        self.dim = dim
+
+    def _call(self, path: str, payload: dict) -> dict:
+        return self.transport(f"{self.base_url}/{path}", payload, self.headers)
+
+    # -- wire spelling ---------------------------------------------------
+
+    @abc.abstractmethod
+    def _records(self, doc_id: str | None) -> list[tuple[dict, list]]:
+        """(payload fields, vector) of every point, or of one doc's."""
+
+    @abc.abstractmethod
+    def _probe(self, doc_id: str) -> bool:
+        """Whether any point of `doc_id` is stored (one small request)."""
+
+    @abc.abstractmethod
+    def _delete_request(self, doc_id: str) -> tuple[str, dict]:
+        """(path, payload) deleting every point of `doc_id`."""
+
+    @abc.abstractmethod
+    def _upsert_request(self):
+        """A `points -> (path, payload)` builder for one upsert batch. It
+        runs inside Python workers, so it captures strings only, never
+        `self` (which holds the SparkSession)."""
+
+    # -- VectorStoreBackend ----------------------------------------------
+
+    def _to_df(self, records: list[tuple[dict, list]]) -> DataFrame:
+        rows = [
+            (
+                m["doc_id"],
+                m["file_hash"],
+                int(m["chunk_no"]),
+                m["chunk_text"],
+                [float(x) for x in vec],
+            )
+            for m, vec in records
+        ]
+        return self.spark.createDataFrame(rows, schema=CHUNKS)
+
+    def read_chunks(self) -> DataFrame:
+        return self._to_df(self._records(None))
+
+    def existing_doc_ids(self) -> DataFrame:
+        seen = sorted({m["doc_id"] for m, _ in self._records(None)})
+        return self.spark.createDataFrame(
+            [(d,) for d in seen], schema="doc_id string"
+        )
+
+    def _chunks_for_doc(self, doc_id: str) -> DataFrame:
+        return self._to_df(self._records(doc_id))
+
+    def delete_docs(self, doc_ids: list[str]) -> None:
+        for doc_id in doc_ids:
+            self._call(*self._delete_request(_safe_doc_id(doc_id)))
+
+    def _docs_present(self, doc_ids: list[str]) -> set[str]:
+        return {d for d in doc_ids if self._probe(d)}
+
+    def _write(self, incoming: DataFrame) -> int:
+        import pandas as pd
+
+        url, transport, headers = self.base_url, self.transport, self.headers
+        batch_size, build = self.batch_size, self._upsert_request()
+
+        def post_batches(batches):
+            for pdf in batches:
+                for i in range(0, len(pdf), batch_size):
+                    points = [
+                        {
+                            "id": f"{r.doc_id}:{int(r.chunk_no)}",
+                            "vector": [float(x) for x in r.embedding],
+                            "payload": {
+                                "doc_id": r.doc_id,
+                                "file_hash": r.file_hash,
+                                "chunk_no": int(r.chunk_no),
+                                "chunk_text": r.chunk_text,
+                            },
+                        }
+                        for r in pdf.iloc[i : i + batch_size].itertuples()
+                    ]
+                    path, payload = build(points)
+                    transport(f"{url}/{path}", payload, headers)
+                    yield pd.DataFrame({"n": [len(points)]})
+
+        written = incoming.mapInPandas(post_batches, schema="n long")
+        return int(written.agg(F.sum("n")).collect()[0][0] or 0)
 
 
-class RestVectorStore(VectorStoreBackend):
-    """Qdrant-shaped external vector store over a JSON/REST transport.
+def _point_uuid(point_id: str) -> str:
+    """Deterministic uuid5 of the generic `<doc_id>:<chunk_no>` id, for
+    services that accept only UUID ids: the same chunk keeps the same
+    id, so re-upserts stay idempotent (last write wins), while doc_id
+    and chunk_no stay authoritative in the payload."""
+    return str(uuid.uuid5(uuid.NAMESPACE_URL, point_id))
 
-    Reference adapters/vectordb/{qdrant,pinecone,weaviate,milvus}/ all
-    wrap point-store services with the same access pattern: ensure a
-    collection sized to the embedding dimension, upsert points
-    `{id, vector, payload}` in batches, and run doc_id-filtered top-k
-    similarity queries (query semantics sdk1/index.py:65-131). This
-    backend speaks that protocol in the Qdrant REST shape:
+
+class RestVectorStore(_PointStore):
+    """Qdrant-shaped point store over a JSON/REST transport:
 
     - `PUT  collections/<name>`                    — ensure collection
     - `PUT  collections/<name>/points`             — batched upsert
@@ -386,20 +507,9 @@ class RestVectorStore(VectorStoreBackend):
     - `POST collections/<name>/points/delete`      — reindex delete
     - `POST collections/<name>/points/search`      — server-side top-k
 
-    Scale shape: upserts run inside `mapInPandas`, one HTTP batch per
-    Arrow batch per partition — N executors post concurrently and
-    nothing funnels through the driver. Reads are doc-scoped by
-    contract (one document's chunks, the reference's only query shape),
-    so the scroll result is bounded by a single document regardless of
-    index size; the unbounded-scan paths (`read_chunks`,
-    `existing_doc_ids`) page through scroll and exist for tests and
-    small indexes — the 100 TB index lives in the in-engine store, with
-    external stores fed doc-by-doc exactly like the reference feeds
-    pgvector/Qdrant.
-
-    Ranking runs engine-side through the shared `query_topk` so results
-    are bit-identical across backends; `search_topk_request` emits the
-    pushed-down server-side query for live deployments.
+    Live Qdrant accepts only unsigned-int or UUID point ids — the
+    generic `<doc_id>:<chunk_no>` string would 400 — so points are
+    stored under its `_point_uuid`.
     """
 
     def __init__(
@@ -414,25 +524,23 @@ class RestVectorStore(VectorStoreBackend):
         batch_size: int = 256,
         ensure: bool = True,
     ):
-        from unstract_spark.providers import http_json_transport
-
-        self.spark = spark
-        self.base_url = base_url.rstrip("/")
-        self.transport = transport or http_json_transport
-        self.dim = dim
+        headers = {"api-key": api_key} if api_key else {}
+        super().__init__(spark, base_url, transport, headers, batch_size, dim)
         self.collection = collection or collection_name(prefix, dim)
-        self.headers = {"api-key": api_key} if api_key else {}
-        self.batch_size = batch_size
         if ensure:
             self._call(
                 f"collections/{self.collection}",
                 {"vectors": {"size": dim, "distance": "Cosine"}},
             )
 
-    def _call(self, path: str, payload: dict) -> dict:
-        return self.transport(f"{self.base_url}/{path}", payload, self.headers)
+    @staticmethod
+    def _doc_filter(doc_id: str) -> dict:
+        return {
+            "must": [{"key": "doc_id", "match": {"value": _safe_doc_id(doc_id)}}]
+        }
 
-    def _scroll(self, flt: dict | None) -> list[dict]:
+    def _records(self, doc_id: str | None) -> list[tuple[dict, list]]:
+        flt = None if doc_id is None else self._doc_filter(doc_id)
         points, offset = [], None
         while True:
             body = self._call(
@@ -449,96 +557,30 @@ class RestVectorStore(VectorStoreBackend):
             points.extend(result.get("points") or [])
             offset = result.get("next_page_offset")
             if offset is None:
-                return points
+                return [(p["payload"], p["vector"]) for p in points]
 
-    @staticmethod
-    def _doc_filter(doc_id: str) -> dict:
-        return {
-            "must": [{"key": "doc_id", "match": {"value": _safe_doc_id(doc_id)}}]
-        }
-
-    def _to_df(self, points: list[dict]) -> DataFrame:
-        from unstract_spark.schemas import CHUNKS
-
-        rows = [
-            (
-                p["payload"]["doc_id"],
-                p["payload"]["file_hash"],
-                int(p["payload"]["chunk_no"]),
-                p["payload"]["chunk_text"],
-                [float(x) for x in p["vector"]],
-            )
-            for p in points
-        ]
-        return self.spark.createDataFrame(rows, schema=CHUNKS)
-
-    # -- VectorStoreBackend ----------------------------------------------
-
-    def read_chunks(self) -> DataFrame:
-        return self._to_df(self._scroll(None))
-
-    def existing_doc_ids(self) -> DataFrame:
-        seen = sorted(
-            {p["payload"]["doc_id"] for p in self._scroll(None)}
+    def _probe(self, doc_id: str) -> bool:
+        body = self._call(
+            f"collections/{self.collection}/points/scroll",
+            {"filter": self._doc_filter(doc_id), "limit": 1, "with_payload": False},
         )
-        return self.spark.createDataFrame(
-            [(d,) for d in seen], schema="doc_id string"
+        return bool((body.get("result") or {}).get("points"))
+
+    def _delete_request(self, doc_id: str) -> tuple[str, dict]:
+        return (
+            f"collections/{self.collection}/points/delete",
+            {"filter": self._doc_filter(doc_id)},
         )
 
-    def delete_docs(self, doc_ids: list[str]) -> None:
-        for doc_id in doc_ids:
-            self._call(
-                f"collections/{self.collection}/points/delete",
-                {"filter": self._doc_filter(doc_id)},
-            )
+    def _upsert_request(self):
+        path = f"collections/{self.collection}/points"
 
-    def _docs_present(self, doc_ids: list[str]) -> set[str]:
-        """Per-doc existence probe: one limit-1 filtered scroll per
-        incoming doc_id — O(batch docs), never a scan of the remote
-        index (the reference probes per doc_id the same way,
-        index.py:293-335)."""
-        present = set()
-        for d in doc_ids:
-            body = self._call(
-                f"collections/{self.collection}/points/scroll",
-                {"filter": self._doc_filter(d), "limit": 1, "with_payload": False},
-            )
-            if (body.get("result") or {}).get("points"):
-                present.add(d)
-        return present
+        def build(points: list[dict]) -> tuple[str, dict]:
+            return path, {
+                "points": [{**p, "id": _point_uuid(p["id"])} for p in points]
+            }
 
-    def upsert(self, chunks: DataFrame, reindex: bool = False) -> int:
-        incoming = chunks.select(*CHUNK_COLS)
-        ids = [r.doc_id for r in incoming.select("doc_id").distinct().collect()]
-        if reindex:
-            self.delete_docs(ids)
-        else:
-            present = self._docs_present(ids)
-            if present:
-                incoming = incoming.filter(~F.col("doc_id").isin(list(present)))
-        url, coll = self.base_url, self.collection
-
-        def build_request(points: list[dict]) -> tuple[str, dict]:
-            # Live Qdrant accepts only unsigned-int or UUID point ids —
-            # the generic `<doc_id>:<chunk_no>` string would 400. A
-            # deterministic uuid5 of that string keeps upserts
-            # idempotent (same chunk → same id → last-write-wins) while
-            # doc_id/chunk_no stay authoritative in the payload, which
-            # is what every filter and read-back path already uses.
-            import uuid
-
-            pts = [
-                {**p, "id": str(uuid.uuid5(uuid.NAMESPACE_URL, p["id"]))}
-                for p in points
-            ]
-            return f"{url}/collections/{coll}/points", {"points": pts}
-
-        return _distributed_point_upsert(
-            incoming, self.batch_size, self.transport, self.headers, build_request
-        )
-
-    def _chunks_for_doc(self, doc_id: str) -> DataFrame:
-        return self._to_df(self._scroll(self._doc_filter(doc_id)))
+        return build
 
     def search_topk_request(
         self, doc_id: str, query_vec: list[float], k: int = 5
@@ -559,11 +601,9 @@ class RestVectorStore(VectorStoreBackend):
         )
 
 
-class PineconeVectorStore(VectorStoreBackend):
-    """Pinecone-shaped external vector store (third external protocol).
-
-    Reference adapters/vectordb/pinecone wraps the same contract; the
-    public data-plane API differs from Qdrant in spelling, not shape:
+class PineconeVectorStore(_PointStore):
+    """Pinecone-shaped point store (data-plane API; same shape as
+    Qdrant, different spelling):
 
     - `POST {host}/vectors/upsert`  {"vectors": [{id, values,
       metadata}], "namespace"} — batched upsert ({"upsertedCount"}).
@@ -580,9 +620,7 @@ class PineconeVectorStore(VectorStoreBackend):
     Index creation is control-plane (api.pinecone.io), out of band —
     like the reference, which assumes the index exists. The transport
     seam treats every endpoint as a JSON call; GET-styled endpoints are
-    modeled as POST bodies (the fake and a real adapter shim both
-    accept that). Same distributed upsert and engine-side ranking as
-    every other backend.
+    modeled as POST bodies (a real adapter shim accepts that).
     """
 
     def __init__(
@@ -594,18 +632,12 @@ class PineconeVectorStore(VectorStoreBackend):
         api_key: str | None = None,
         batch_size: int = 256,
     ):
-        from unstract_spark.providers import http_json_transport
-
-        self.spark = spark
-        self.host = host.rstrip("/")
-        self.transport = transport or http_json_transport
+        headers = {"Api-Key": api_key} if api_key else {}
+        super().__init__(spark, host, transport, headers, batch_size)
         self.namespace = namespace
-        self.headers = {"Api-Key": api_key} if api_key else {}
-        self.batch_size = batch_size
 
     def _call(self, path: str, payload: dict) -> dict:
-        payload = {**payload, "namespace": self.namespace}
-        return self.transport(f"{self.host}/{path}", payload, self.headers)
+        return super()._call(path, {**payload, "namespace": self.namespace})
 
     def _list_ids(self, prefix: str | None) -> list[str]:
         ids, token = [], None
@@ -619,98 +651,51 @@ class PineconeVectorStore(VectorStoreBackend):
             if not token:
                 return ids
 
-    def _fetch(self, ids: list[str]) -> list[dict]:
-        out: list[dict] = []
+    def _records(self, doc_id: str | None) -> list[tuple[dict, list]]:
+        ids = self._list_ids(None if doc_id is None else f"{doc_id}:")
+        vecs: list[dict] = []
         for i in range(0, len(ids), 100):
             body = self._call("vectors/fetch", {"ids": ids[i : i + 100]})
-            out.extend((body.get("vectors") or {}).values())
-        return out
-
-    def _to_df(self, vectors: list[dict]) -> DataFrame:
-        from unstract_spark.schemas import CHUNKS
-
-        rows = [
-            (
-                v["metadata"]["doc_id"],
-                v["metadata"]["file_hash"],
-                int(v["metadata"]["chunk_no"]),
-                v["metadata"]["chunk_text"],
-                [float(x) for x in v["values"]],
-            )
-            for v in vectors
+            vecs.extend((body.get("vectors") or {}).values())
+        # exact-match guard: doc ids may legally contain ':', so the
+        # prefix "a:" would also match doc "a:1"'s points — filter on
+        # the metadata doc_id, which is authoritative
+        return [
+            (v["metadata"], v["values"])
+            for v in vecs
+            if doc_id is None or v["metadata"]["doc_id"] == doc_id
         ]
-        return self.spark.createDataFrame(rows, schema=CHUNKS)
-
-    # -- VectorStoreBackend ----------------------------------------------
-
-    def read_chunks(self) -> DataFrame:
-        return self._to_df(self._fetch(self._list_ids(None)))
 
     def existing_doc_ids(self) -> DataFrame:
+        """From the id listing alone (`<doc_id>:<chunk_no>` ids), with
+        no vector fetch."""
         seen = sorted({pid.rsplit(":", 1)[0] for pid in self._list_ids(None)})
         return self.spark.createDataFrame(
             [(d,) for d in seen], schema="doc_id string"
         )
 
-    def delete_docs(self, doc_ids: list[str]) -> None:
-        for doc_id in doc_ids:
-            self._call(
-                "vectors/delete",
-                {"filter": {"doc_id": {"$eq": _safe_doc_id(doc_id)}}},
-            )
-
-    def _docs_present(self, doc_ids: list[str]) -> set[str]:
-        """Per-doc existence probe via small prefix listings —
-        O(batch docs), never a scan of the remote index. The rsplit
-        check guards against a colon-bearing doc_id ("a") matching a
-        sibling's points ("a:1:0" also starts with "a:")."""
-        present = set()
-        for d in doc_ids:
-            body = self._call("vectors/list", {"prefix": f"{d}:", "limit": 5})
-            ids = [v["id"] for v in body.get("vectors") or []]
-            if any(i.rsplit(":", 1)[0] == d for i in ids):
-                present.add(d)
-        return present
-
-    def upsert(self, chunks: DataFrame, reindex: bool = False) -> int:
-        incoming = chunks.select(*CHUNK_COLS)
-        ids = [r.doc_id for r in incoming.select("doc_id").distinct().collect()]
-        if reindex:
-            self.delete_docs(ids)
-        else:
-            present = self._docs_present(ids)
-            if present:
-                incoming = incoming.filter(~F.col("doc_id").isin(list(present)))
-        host, ns = self.host, self.namespace
-
-        def build_request(points: list[dict]) -> tuple[str, dict]:
-            return (
-                f"{host}/vectors/upsert",
-                {
-                    "vectors": [
-                        {
-                            "id": p["id"],
-                            "values": p["vector"],
-                            "metadata": p["payload"],
-                        }
-                        for p in points
-                    ],
-                    "namespace": ns,
-                },
-            )
-
-        return _distributed_point_upsert(
-            incoming, self.batch_size, self.transport, self.headers, build_request
+    def _probe(self, doc_id: str) -> bool:
+        # the rsplit check keeps doc "a" from matching doc "a:1"'s
+        # points ("a:1:0" also starts with "a:")
+        body = self._call("vectors/list", {"prefix": f"{doc_id}:", "limit": 5})
+        return any(
+            v["id"].rsplit(":", 1)[0] == doc_id for v in body.get("vectors") or []
         )
 
-    def _chunks_for_doc(self, doc_id: str) -> DataFrame:
-        did = _safe_doc_id(doc_id)
-        ids = self._list_ids(f"{did}:")
-        # exact-match guard: doc ids may legally contain ':', so the
-        # prefix "a:" would also match doc "a:1"'s points — filter on
-        # the metadata doc_id, which is authoritative
-        vecs = [v for v in self._fetch(ids) if v["metadata"]["doc_id"] == did]
-        return self._to_df(vecs)
+    def _delete_request(self, doc_id: str) -> tuple[str, dict]:
+        return "vectors/delete", {"filter": {"doc_id": {"$eq": doc_id}}}
+
+    def _upsert_request(self):
+        ns = self.namespace
+
+        def build(points: list[dict]) -> tuple[str, dict]:
+            vectors = [
+                {"id": p["id"], "values": p["vector"], "metadata": p["payload"]}
+                for p in points
+            ]
+            return "vectors/upsert", {"vectors": vectors, "namespace": ns}
+
+        return build
 
     def search_topk_request(
         self, doc_id: str, query_vec: list[float], k: int = 5
@@ -729,13 +714,9 @@ class PineconeVectorStore(VectorStoreBackend):
         )
 
 
-class MilvusVectorStore(VectorStoreBackend):
-    """Milvus-shaped external vector store (RESTful v2 data plane).
-
-    Reference adapters/vectordb/milvus wraps MilvusClient/llama-index
-    (milvus.py:24-60) behind the same upsert/query contract; this
-    backend speaks the public Milvus v2 REST spelling over the
-    injected-transport seam:
+class MilvusVectorStore(_PointStore):
+    """Milvus-shaped point store (RESTful v2 data plane; reference
+    adapters/vectordb/milvus wraps MilvusClient, milvus.py:24-60):
 
     - `POST /v2/vectordb/collections/create` — ensure collection
       (dimension + COSINE metric; string primary key, dynamic fields).
@@ -749,8 +730,7 @@ class MilvusVectorStore(VectorStoreBackend):
 
     Milvus filters are expression STRINGS, so doc ids pass through
     `_safe_doc_id` before entering one (the same SQL-ish injection
-    guard as the JDBC store). Same distributed mapInPandas upsert and
-    engine-side ranking as every other backend.
+    guard as the JDBC store).
     """
 
     def __init__(
@@ -765,15 +745,9 @@ class MilvusVectorStore(VectorStoreBackend):
         batch_size: int = 256,
         ensure: bool = True,
     ):
-        from unstract_spark.providers import http_json_transport
-
-        self.spark = spark
-        self.base_url = base_url.rstrip("/")
-        self.transport = transport or http_json_transport
-        self.dim = dim
+        headers = {"Authorization": f"Bearer {token}"} if token else {}
+        super().__init__(spark, base_url, transport, headers, batch_size, dim)
         self.collection = collection or collection_name(prefix, dim)
-        self.headers = {"Authorization": f"Bearer {token}"} if token else {}
-        self.batch_size = batch_size
         if ensure:
             self._call(
                 "v2/vectordb/collections/create",
@@ -786,113 +760,53 @@ class MilvusVectorStore(VectorStoreBackend):
                 },
             )
 
-    def _call(self, path: str, payload: dict) -> dict:
-        return self.transport(f"{self.base_url}/{path}", payload, self.headers)
-
     @staticmethod
     def _doc_filter(doc_id: str) -> str:
         return f'doc_id == "{_safe_doc_id(doc_id)}"'
 
-    def _query(self, flt: str | None) -> list[dict]:
+    def _query(self, flt: str, fields: list[str], limit: int, offset: int) -> list:
+        body = self._call(
+            "v2/vectordb/entities/query",
+            {
+                "collectionName": self.collection,
+                "filter": flt,
+                "outputFields": fields,
+                "limit": limit,
+                "offset": offset,
+            },
+        )
+        return body.get("data") or []
+
+    def _records(self, doc_id: str | None) -> list[tuple[dict, list]]:
+        flt = "" if doc_id is None else self._doc_filter(doc_id)
         rows, offset = [], 0
         while True:
-            body = self._call(
-                "v2/vectordb/entities/query",
-                {
-                    "collectionName": self.collection,
-                    "filter": flt or "",
-                    "outputFields": list(CHUNK_COLS),
-                    "limit": 1024,
-                    "offset": offset,
-                },
-            )
-            page = body.get("data") or []
+            page = self._query(flt, list(CHUNK_COLS), 1024, offset)
             rows.extend(page)
             if len(page) < 1024:
-                return rows
+                return [(r, r["embedding"]) for r in rows]
             offset += 1024
 
-    def _to_df(self, rows: list[dict]) -> DataFrame:
-        from unstract_spark.schemas import CHUNKS
+    def _probe(self, doc_id: str) -> bool:
+        return bool(self._query(self._doc_filter(doc_id), ["doc_id"], 1, 0))
 
-        data = [
-            (
-                r["doc_id"],
-                r["file_hash"],
-                int(r["chunk_no"]),
-                r["chunk_text"],
-                [float(x) for x in r["embedding"]],
-            )
-            for r in rows
-        ]
-        return self.spark.createDataFrame(data, schema=CHUNKS)
-
-    # -- VectorStoreBackend ----------------------------------------------
-
-    def read_chunks(self) -> DataFrame:
-        return self._to_df(self._query(None))
-
-    def existing_doc_ids(self) -> DataFrame:
-        seen = sorted({r["doc_id"] for r in self._query(None)})
-        return self.spark.createDataFrame(
-            [(d,) for d in seen], schema="doc_id string"
+    def _delete_request(self, doc_id: str) -> tuple[str, dict]:
+        return (
+            "v2/vectordb/entities/delete",
+            {"collectionName": self.collection, "filter": self._doc_filter(doc_id)},
         )
 
-    def delete_docs(self, doc_ids: list[str]) -> None:
-        for doc_id in doc_ids:
-            self._call(
-                "v2/vectordb/entities/delete",
-                {"collectionName": self.collection, "filter": self._doc_filter(doc_id)},
-            )
+    def _upsert_request(self):
+        coll = self.collection
 
-    def _docs_present(self, doc_ids: list[str]) -> set[str]:
-        """One limit-1 filtered query per incoming doc — O(batch docs),
-        never an index scan."""
-        present = set()
-        for d in doc_ids:
-            body = self._call(
-                "v2/vectordb/entities/query",
-                {
-                    "collectionName": self.collection,
-                    "filter": self._doc_filter(d),
-                    "outputFields": ["doc_id"],
-                    "limit": 1,
-                    "offset": 0,
-                },
-            )
-            if body.get("data"):
-                present.add(d)
-        return present
+        def build(points: list[dict]) -> tuple[str, dict]:
+            data = [
+                {"id": p["id"], "embedding": p["vector"], **p["payload"]}
+                for p in points
+            ]
+            return "v2/vectordb/entities/upsert", {"collectionName": coll, "data": data}
 
-    def upsert(self, chunks: DataFrame, reindex: bool = False) -> int:
-        incoming = chunks.select(*CHUNK_COLS)
-        ids = [r.doc_id for r in incoming.select("doc_id").distinct().collect()]
-        if reindex:
-            self.delete_docs(ids)
-        else:
-            present = self._docs_present(ids)
-            if present:
-                incoming = incoming.filter(~F.col("doc_id").isin(list(present)))
-        url, coll = self.base_url, self.collection
-
-        def build_request(points: list[dict]) -> tuple[str, dict]:
-            return (
-                f"{url}/v2/vectordb/entities/upsert",
-                {
-                    "collectionName": coll,
-                    "data": [
-                        {"id": p["id"], "embedding": p["vector"], **p["payload"]}
-                        for p in points
-                    ],
-                },
-            )
-
-        return _distributed_point_upsert(
-            incoming, self.batch_size, self.transport, self.headers, build_request
-        )
-
-    def _chunks_for_doc(self, doc_id: str) -> DataFrame:
-        return self._to_df(self._query(self._doc_filter(doc_id)))
+        return build
 
     def search_topk_request(
         self, doc_id: str, query_vec: list[float], k: int = 5
@@ -911,26 +825,22 @@ class MilvusVectorStore(VectorStoreBackend):
         )
 
 
-class WeaviateVectorStore(VectorStoreBackend):
-    """Weaviate-shaped external vector store (REST objects + GraphQL).
-
-    Reference adapters/vectordb/weaviate wraps weaviate-client behind
-    the shared contract; this backend speaks the public wire spelling:
+class WeaviateVectorStore(_PointStore):
+    """Weaviate-shaped point store (REST objects + GraphQL; reference
+    adapters/vectordb/weaviate wraps weaviate-client):
 
     - `POST /v1/schema`        — ensure class (vectorizer "none": the
       engine supplies vectors, matching the reference's use).
     - `POST /v1/batch/objects` — batched {class, id, properties,
       vector} objects. Weaviate REQUIRES UUID object ids, so ids are
-      the same deterministic uuid5('<doc_id>:<chunk_no>') the Qdrant
-      backend uses (idempotent re-upserts).
+      the same `_point_uuid` the Qdrant backend uses.
     - `POST /v1/graphql`       — reads: a Get query with a doc_id
       where-filter, paging via offset/limit, vectors via _additional.
     - `POST /v1/batch/delete`  — delete-by-where (match.class + where).
 
     Weaviate class names must start uppercase ([A-Z][A-Za-z0-9_]*);
     `_class_name` normalizes the shared collection naming. GraphQL
-    strings embed only _safe_doc_id-validated literals. Same
-    distributed upsert/ranking as the other point stores.
+    strings embed only _safe_doc_id-validated literals.
     """
 
     def __init__(
@@ -945,15 +855,9 @@ class WeaviateVectorStore(VectorStoreBackend):
         batch_size: int = 256,
         ensure: bool = True,
     ):
-        from unstract_spark.providers import http_json_transport
-
-        self.spark = spark
-        self.base_url = base_url.rstrip("/")
-        self.transport = transport or http_json_transport
-        self.dim = dim
+        headers = {"Authorization": f"Bearer {api_key}"} if api_key else {}
+        super().__init__(spark, base_url, transport, headers, batch_size, dim)
         self.cls = self._class_name(collection or collection_name(prefix, dim))
-        self.headers = {"Authorization": f"Bearer {api_key}"} if api_key else {}
-        self.batch_size = batch_size
         if ensure:
             self._call(
                 "v1/schema",
@@ -974,122 +878,51 @@ class WeaviateVectorStore(VectorStoreBackend):
         cleaned = re.sub(r"[^A-Za-z0-9_]", "_", name)
         return cleaned[:1].upper() + cleaned[1:]
 
-    def _call(self, path: str, payload: dict) -> dict:
-        return self.transport(f"{self.base_url}/{path}", payload, self.headers)
-
     def _where(self, doc_id: str) -> str:
         return (
             '{path: ["doc_id"], operator: Equal, '
             f'valueText: "{_safe_doc_id(doc_id)}"}}'
         )
 
-    def _graphql_get(self, where: str | None) -> list[dict]:
+    def _get(self, args: str, fields: str) -> list[dict]:
+        q = f"{{ Get {{ {self.cls}({args}) {{ {fields} }} }} }}"
+        body = self._call("v1/graphql", {"query": q})
+        return ((body.get("data") or {}).get("Get") or {}).get(self.cls) or []
+
+    def _records(self, doc_id: str | None) -> list[tuple[dict, list]]:
+        where = "" if doc_id is None else f", where: {self._where(doc_id)}"
+        fields = "doc_id file_hash chunk_no chunk_text _additional { vector }"
         objs, offset = [], 0
         while True:
-            args = [f"limit: 1024, offset: {offset}"]
-            if where:
-                args.append(f"where: {where}")
-            q = (
-                f"{{ Get {{ {self.cls}({', '.join(args)}) "
-                "{ doc_id file_hash chunk_no chunk_text "
-                "_additional { vector } } } }"
-            )
-            body = self._call("v1/graphql", {"query": q})
-            page = ((body.get("data") or {}).get("Get") or {}).get(self.cls) or []
+            page = self._get(f"limit: 1024, offset: {offset}{where}", fields)
             objs.extend(page)
             if len(page) < 1024:
-                return objs
+                return [(o, o["_additional"]["vector"]) for o in objs]
             offset += 1024
 
-    def _to_df(self, objs: list[dict]) -> DataFrame:
-        from unstract_spark.schemas import CHUNKS
+    def _probe(self, doc_id: str) -> bool:
+        return bool(self._get(f"limit: 1, where: {self._where(doc_id)}", "doc_id"))
 
-        rows = [
-            (
-                o["doc_id"],
-                o["file_hash"],
-                int(o["chunk_no"]),
-                o["chunk_text"],
-                [float(x) for x in o["_additional"]["vector"]],
-            )
-            for o in objs
-        ]
-        return self.spark.createDataFrame(rows, schema=CHUNKS)
+    def _delete_request(self, doc_id: str) -> tuple[str, dict]:
+        where = {"path": ["doc_id"], "operator": "Equal", "valueText": doc_id}
+        return "v1/batch/delete", {"match": {"class": self.cls, "where": where}}
 
-    # -- VectorStoreBackend ----------------------------------------------
+    def _upsert_request(self):
+        cls = self.cls
 
-    def read_chunks(self) -> DataFrame:
-        return self._to_df(self._graphql_get(None))
-
-    def existing_doc_ids(self) -> DataFrame:
-        seen = sorted({o["doc_id"] for o in self._graphql_get(None)})
-        return self.spark.createDataFrame(
-            [(d,) for d in seen], schema="doc_id string"
-        )
-
-    def delete_docs(self, doc_ids: list[str]) -> None:
-        for doc_id in doc_ids:
-            self._call(
-                "v1/batch/delete",
+        def build(points: list[dict]) -> tuple[str, dict]:
+            objects = [
                 {
-                    "match": {
-                        "class": self.cls,
-                        "where": {
-                            "path": ["doc_id"],
-                            "operator": "Equal",
-                            "valueText": _safe_doc_id(doc_id),
-                        },
-                    }
-                },
-            )
+                    "class": cls,
+                    "id": _point_uuid(p["id"]),
+                    "properties": p["payload"],
+                    "vector": p["vector"],
+                }
+                for p in points
+            ]
+            return "v1/batch/objects", {"objects": objects}
 
-    def _docs_present(self, doc_ids: list[str]) -> set[str]:
-        present = set()
-        for d in doc_ids:
-            q = (
-                f"{{ Get {{ {self.cls}(limit: 1, where: {self._where(d)}) "
-                "{ doc_id } } }"
-            )
-            body = self._call("v1/graphql", {"query": q})
-            if ((body.get("data") or {}).get("Get") or {}).get(self.cls):
-                present.add(d)
-        return present
-
-    def upsert(self, chunks: DataFrame, reindex: bool = False) -> int:
-        incoming = chunks.select(*CHUNK_COLS)
-        ids = [r.doc_id for r in incoming.select("doc_id").distinct().collect()]
-        if reindex:
-            self.delete_docs(ids)
-        else:
-            present = self._docs_present(ids)
-            if present:
-                incoming = incoming.filter(~F.col("doc_id").isin(list(present)))
-        url, cls = self.base_url, self.cls
-
-        def build_request(points: list[dict]) -> tuple[str, dict]:
-            import uuid
-
-            return (
-                f"{url}/v1/batch/objects",
-                {
-                    "objects": [
-                        {
-                            "class": cls,
-                            "id": str(uuid.uuid5(uuid.NAMESPACE_URL, p["id"])),
-                            "properties": p["payload"],
-                            "vector": p["vector"],
-                        }
-                        for p in points
-                    ]
-                },
-            )
-
-        return _distributed_point_upsert(
-            incoming, self.batch_size, self.transport, self.headers, build_request
-        )
-
-    def _chunks_for_doc(self, doc_id: str) -> DataFrame:
-        return self._to_df(self._graphql_get(self._where(doc_id)))
+        return build
 
     def search_topk_request(
         self, doc_id: str, query_vec: list[float], k: int = 5
@@ -1104,345 +937,6 @@ class WeaviateVectorStore(VectorStoreBackend):
             "{ doc_id chunk_no chunk_text _additional { distance } } } }"
         )
         return "v1/graphql", {"query": q}
-
-
-def make_fake_milvus_transport(state_dir: str):
-    """File-backed Milvus v2 REST stand-in (same atomic-batch-file
-    design as the qdrant/pinecone fakes, same race-tolerant rewrite)."""
-    import json
-    import os
-    import re as _re
-    import uuid
-
-    os.makedirs(state_dir, exist_ok=True)
-
-    def _merged() -> dict[str, dict]:
-        rows: dict[str, dict] = {}
-        for name in sorted(os.listdir(state_dir)):
-            if name.endswith(".json"):
-                try:
-                    with open(os.path.join(state_dir, name)) as fh:
-                        batch = json.load(fh)
-                except FileNotFoundError:
-                    continue
-                for r in batch:
-                    rows[str(r["id"])] = r
-        return rows
-
-    def _write_batch(rows: list[dict]) -> None:
-        tmp = os.path.join(state_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(rows, fh)
-        os.replace(tmp, os.path.join(state_dir, f"batch-{uuid.uuid4().hex}.json"))
-
-    def _rewrite(rows: dict[str, dict]) -> None:
-        import contextlib
-
-        old = [n for n in os.listdir(state_dir) if n.endswith(".json")]
-        _write_batch(list(rows.values()))
-        for name in old:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(os.path.join(state_dir, name))
-
-    def _filter_doc(flt: str) -> str | None:
-        if not flt:
-            return None
-        m = _re.fullmatch(r'doc_id == "([^"]*)"', flt)
-        if not m:
-            raise ValueError(f"fake milvus only supports doc_id filters: {flt}")
-        return m.group(1)
-
-    def transport(url: str, payload: dict, headers: dict) -> dict:
-        if url.endswith("/collections/create"):
-            return {"code": 0}
-        if url.endswith("/entities/upsert"):
-            _write_batch(payload["data"])
-            return {"code": 0, "data": {"upsertCount": len(payload["data"])}}
-        if url.endswith("/entities/query"):
-            want = _filter_doc(payload.get("filter") or "")
-            rows = sorted(
-                (
-                    r
-                    for r in _merged().values()
-                    if want is None or r.get("doc_id") == want
-                ),
-                key=lambda r: str(r["id"]),
-            )
-            start = int(payload.get("offset") or 0)
-            limit = int(payload.get("limit") or 1024)
-            return {"code": 0, "data": rows[start : start + limit]}
-        if url.endswith("/entities/delete"):
-            want = _filter_doc(payload["filter"])
-            kept = {
-                i: r for i, r in _merged().items() if r.get("doc_id") != want
-            }
-            _rewrite(kept)
-            return {"code": 0}
-        raise ValueError(f"unexpected milvus endpoint: {url}")
-
-    return transport
-
-
-def make_fake_weaviate_transport(state_dir: str):
-    """File-backed Weaviate stand-in: batch/objects + batch/delete +
-    a small GraphQL Get interpreter (enough grammar for the queries the
-    backend emits — class, limit/offset, where doc_id Equal,
-    _additional.vector)."""
-    import json
-    import os
-    import re as _re
-    import uuid
-
-    os.makedirs(state_dir, exist_ok=True)
-
-    def _merged() -> dict[str, dict]:
-        objs: dict[str, dict] = {}
-        for name in sorted(os.listdir(state_dir)):
-            if name.endswith(".json"):
-                try:
-                    with open(os.path.join(state_dir, name)) as fh:
-                        batch = json.load(fh)
-                except FileNotFoundError:
-                    continue
-                for o in batch:
-                    objs[str(o["id"])] = o
-        return objs
-
-    def _write_batch(objs: list[dict]) -> None:
-        tmp = os.path.join(state_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(objs, fh)
-        os.replace(tmp, os.path.join(state_dir, f"batch-{uuid.uuid4().hex}.json"))
-
-    def _rewrite(objs: dict[str, dict]) -> None:
-        import contextlib
-
-        old = [n for n in os.listdir(state_dir) if n.endswith(".json")]
-        _write_batch(list(objs.values()))
-        for name in old:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(os.path.join(state_dir, name))
-
-    def _run_graphql(query: str) -> dict:
-        m = _re.search(r"Get \{ (\w+)\(([^)]*)\)", query)
-        if not m:
-            raise ValueError(f"fake weaviate can't parse: {query}")
-        cls, args = m.group(1), m.group(2)
-        lim = _re.search(r"limit: (\d+)", args)
-        off = _re.search(r"offset: (\d+)", args)
-        want = _re.search(r'valueText: "([^"]*)"', args)
-        objs = sorted(
-            (
-                o
-                for o in _merged().values()
-                if o["class"] == cls
-                and (want is None or o["properties"]["doc_id"] == want.group(1))
-            ),
-            key=lambda o: str(o["id"]),
-        )
-        start = int(off.group(1)) if off else 0
-        limit = int(lim.group(1)) if lim else 1024
-        page = [
-            {**o["properties"], "_additional": {"vector": o["vector"]}}
-            for o in objs[start : start + limit]
-        ]
-        return {"data": {"Get": {cls: page}}}
-
-    def transport(url: str, payload: dict, headers: dict) -> dict:
-        if url.endswith("/v1/schema"):
-            return {"class": payload["class"]}
-        if url.endswith("/v1/batch/objects"):
-            _write_batch(payload["objects"])
-            return {"results": [{"status": "SUCCESS"}] * len(payload["objects"])}
-        if url.endswith("/v1/graphql"):
-            return _run_graphql(payload["query"])
-        if url.endswith("/v1/batch/delete"):
-            match = payload["match"]
-            want = match["where"]["valueText"]
-            kept = {
-                i: o
-                for i, o in _merged().items()
-                if not (
-                    o["class"] == match["class"]
-                    and o["properties"]["doc_id"] == want
-                )
-            }
-            _rewrite(kept)
-            return {"results": {"successful": 1}}
-        raise ValueError(f"unexpected weaviate endpoint: {url}")
-
-    return transport
-
-
-def make_fake_pinecone_transport(state_dir: str):
-    """File-backed Pinecone data-plane stand-in (same design as the
-    qdrant fake: atomically-renamed batch files so concurrent executor
-    posts compose; last-write-wins per id)."""
-    import json
-    import os
-    import uuid
-
-    os.makedirs(state_dir, exist_ok=True)
-
-    def _merged() -> dict[str, dict]:
-        vecs: dict[str, dict] = {}
-        for name in sorted(os.listdir(state_dir)):
-            if name.endswith(".json"):
-                # A concurrent _rewrite may unlink a file between the
-                # listdir and the open — a real Pinecone's server-side
-                # delete is atomic, so mirror that by skipping it.
-                try:
-                    with open(os.path.join(state_dir, name)) as fh:
-                        batch = json.load(fh)
-                except FileNotFoundError:
-                    continue
-                for v in batch:
-                    vecs[str(v["id"])] = v
-        return vecs
-
-    def _write_batch(vectors: list[dict]) -> None:
-        tmp = os.path.join(state_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(vectors, fh)
-        os.replace(tmp, os.path.join(state_dir, f"batch-{uuid.uuid4().hex}.json"))
-
-    def _rewrite(vectors: dict[str, dict]) -> None:
-        # Delete-by-filter is atomic on a real server. Approximate that
-        # here: snapshot the current batch files, land the merged
-        # survivor batch FIRST (atomic rename), then unlink only the
-        # snapshotted files — tolerating ones a racing _rewrite already
-        # removed. Readers never observe an empty window, and two
-        # concurrent rewriters converge to last-write-wins per id.
-        import contextlib
-
-        old = [n for n in os.listdir(state_dir) if n.endswith(".json")]
-        _write_batch(list(vectors.values()))
-        for name in old:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(os.path.join(state_dir, name))
-
-    def transport(url: str, payload: dict, headers: dict) -> dict:
-        if url.endswith("/vectors/upsert"):
-            _write_batch(payload["vectors"])
-            return {"upsertedCount": len(payload["vectors"])}
-        if url.endswith("/vectors/list"):
-            prefix = payload.get("prefix") or ""
-            hits = sorted(i for i in _merged() if i.startswith(prefix))
-            start = int(payload.get("paginationToken") or 0)
-            limit = int(payload.get("limit") or 100)
-            page = hits[start : start + limit]
-            nxt = start + limit if start + limit < len(hits) else None
-            out = {"vectors": [{"id": i} for i in page]}
-            if nxt is not None:
-                out["pagination"] = {"next": str(nxt)}
-            return out
-        if url.endswith("/vectors/fetch"):
-            merged = _merged()
-            return {
-                "vectors": {
-                    i: merged[i] for i in payload.get("ids") or [] if i in merged
-                }
-            }
-        if url.endswith("/vectors/delete"):
-            flt = payload.get("filter") or {}
-            want = (flt.get("doc_id") or {}).get("$eq")
-            kept = {
-                i: v
-                for i, v in _merged().items()
-                if v["metadata"].get("doc_id") != want
-            }
-            _rewrite(kept)
-            return {}
-        raise ValueError(f"unexpected pinecone endpoint: {url}")
-
-    return transport
-
-
-def make_fake_qdrant_transport(state_dir: str):
-    """File-backed Qdrant REST stand-in. Point batches land as one
-    atomically-renamed JSON file each, so concurrent posts from many
-    Spark *worker processes* compose without locks — which is exactly
-    what lets the distributed mapInPandas upsert be exercised for real
-    in tests (an in-memory dict would silently vanish across the
-    executor process boundary). Scroll/delete/search read the merged
-    state; last-write-wins per point id mirrors Qdrant upsert
-    semantics."""
-    import json
-    import os
-    import uuid
-
-    os.makedirs(state_dir, exist_ok=True)
-
-    def _merged() -> dict[str, dict]:
-        points: dict[str, dict] = {}
-        for name in sorted(os.listdir(state_dir)):
-            if not name.endswith(".json"):
-                continue
-            # A racing _rewrite may have unlinked this file after the
-            # listdir; a real Qdrant's delete-by-filter is atomic
-            # server-side, so skipping the vanished file mirrors what a
-            # live deployment would observe.
-            try:
-                with open(os.path.join(state_dir, name)) as fh:
-                    batch = json.load(fh)
-            except FileNotFoundError:
-                continue
-            for p in batch:
-                points[str(p["id"])] = p
-        return points
-
-    def _rewrite(points: dict[str, dict]) -> None:
-        # Land the merged survivor batch first (atomic rename), then
-        # unlink only the files that existed before it — so concurrent
-        # readers/rewriters never see an empty store and the loser of a
-        # remove race just skips the already-gone file.
-        import contextlib
-
-        old = [n for n in os.listdir(state_dir) if n.endswith(".json")]
-        _write_batch(list(points.values()))
-        for name in old:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(os.path.join(state_dir, name))
-
-    def _write_batch(points: list[dict]) -> None:
-        tmp = os.path.join(state_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(points, fh)
-        os.replace(tmp, os.path.join(state_dir, f"batch-{uuid.uuid4().hex}.json"))
-
-    def _matches(p: dict, flt: dict | None) -> bool:
-        for cond in (flt or {}).get("must", []):
-            if p["payload"].get(cond["key"]) != cond["match"]["value"]:
-                return False
-        return True
-
-    def transport(url: str, payload: dict, headers: dict) -> dict:
-        if url.endswith("/points"):
-            _write_batch(payload["points"])
-            return {"result": {"status": "acknowledged"}}
-        if url.endswith("/points/scroll"):
-            flt = payload.get("filter")
-            hits = sorted(
-                (p for p in _merged().values() if _matches(p, flt)),
-                key=lambda p: str(p["id"]),
-            )
-            start = int(payload.get("offset") or 0)
-            limit = int(payload.get("limit") or 1024)
-            page = hits[start : start + limit]
-            nxt = start + limit if start + limit < len(hits) else None
-            return {"result": {"points": page, "next_page_offset": nxt}}
-        if url.endswith("/points/delete"):
-            flt = payload.get("filter")
-            kept = {
-                pid: p for pid, p in _merged().items() if not _matches(p, flt)
-            }
-            _rewrite(kept)
-            return {"result": {"status": "acknowledged"}}
-        if url.rstrip("/").endswith(("/collections", "collections")) or "/collections/" in url:
-            return {"result": True}  # ensure-collection is a no-op here
-        raise ValueError(f"unexpected qdrant endpoint: {url}")
-
-    return transport
 
 
 # -- backend registry (the adapters/vectordb registration surface) -------
