@@ -74,6 +74,33 @@ def test_concurrent_index_upserts_lose_nothing(spark, tmp_path):
     assert store.existing_doc_ids().count() == 4
 
 
+def test_crashed_swap_keeps_the_ledger(spark, tmp_path):
+    """A crash between swap_commit's two renames leaves each ledger only
+    at `<path>.old-<ms>`. Readers read that copy in place; the next
+    writer renames the newest copy back (ordered by number, not by
+    name), builds on its rows and deletes the stray copies."""
+    hist_path, idx_path = str(tmp_path / "hist"), str(tmp_path / "idx")
+    hist, idx = FileHistoryStore(spark, hist_path), VectorIndexStore(spark, idx_path)
+    hist.merge(_hist_rows(spark, "a", 5))
+    os.rename(hist_path, f"{hist_path}.old-123")
+    FileHistoryStore(spark, str(tmp_path / "stale")).merge(_hist_rows(spark, "stale", 1))
+    os.rename(tmp_path / "stale", f"{hist_path}.old-99")
+    os.makedirs(f"{hist_path}.staging-124")
+    chunks = spark.createDataFrame(
+        [(f"doc-{i}", "h", 0, f"text {i}") for i in range(3)],
+        "doc_id string, file_hash string, chunk_no int, chunk_text string",
+    )
+    idx.upsert(embed_chunks(chunks.filter("doc_id != 'doc-2'")))
+    os.rename(idx_path, f"{idx_path}.old-7")
+
+    assert hist.read().count() == 5 and idx.read().count() == 2
+    assert os.path.isdir(f"{hist_path}.old-123") and os.path.isdir(f"{idx_path}.old-7")
+    hist.merge(_hist_rows(spark, "b", 2))
+    assert idx.upsert(embed_chunks(chunks)) == 1
+    assert hist.read().count() == 7 and idx.read().count() == 3
+    assert sorted(os.listdir(tmp_path)) == ["hist", "idx"]
+
+
 def test_concurrent_claimers_never_double_claim(spark, tmp_path):
     qpath, lpath = str(tmp_path / "q"), str(tmp_path / "ledger")
     results = spark.createDataFrame(

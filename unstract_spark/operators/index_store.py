@@ -16,13 +16,11 @@ is the J4 join from operators/retrieval, scoped by the doc_id filter
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unstract_spark.schemas import CHUNKS
-from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit
+from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit, swap_table
 from unstract_spark.sinks.manifest import ledger_manifest
 from unstract_spark.sinks.vector_db import VectorStoreBackend
 
@@ -58,12 +56,19 @@ class VectorIndexStore(VectorStoreBackend):
         self._manifest = ledger_manifest(spark, path, backend)
 
     def read(self) -> DataFrame:
+        return self._read()
+
+    def _read(self, recover: bool = False) -> DataFrame:
+        """Swap backend: `swap_table` pinned by localCheckpoint (a
+        crashed swap's `.old-*` copy included; a writer passes
+        `recover`)."""
         if self._manifest is not None:
             # immutable segments: snapshot is stable without pinning
             return self._manifest.snapshot(CHUNKS)[1]
-        if not os.path.exists(self.path):
+        table = swap_table(self.path, recover)
+        if table is None:
             return self.spark.createDataFrame([], CHUNKS)
-        return self.spark.read.parquet(self.path).localCheckpoint(eager=True)
+        return self.spark.read.parquet(table).localCheckpoint(eager=True)
 
     def read_chunks(self) -> DataFrame:
         return self.read()
@@ -127,7 +132,7 @@ class VectorIndexStore(VectorStoreBackend):
         # upserts serialize instead of basing on the same snapshot and
         # losing rows
         with LedgerLock(self.path):
-            merged, incoming = merge_fn(self.read(), chunks)
+            merged, incoming = merge_fn(self._read(recover=True), chunks)
             swap_commit(self.path, merged.write)
             n = incoming.count()
         self._analyze()

@@ -18,13 +18,11 @@ Delta `MERGE ... WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT` keyed on
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unstract_spark.schemas import FILE_HISTORY
-from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit
+from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit, swap_table
 from unstract_spark.sinks.manifest import ledger_manifest
 
 MERGE_KEYS = ["cache_key", "workflow_id", "file_path"]
@@ -91,21 +89,25 @@ class FileHistoryStore:
         self._skew_ppm = skew_threshold_ppm
         self._manifest = ledger_manifest(spark, path, backend)
 
-    def _scan(self) -> DataFrame:
+    def _scan(self, recover: bool = False, pin: bool = False) -> DataFrame:
         """The ledger as a lazy frame. Swap backend: a parquet scan
-        with FILE_HISTORY as its read schema (no footer-inference job);
-        it lists the directory now and reads it when consumed, so it
-        must be consumed (or staged) before a merge() swaps the
-        directory. Manifest backend: the snapshot, whose segments are
-        immutable, with upserts resolved by newest-wins dedup-on-read
-        over the segment commit order (the LSM read path; compact()
-        folds the window cost back down)."""
+        with FILE_HISTORY as its read schema (no footer-inference job)
+        of `swap_table` (a crashed swap's `.old-*` copy included; a
+        writer passes `recover`); it lists the directory now and reads
+        it when consumed, so it must be consumed (or staged, or `pin`ned
+        by localCheckpoint) before a merge() swaps the directory.
+        Manifest backend: the snapshot, whose segments are immutable,
+        with upserts resolved by newest-wins dedup-on-read over the
+        segment commit order (the LSM read path; compact() folds the
+        window cost back down)."""
         if self._manifest is not None:
             _, df = self._manifest.snapshot_with_seq(FILE_HISTORY)
             return _newest_per_key(df)
-        if not os.path.exists(self.path):
+        table = swap_table(self.path, recover)
+        if table is None:
             return self.spark.createDataFrame([], FILE_HISTORY)
-        return self.spark.read.schema(FILE_HISTORY).parquet(self.path)
+        df = self.spark.read.schema(FILE_HISTORY).parquet(table)
+        return df.localCheckpoint(eager=True) if pin else df
 
     def read(self) -> DataFrame:
         """Snapshot read that outlives later merges. Swap backend: the
@@ -113,9 +115,7 @@ class FileHistoryStore:
         merge()'s directory swap can't invalidate open lineages.
         Manifest backend: the snapshot is stable with no
         materialization."""
-        if self._manifest is not None or not os.path.exists(self.path):
-            return self._scan()
-        return self._scan().localCheckpoint(eager=True)
+        return self._scan(pin=True)
 
     def merge(self, updates: DataFrame) -> None:
         """Upsert: newest row per merge key wins.
@@ -138,7 +138,7 @@ class FileHistoryStore:
             self._analyze()
             return
         with LedgerLock(self.path):
-            swap_commit(self.path, _merge_newest_wins(self._scan(), updates).write)
+            swap_commit(self.path, _merge_newest_wins(self._scan(recover=True), updates).write)
         self._analyze()
 
     def _analyze(self) -> None:

@@ -17,7 +17,8 @@ mtime. At cluster scale the ledgers become Delta/Iceberg tables and
 this file is replaced by their optimistic-concurrency commit protocol
 — the store APIs don't change (same reasoning as sinks/history.py's
 MERGE contract note). `swap_commit` is the directory swap those
-writers run under the lock.
+writers run under the lock; `swap_table` finds the table a crashed
+swap left behind.
 """
 
 from __future__ import annotations
@@ -110,3 +111,34 @@ def swap_commit(path: str, writer) -> None:
     os.rename(staging, path)
     if moved:
         shutil.rmtree(old, ignore_errors=True)
+
+
+def swap_table(path: str, recover: bool = False) -> str | None:
+    """The directory holding the swap table at `path`, or None before
+    its first commit. A crash between `swap_commit`'s two renames
+    leaves the table only at its newest `.old-*` copy: a reader reads
+    that copy where it is; a writer (`recover=True`, under
+    `LedgerLock(path)`) renames it into place and deletes the stray
+    `.staging-*` (a swap that never committed) and older `.old-*`
+    copies. When `path` exists this costs one `exists` call."""
+    if os.path.exists(path):
+        return path
+    parent, name = os.path.split(os.path.abspath(path))
+    try:
+        entries = os.listdir(parent)
+    except FileNotFoundError:
+        return None
+    old = f"{name}.old-"
+    olds = sorted(
+        (e for e in entries if e.startswith(old) and e[len(old) :].isdigit()),
+        key=lambda e: int(e[len(old) :]),
+    )
+    if not recover:
+        return os.path.join(parent, olds[-1]) if olds else None
+    for e in entries:
+        if e.startswith(f"{name}.staging-") or e in olds[:-1]:
+            shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
+    if not olds:
+        return None
+    os.rename(os.path.join(parent, olds[-1]), path)
+    return path
