@@ -1,6 +1,7 @@
-"""Per-run fixed costs the engine session and package remove: a tiny-file
-scan in one wave of tasks, no call-site capture per Column call, and no
-re-read of every unchanged zip on the Python worker path before each task."""
+"""Per-run fixed costs the engine session and package remove: a capped
+tiny-file listing scanned in one wave of tasks, no call-site capture per
+Column call, and no re-read of every unchanged zip on the Python worker
+path before each task."""
 
 from __future__ import annotations
 
@@ -13,30 +14,39 @@ import zipimport
 import pandas as pd
 
 import unstract_spark
-from unstract_spark import session
-
-MAX_PARTITIONS = "spark.sql.files.maxPartitionNum"
+from unstract_spark.sources.catalog import FilePattern, list_files
 
 
 def test_builder_turns_off_call_site_capture(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
-def test_scan_cap_is_local_only_and_yields_to_the_caller():
-    assert session._local_conf("local[3]", 8, {})[MAX_PARTITIONS] == "3"
-    assert session._local_conf("local[*]", 8, {})[MAX_PARTITIONS] == "8"
-    assert session._local_conf("local[3]", 8, {MAX_PARTITIONS: "99"})[MAX_PARTITIONS] == "99"
-    for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]"):
-        assert session._local_conf(master, 8, {"k": "v"}) == {"k": "v"}
+def _stage_tasks(spark, action) -> list[int]:
+    """The task count of every stage the jobs of `action()` ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup("stage_tasks", "stage task counts")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(s) for j in tracker.getJobIdsForGroup("stage_tasks") for s in tracker.getJobInfo(j).stageIds]
+    return [st.numTasks for st in stages if st is not None]
 
 
-def test_tiny_file_scan_runs_in_one_wave(spark, tmp_path):
+def test_capped_listing_scans_in_one_wave(spark, tmp_path):
     # 300 files of a few bytes: the 4 MB open cost alone packs them into 10 tasks
     for i in range(300):
         (tmp_path / f"f{i:03d}.txt").write_text(f"doc {i}")
-    df = spark.read.format("binaryFile").load(str(tmp_path))
-    assert df.count() == 300
-    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    slots = spark.sparkContext.defaultParallelism
+    listing = list_files(spark, str(tmp_path), FilePattern(max_files=1000))
+    counts = []
+    tasks = _stage_tasks(spark, lambda: counts.append(listing.count()))
+    assert counts == [300]
+    assert tasks and max(tasks) <= slots, tasks
+    # only the listing is capped: a plain scan keeps Spark's splits
+    assert spark.read.format("binaryFile").load(str(tmp_path)).rdd.getNumPartitions() > slots
 
 
 def test_worker_keeps_unchanged_zip_directories(spark):

@@ -56,16 +56,12 @@ class VectorIndexStore(VectorStoreBackend):
         self._manifest = ledger_manifest(spark, path, backend)
 
     def read(self) -> DataFrame:
-        return self._read()
-
-    def _read(self, recover: bool = False) -> DataFrame:
-        """Swap backend: `swap_table` pinned by localCheckpoint (a
-        crashed swap's `.old-*` copy included; a writer passes
-        `recover`)."""
+        """Swap backend: `swap_table` (a crashed swap's `.old-*` copy
+        included) pinned by localCheckpoint."""
         if self._manifest is not None:
             # immutable segments: snapshot is stable without pinning
             return self._manifest.snapshot(CHUNKS)[1]
-        table = swap_table(self.path, recover)
+        table = swap_table(self.path)
         if table is None:
             return self.spark.createDataFrame([], CHUNKS)
         return self.spark.read.parquet(table).localCheckpoint(eager=True)
@@ -132,7 +128,7 @@ class VectorIndexStore(VectorStoreBackend):
         # upserts serialize instead of basing on the same snapshot and
         # losing rows
         with LedgerLock(self.path):
-            merged, incoming = merge_fn(self._read(recover=True), chunks)
+            merged, incoming = merge_fn(self.read(), chunks)
             swap_commit(self.path, merged.write)
             n = incoming.count()
         self._analyze()

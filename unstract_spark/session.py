@@ -20,18 +20,12 @@ checksums, rename and permission bits. Its classes are compiled once
 with the JDK's `javac` into `jvm/build/<key>/`; with no `javac`, a
 read-only checkout or a non-local master, the stock store stays.
 
-Per-run fixed costs (a scheduled `run_extraction` over a small inbox is
-almost all fixed cost):
-- `spark.sql.files.maxPartitionNum` is the session's task slots for a
-  `local[...]` master, unless the caller sets it. With the 4 MB
-  `openCostInBytes`, a listing of 2000 files of about 500 bytes is
-  bin-packed into 63 scan tasks; capped, it runs in one wave of 4. The
-  cap only ever lowers a scan's task count.
-- `spark.python.sql.dataFrameDebugging.enabled` is off. When on (the
-  default), every `F.*` call captures its call site through about four
-  py4j round trips; a run builds about 150 Columns, and its plan
-  construction went from 368 to 255 ms without them. It is a static
-  conf, so it is set in the builder.
+Call-site capture: `spark.python.sql.dataFrameDebugging.enabled` is
+off. When on (Spark's default), every `F.*` call captures its call site
+through about four py4j round trips; a scheduled `run_extraction` over a
+small inbox builds about 150 Columns, and its plan construction went
+from 368 to 255 ms without them. It is a static conf, so it is set in
+the builder.
 """
 
 from __future__ import annotations
@@ -53,7 +47,6 @@ from pyspark.sql import SparkSession
 _JVM_DIR = Path(__file__).with_name("jvm")
 _NIO_SOURCE = _JVM_DIR / "NioRawLocalFileSystem.java"
 _NIO_CLASS = "unstract_spark.jvm.NioRawLocalFileSystem"
-_LOCAL_MASTER = re.compile(r"local(\[(\d+)?.*\])?")
 
 
 def _nio_classes() -> str | None:
@@ -115,7 +108,7 @@ def _local_store_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]
     starts. The store's two Hadoop keys must never reach a JVM without
     its classes (every file read would raise ClassNotFound): a JVM that is
     already up gets them only if it can load the classes."""
-    if not _LOCAL_MASTER.fullmatch(master) or SparkContext._active_spark_context is not None:
+    if not re.fullmatch(r"local(\[.*\])?", master) or SparkContext._active_spark_context is not None:
         return {}
     classes = _nio_classes()
     if classes is None:
@@ -130,18 +123,6 @@ def _local_store_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]
         "spark.hadoop.fs.file.impl": f"{_NIO_CLASS}$Local",
         "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_NIO_CLASS}$Fs",
     }
-
-
-def _local_conf(master: str, cpus: int, extra_conf: dict[str, str]) -> dict[str, str]:
-    """`extra_conf` plus the settings only a `local[...]` master gets: a
-    scan in at most one task per slot (a caller's value wins) and the
-    NIO file: store (`_local_store_conf`)."""
-    conf = dict(extra_conf)
-    local = _LOCAL_MASTER.fullmatch(master)
-    if local:
-        conf.setdefault("spark.sql.files.maxPartitionNum", local[2] or str(cpus))
-        conf.update(_local_store_conf(master, conf))
-    return conf
 
 
 def get_spark(
@@ -188,7 +169,9 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )
-    for k, v in _local_conf(master, cpus, extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    extra_conf.update(_local_store_conf(master, extra_conf))
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

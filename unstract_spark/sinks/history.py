@@ -89,13 +89,13 @@ class FileHistoryStore:
         self._skew_ppm = skew_threshold_ppm
         self._manifest = ledger_manifest(spark, path, backend)
 
-    def _scan(self, recover: bool = False, pin: bool = False) -> DataFrame:
+    def _scan(self, pin: bool = False) -> DataFrame:
         """The ledger as a lazy frame. Swap backend: a parquet scan
         with FILE_HISTORY as its read schema (no footer-inference job)
-        of `swap_table` (a crashed swap's `.old-*` copy included; a
-        writer passes `recover`); it lists the directory now and reads
-        it when consumed, so it must be consumed (or staged, or `pin`ned
-        by localCheckpoint) before a merge() swaps the directory.
+        of `swap_table` (a crashed swap's `.old-*` copy included); it
+        lists the directory now and reads it when consumed, so it must
+        be consumed (or staged, or `pin`ned by localCheckpoint) before a
+        merge() swaps the directory.
         Manifest backend: the snapshot, whose segments are immutable,
         with upserts resolved by newest-wins dedup-on-read over the
         segment commit order (the LSM read path; compact() folds the
@@ -103,7 +103,7 @@ class FileHistoryStore:
         if self._manifest is not None:
             _, df = self._manifest.snapshot_with_seq(FILE_HISTORY)
             return _newest_per_key(df)
-        table = swap_table(self.path, recover)
+        table = swap_table(self.path)
         if table is None:
             return self.spark.createDataFrame([], FILE_HISTORY)
         df = self.spark.read.schema(FILE_HISTORY).parquet(table)
@@ -138,7 +138,7 @@ class FileHistoryStore:
             self._analyze()
             return
         with LedgerLock(self.path):
-            swap_commit(self.path, _merge_newest_wins(self._scan(recover=True), updates).write)
+            swap_commit(self.path, _merge_newest_wins(self._scan(), updates).write)
         self._analyze()
 
     def _analyze(self) -> None:

@@ -99,46 +99,39 @@ def swap_commit(path: str, writer) -> None:
     """Replace the parquet table at `path` with what `writer` (a
     DataFrameWriter, partitioning included) writes: write a staging
     directory, move the live table aside to `.old-*`, rename staging
-    into place, then delete the old copy. A crash at any step leaves a
-    usable table at `path` or at its `.old-*` copy, never neither.
-    Callers hold `LedgerLock(path)` across their read and this swap."""
+    into place, then delete the old copy. A crash between the two
+    renames leaves the table only at its `.old-*` copy, which readers
+    find through `swap_table`; when `path` is missing, the swap renames
+    staging into place and then deletes the stray `.old-*` and
+    `.staging-*` copies. Callers hold `LedgerLock(path)` across their
+    read (through `swap_table`) and this swap."""
     stamp = int(time.time() * 1000)
     staging, old = f"{path}.staging-{stamp}", f"{path}.old-{stamp}"
     writer.mode("overwrite").parquet(staging)
-    moved = os.path.exists(path)
-    if moved:
+    if os.path.exists(path):
         os.rename(path, old)
-    os.rename(staging, path)
-    if moved:
+        os.rename(staging, path)
         shutil.rmtree(old, ignore_errors=True)
+        return
+    os.rename(staging, path)
+    parent, name = os.path.split(os.path.abspath(path))
+    for e in os.listdir(parent):
+        if e.startswith((f"{name}.old-", f"{name}.staging-")):
+            shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
 
 
-def swap_table(path: str, recover: bool = False) -> str | None:
-    """The directory holding the swap table at `path`, or None before
-    its first commit. A crash between `swap_commit`'s two renames
-    leaves the table only at its newest `.old-*` copy: a reader reads
-    that copy where it is; a writer (`recover=True`, under
-    `LedgerLock(path)`) renames it into place and deletes the stray
-    `.staging-*` (a swap that never committed) and older `.old-*`
-    copies. When `path` exists this costs one `exists` call."""
+def swap_table(path: str) -> str | None:
+    """The directory holding the swap table at `path`: `path` itself,
+    else the newest `.old-<ms>` copy a crash inside `swap_commit` left
+    (by number, not by name), else None (no commit yet). When `path`
+    exists this costs one `exists` call."""
     if os.path.exists(path):
         return path
     parent, name = os.path.split(os.path.abspath(path))
+    old = f"{name}.old-"
     try:
         entries = os.listdir(parent)
     except FileNotFoundError:
         return None
-    old = f"{name}.old-"
-    olds = sorted(
-        (e for e in entries if e.startswith(old) and e[len(old) :].isdigit()),
-        key=lambda e: int(e[len(old) :]),
-    )
-    if not recover:
-        return os.path.join(parent, olds[-1]) if olds else None
-    for e in entries:
-        if e.startswith(f"{name}.staging-") or e in olds[:-1]:
-            shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
-    if not olds:
-        return None
-    os.rename(os.path.join(parent, olds[-1]), path)
-    return path
+    stamps = [int(e[len(old) :]) for e in entries if e.startswith(old) and e[len(old) :].isdigit()]
+    return f"{path}.old-{max(stamps)}" if stamps else None

@@ -87,6 +87,15 @@ def list_files(spark: SparkSession, root: str, pattern: FilePattern | None = Non
     # never returns dirs, but zero-byte entries are dropped the same way.
     df = df.filter(F.col("length") > 0)
 
+    if pattern.max_files is not None:
+        # The limit below gathers a capped listing into one partition,
+        # so the scan's task count only sets how many tasks read it:
+        # at most one per slot, in one wave. With the 4 MB
+        # openCostInBytes, 2000 files of about 500 bytes otherwise
+        # bin-pack into 63 scan tasks of 32 files. Only this scan is
+        # capped; every other scan keeps maxPartitionBytes' splits.
+        df = df.coalesce(spark.sparkContext.defaultParallelism)
+
     if pattern.order in ("fifo", "lifo"):
         # top-k by modified time, not a full sort
         # (reference collects <=40k then sorts; source.py:292-411)
