@@ -12,7 +12,12 @@ from unstract_spark.operators.enrich import (
 )
 from unstract_spark.operators.index_store import VectorIndexStore, embed_chunks
 from unstract_spark.operators.retrieval import recursive_retrieve, router_retrieve
-from unstract_spark.sinks.notify import append_outbox, drain_outbox, enqueue_notifications
+from unstract_spark.sinks.notify import (
+    append_outbox,
+    drain_outbox,
+    enqueue_notifications,
+    read_outbox,
+)
 from unstract_spark.sources.cloud import configure_connector, sync_to_staging
 
 
@@ -234,7 +239,7 @@ def test_outbox_drain_retries_and_marks_sent(spark, tmp_path):
     stats = drain_outbox(spark, path, flaky_transport, backoff_s=0.001)
     assert stats == {"sent": 1, "failed": 0, "pending": 0}
     assert len(calls) == 2  # one retry
-    rows = spark.read.parquet(path).collect()
+    rows = read_outbox(spark, path).collect()
     assert [r.status for r in rows] == ["SENT"]
     assert rows[0].attempts == 2  # attempt accounting persisted
 
@@ -258,14 +263,14 @@ def test_outbox_attempts_accumulate_to_terminal_failed(spark, tmp_path):
         spark, path, dead_transport, max_retries=3, backoff_s=0.001, max_attempts=5
     )
     assert stats == {"sent": 0, "failed": 0, "pending": 1}
-    row = spark.read.parquet(path).collect()[0]
+    row = read_outbox(spark, path).collect()[0]
     assert (row.status, row.attempts) == ("PENDING", 3)
     # drain 2: only 2 more calls allowed before the lifetime cap -> FAILED
     stats = drain_outbox(
         spark, path, dead_transport, max_retries=3, backoff_s=0.001, max_attempts=5
     )
     assert stats == {"sent": 0, "failed": 1, "pending": 0}
-    row = spark.read.parquet(path).collect()[0]
+    row = read_outbox(spark, path).collect()[0]
     assert (row.status, row.attempts) == ("FAILED", 5)
     assert len(calls) == 5  # lifetime cap respected, not 6
     # drain 3: terminal FAILED is never re-delivered
@@ -392,7 +397,7 @@ def test_outbox_drain_renders_slack_provider_rows(spark, tmp_path):
     assert raw_body["execution_id"] == "exec-9"  # untouched JSON
     assert "text" not in raw_body
     # provider column survives the rewrite
-    provs = {r.provider for r in spark.read.parquet(path).collect()}
+    provs = {r.provider for r in read_outbox(spark, path).collect()}
     assert provs == {"slack", "webhook"}
 
 

@@ -99,3 +99,20 @@ def test_registry_sample_runs_at_smallest_sf(spark, sf_dir):
         except Exception as e:  # noqa: BLE001
             failures.append((name, str(e)[:100]))
     assert not failures, failures
+
+
+def test_j15_purchase_intervals_does_not_depend_on_session_zone(spark, sf_dir):
+    """The external driver runs the registry in a vanilla session whose
+    zone is the host's; j15's day gaps must not move with it (a gap
+    across a daylight-saving change is 23 or 25 wall-clock hours)."""
+    from unstract_spark.queries import j15_purchase_intervals
+
+    def rows(zone: str):
+        prev = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        try:
+            return sorted(j15_purchase_intervals(spark, sf_dir).collect())
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", prev)
+
+    assert rows("America/Los_Angeles") == rows("UTC")

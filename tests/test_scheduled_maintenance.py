@@ -22,8 +22,10 @@ from unstract_spark.sinks.notify import (
     append_outbox,
     drain_outbox,
     enqueue_notifications,
+    read_outbox,
 )
 from unstract_spark.sinks.review_queue import (
+    read_queue,
     read_unexpired,
     route_to_review,
     sweep_expired,
@@ -134,7 +136,7 @@ def test_scheduled_maintenance_end_to_end(spark, tmp_path):
     assert len(ingested_paths) == 3
     assert spark.read.parquet(compacted).count() == 3
     assert swept == [2]  # the two ttl=0 rows physically dropped
-    assert spark.read.parquet(queue_path).count() == 1
+    assert read_queue(spark, queue_path).count() == 1
     assert read_unexpired(spark, queue_path).count() == 1
     # one outbox row per ingest micro-batch (3 files @ 1/trigger), all
     # delivered in the same fire
@@ -166,13 +168,13 @@ def test_scheduled_maintenance_end_to_end(spark, tmp_path):
     assert spark.read.parquet(compacted).count() == 5
     # the sweep dropped exactly the newly-expired row, kept the live one
     assert swept == [2, 1]
-    assert spark.read.parquet(queue_path).count() == 1
+    assert read_queue(spark, queue_path).count() == 1
     # outbox: 2 new notifications delivered, none re-delivered
     assert drains[-1] == {"sent": 2, "failed": 0, "pending": 0}
     assert len(delivered) == 5
     assert {
         r.status
-        for r in spark.read.parquet(outbox)
+        for r in read_outbox(spark, outbox)
         .groupBy("notification_id")
         .agg(F.max("status").alias("status"))
         .collect()

@@ -10,6 +10,7 @@ from unstract_spark.plans.fusion import plan_prompt_stages, substitute_variables
 from unstract_spark.plans.pipeline import ExtractionJob, run_extraction
 from unstract_spark.sinks.history import FileHistoryStore
 from unstract_spark.sinks.jdbc import DIALECTS, build_table_spec, prepare_rows
+from unstract_spark.sinks.manifest import ManifestTable
 from unstract_spark.sinks.review_queue import route_to_review, sample_predicate
 from unstract_spark.streaming.incremental import (
     incremental_file_pipeline,
@@ -468,23 +469,21 @@ def test_run_extraction_isolates_bad_files(spark, tmp_path):
     assert names2 == {"bad.txt"}
 
 
-def test_run_extraction_replay_survives_ledger_swap(spark, tmp_path):
+def test_run_extraction_skipped_survives_ledger_merge(spark, tmp_path):
     """The second run's `skipped` is read only after run_extraction
-    returns, by which time its merge has swapped in a new ledger
-    directory and deleted the old one. It still replays exactly the
-    first run's COMPLETED files with their cached results, and the
-    invalid-UTF-8 file is retried as ERROR instead of replayed."""
-    import os
-
+    returns, by which time its merge has committed a new ledger
+    version. It still replays exactly the first run's COMPLETED files
+    with their cached results, and the invalid-UTF-8 file is retried as
+    ERROR instead of replayed."""
     src = tmp_path / "docs"
     src.mkdir()
     for i in range(4):
         (src / f"d{i}.txt").write_text(f"receipt {i} amount {i}0")
     (src / "bad.txt").write_bytes(bytes([0xFF, 0xFE, 0x00, 0x41]))
-    hist = tmp_path / "hist"
+    hist = ManifestTable(spark, str(tmp_path / "hist"))
     job = ExtractionJob(
         source_dir=str(src),
-        history_path=str(hist),
+        history_path=hist.path,
         prompt_specs=[
             {"prompt_key": "receipt", "prompt": "id", "enforce_type": "text"},
             {"prompt_key": "amount", "prompt": "sum", "enforce_type": "number"},
@@ -498,14 +497,9 @@ def test_run_extraction_replay_survives_ledger_swap(spark, tmp_path):
     }
     assert len(want) == 4
 
-    def parts():
-        return {f for f in os.listdir(hist) if f.startswith("part-")}
-
-    ledger_parts = parts()
+    version = hist.version()
     out2 = run_extraction(spark, job)
-    # the merge replaced the ledger directory and removed the old one
-    assert ledger_parts and parts().isdisjoint(ledger_parts)
-    assert [p.name for p in tmp_path.iterdir() if p.name.startswith("hist.")] == []
+    assert hist.version() == version + 1  # the merge committed before the read
 
     got = {r.file_path: json.loads(r.result) for r in out2["skipped"].collect()}
     assert got == want
@@ -814,7 +808,7 @@ def test_streaming_queue_consumer_union_equals_batch_and_redelivers(
             F.current_timestamp() - F.make_dt_interval(hours=F.lit(1)),
         ).otherwise(F.current_timestamp()),
     )
-    ghost.write.mode("append").partitionBy("queue_name").parquet(lp)
+    ManifestTable(spark, lp).append(ghost)
 
     fires2 = streaming_queue_consumer(
         spark, qp, lp, ckpt, out, "q1", "sc1", max_messages_per_fire=4
@@ -916,7 +910,7 @@ def test_streaming_queue_consumer_sweep_recovers_without_new_arrivals(
         [("q1", b_id[0], "ghost", "CLAIMED")],
         "queue_name string, message_id string, consumer_id string, state string",
     ).withColumn("ts", F.current_timestamp())
-    ghost.write.mode("append").partitionBy("queue_name").parquet(lp)
+    ManifestTable(spark, lp).append(ghost)
 
     # the fire sees b's file (new to the checkpoint) but the claim is
     # ACTIVE -> nothing claimable; checkpoint still advances past it
@@ -986,7 +980,7 @@ def test_dead_letter_redrive_policy(spark, tmp_path):
     ).withColumn(
         "ts", F.current_timestamp() - F.make_dt_interval(hours=F.lit(1))
     )
-    ghost.write.mode("append").partitionBy("queue_name").parquet(lp)
+    ManifestTable(spark, lp).append(ghost)
 
     dlq = {r.message_id for r in dead_letter_messages(
         spark, qp, lp, "q1", max_deliveries=3).collect()}

@@ -273,8 +273,8 @@ def test_pinecone_query_request_shape(spark, tmp_path):
 def test_rest_store_concurrent_writers_no_duplicates(spark, tmp_path, chunk_rows):
     """Point stores are natively multi-writer safe: deterministic
     `doc:chunk` ids make concurrent upserts of the same content
-    last-write-wins instead of duplicating (the ledger_lock analog for
-    external stores — no lock needed)."""
+    last-write-wins instead of duplicating (the manifest commit's
+    analog for external stores)."""
     import threading
 
     transport = fakes.make_fake_qdrant_transport(str(tmp_path / "qshared"))

@@ -6,12 +6,12 @@ sdk1/index.py:460-516), probed before write, delete-then-add on
 reindex (index.py:223-375); queries are top-k cosine with a doc_id
 equality filter and score>0 cutoff (index.py:65-131).
 
-Spark-first: the index is a table partitioned by doc_id prefix;
-upsert = overwrite-by-key MERGE (same contract as sinks/history —
-Delta MERGE at cluster scale); the probe is an existence check on the
-deterministic key, which is what makes re-runs idempotent. Retrieval
-is the J4 join from operators/retrieval, scoped by the doc_id filter
-(partition pruning makes the per-document query touch one partition).
+Spark-first: the index is a sinks/manifest.py table; upsert is an
+insert-only (or, on reindex, delete-then-add) MERGE committed as one
+rewritten segment with optimistic retry (Delta MERGE at cluster
+scale); the probe is an existence check on the deterministic key,
+which is what makes re-runs idempotent. Retrieval is the J4 join from
+operators/retrieval, scoped by the doc_id filter.
 """
 
 from __future__ import annotations
@@ -20,8 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unstract_spark.schemas import CHUNKS
-from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit, swap_table
-from unstract_spark.sinks.manifest import ledger_manifest
+from unstract_spark.sinks.manifest import CommitBackend, ManifestTable
 from unstract_spark.sinks.vector_db import VectorStoreBackend
 
 
@@ -35,11 +34,14 @@ class VectorIndexStore(VectorStoreBackend):
     STATS_COLUMN = "doc_id"
 
     def __init__(
-        self, spark: SparkSession, path: str, backend="swap", stats=None
+        self,
+        spark: SparkSession,
+        path: str,
+        commit_backend: CommitBackend | None = None,
+        stats=None,
     ):
-        """`backend`: "swap", "manifest" (POSIX put-if-absent), or a
-        `manifest.CommitBackend` instance (pluggable commit log, e.g.
-        object-store conditional PUT).
+        """`commit_backend`: where the manifest log commits (default:
+        POSIX put-if-absent; e.g. an object store's conditional PUT).
 
         `stats`: optional `stats_store.TableStatsStore` — the same
         planner seam as FileHistoryStore: every upsert re-ANALYZEs the
@@ -53,18 +55,12 @@ class VectorIndexStore(VectorStoreBackend):
         self.spark = spark
         self.path = path
         self.stats = stats
-        self._manifest = ledger_manifest(spark, path, backend)
+        self._manifest = ManifestTable(spark, path, commit_backend)
 
     def read(self) -> DataFrame:
-        """Swap backend: `swap_table` (a crashed swap's `.old-*` copy
-        included) pinned by localCheckpoint."""
-        if self._manifest is not None:
-            # immutable segments: snapshot is stable without pinning
-            return self._manifest.snapshot(CHUNKS)[1]
-        table = swap_table(self.path)
-        if table is None:
-            return self.spark.createDataFrame([], CHUNKS)
-        return self.spark.read.parquet(table).localCheckpoint(eager=True)
+        """The committed index; its segments are immutable, so the
+        snapshot is stable without pinning."""
+        return self._manifest.snapshot(CHUNKS)[1]
 
     def read_chunks(self) -> DataFrame:
         return self.read()
@@ -81,6 +77,7 @@ class VectorIndexStore(VectorStoreBackend):
         At scale this is `MERGE ... WHEN NOT MATCHED INSERT` / a
         replaceWhere partition overwrite on Delta.
         """
+        written: dict = {}
 
         def merge_fn(current: DataFrame, incoming_chunks: DataFrame):
             if reindex:
@@ -107,32 +104,15 @@ class VectorIndexStore(VectorStoreBackend):
                     incoming = incoming_chunks.join(
                         ids, "doc_id", "left_anti"
                     )
-            return keep.unionByName(incoming), incoming
+            written["incoming"] = incoming
+            return keep.unionByName(incoming)
 
-        if self._manifest is not None:
-            # lock-free optimistic commit (sinks/manifest.py): a lost
-            # race re-runs merge_fn against the fresh snapshot, so the
-            # idempotence probe composes with concurrent writers
-            written: dict = {}
-
-            def manifest_merge(current, inc):
-                merged, incoming = merge_fn(current, inc)
-                written["incoming"] = incoming
-                return merged
-
-            self._manifest.merge(chunks, manifest_merge, CHUNKS)
-            self._analyze()
-            return written["incoming"].count()
-
-        # the read-modify-swap runs under LedgerLock so concurrent
-        # upserts serialize instead of basing on the same snapshot and
-        # losing rows
-        with LedgerLock(self.path):
-            merged, incoming = merge_fn(self.read(), chunks)
-            swap_commit(self.path, merged.write)
-            n = incoming.count()
+        # a lost commit race re-runs merge_fn against the fresh
+        # snapshot, so the idempotence probe composes with concurrent
+        # writers
+        self._manifest.merge(chunks, merge_fn, CHUNKS)
         self._analyze()
-        return n
+        return written["incoming"].count()
 
     def _analyze(self) -> None:
         """ANALYZE-on-write (the FileHistoryStore convention): refresh
@@ -144,8 +124,8 @@ class VectorIndexStore(VectorStoreBackend):
             )
 
     def _chunks_for_doc(self, doc_id: str) -> DataFrame:
-        """The doc_id equality filter prunes to one partition-worth of
-        chunks before any scoring (query_topk itself — rounding, score>0
+        """The doc_id equality filter (pushed down into the segment
+        scan) narrows to one document's chunks before any scoring (query_topk itself — rounding, score>0
         cutoff, chunk_no tie-break — is shared in VectorStoreBackend)."""
         return self.read().filter(F.col("doc_id") == doc_id)
 

@@ -80,10 +80,9 @@ def run_extraction(spark: SparkSession, job: ExtractionJob) -> dict[str, DataFra
     # COMPLETED ledger rows, behind one barrier. `fresh` (no history)
     # and `skipped` (replayed from history) are filters of it, so a run
     # reads each source file once (as the reference does,
-    # source.py:938-954) and the ledger once before its merge, and
-    # `skipped` stays valid after the merge below swaps the ledger
-    # directory. localCheckpoint writes partitions to executor-local
-    # storage — no driver involvement, no CacheManager entry.
+    # source.py:938-954) and the ledger once. localCheckpoint writes
+    # partitions to executor-local storage — no driver involvement, no
+    # CacheManager entry.
     # list_files' limit(max_files) stays even when the source holds
     # fewer files than the cap: the limit is also what gathers the
     # catalog into ONE partition. Without it the staged frame keeps the

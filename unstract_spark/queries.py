@@ -176,34 +176,9 @@ def _davg(col, scale: int = 4):
 
 # Per-round manual input: queries whose semantics changed this round.
 _CHANGED_THIS_ROUND = [
-    # analyze() runs one grouped pass for all columns; re-gate.
-    "sk_stats_store",
-    "sk_join_plan",
-    "sk_plan_unknown",
-    # r14: repetition_features moved from the two-exchange grouped
-    # spelling to the per-row sorted-array run-length reduction;
-    # output identical, re-gate.
-    "ta_repetition",
-    # r14: triangle_count picks its join strategy from a bounded edge
-    # count (broadcast small / SHUFFLE_HASH large); output identical,
-    # re-gate.
-    "graph_triangle_counts",
-    # r13 semantics-adjacent rewrites the r13 driver sample did not
-    # cover (r13 VERDICT "What's wrong" item 4 asks r14 to front-load
-    # them so the output-identity claims get an independent driver
-    # gate): contamination pre-join-distinct drop, perplexity rank
-    # carry, span-removal union collapse consumers, minhash-skew
-    # window guard, ANN constant-fold family, JPEG codec rows.
-    "dd_contamination",
-    "ta_perplexity_buckets",
-    "ta_unigram_logprob",
-    "ex_curation_web",
-    "ex_curation_e2e",
-    "dd_minhash_skew",
-    "sim_pq_topk",
-    "sim_ivfpq_topk",
-    "mm_jpeg_features",
-    "mm_video_features",
+    # day gaps from zone-free epoch micros (the session zone used to
+    # shift gaps that span a daylight-saving change); re-gate.
+    "j15_purchase_intervals",
 ]
 
 
@@ -9535,7 +9510,12 @@ def j15_purchase_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same integer instead)."""
     o = _t(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    ep = F.unix_micros(F.col("o_orderdate").cast("timestamp"))
+    # wall-clock epoch micros of the NTZ order date: a cast to TIMESTAMP
+    # reads it in the session zone, where a gap spanning a daylight-
+    # saving change loses an hour and the floor division a day
+    ep = F.expr(
+        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', o_orderdate)"
+    )
     s = o.select(
         "o_custkey",
         ep.alias("ts_us"),

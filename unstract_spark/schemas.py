@@ -143,6 +143,7 @@ REVIEW_QUEUE = T.StructType(
         T.StructField("execution_id", T.StringType(), True),
         T.StructField("enqueued_at", T.TimestampType(), True),
         T.StructField("ttl_seconds", T.LongType(), True),
+        T.StructField("message_id", T.StringType(), True),
     ]
 )
 

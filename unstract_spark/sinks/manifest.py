@@ -1,39 +1,44 @@
-"""Optimistic-concurrency parquet table — the transactional ledger
-backend that replaces LedgerLock.
+"""Optimistic-concurrency parquet table: the one commit protocol of
+every ledger (file history, vector index, review queue and its claim
+ledger, notification outbox).
 
-The swap-backend ledgers (sinks/history.py, operators/index_store.py)
-serialize writers with a lock FILE, which is honest only on a single
-node or an NFS mount. This module implements the protocol Delta Lake
-builds its ACID on (public design: the Delta transaction-log paper,
-Armbrust et al., VLDB 2020): an append-only log of immutable manifest
-files, where commit N+1 is a PUT-IF-ABSENT of `_manifests/v{N+1}.json`.
+This module implements the protocol Delta Lake builds its ACID on
+(public design: the Delta transaction-log paper, Armbrust et al., VLDB
+2020): an append-only log of immutable manifest files, where commit
+N+1 is a PUT-IF-ABSENT of `_manifests/v{N+1}.json`.
+
+Layout of a ledger at `path`:
+- `_manifests/v<N>.json`: the log; version N lists its segments.
+- `data/seg=<id>/`: immutable parquet segments. A plain parquet read
+  of `path` sees every physical segment (superseded and orphaned ones
+  too) with an extra `seg` column; read a ledger through its store.
 
 - **Snapshot isolation for readers**: a snapshot is the segment list
-  inside the highest manifest; segments are immutable parquet
-  directories, so an open lineage can never be invalidated by a later
-  commit (no localCheckpoint pinning needed — immutability gives the
-  property the swap backend had to buy with a materialization).
-- **Lock-free writers**: a writer reads snapshot V, writes its merged
-  result as a NEW segment, then tries to create manifest V+1 with
-  O_CREAT|O_EXCL — the one atomic put-if-absent every POSIX filesystem
-  has (object stores expose the same primitive: S3 conditional PUT,
-  GCS if-generation-match, ABFS ETag). Losing the race costs a retry
-  from the fresh snapshot; no writer ever bases a commit on a stale
-  snapshot without noticing, so no rows are lost — the exact failure
-  LedgerLock existed to prevent.
+  inside the highest manifest, read with the ledger's schema; segments
+  are immutable, so an open lineage is never invalidated by a later
+  commit.
+- **Lock-free writers**: a writer reads snapshot V, writes its result
+  as a NEW segment, then tries to create manifest V+1 with
+  put-if-absent (POSIX: temp write + `os.link`; object stores expose
+  the same primitive: S3 conditional PUT, GCS if-generation-match,
+  ABFS ETag). Losing the race costs a retry from the fresh snapshot,
+  so no writer bases a commit on a stale snapshot without noticing
+  and no rows are lost.
 - **Crash safety**: a writer that dies after writing its segment but
   before the manifest leaves an orphan that no reader ever loads
-  (only manifested segments exist); a writer that dies holding nothing
-  blocks nobody. Contrast: a crashed LedgerLock holder stalls every
-  writer until the stale-lock timeout.
+  (only manifested segments exist) and vacuum() reclaims; a writer
+  that dies after the commit has committed; a writer that dies
+  holding nothing blocks nobody.
 
-Two write modes over the same commit primitive:
-- merge(): full-rewrite into one segment (needed when the merge
+Write modes over the same commit primitive:
+- merge(): full rewrite into one segment (needed when the merge
   semantics include deletion, e.g. the vector index's reindex).
 - append(): LSM-style O(updates) commit of just the new segment;
   readers resolve precedence by segment order (snapshot_with_seq) and
-  compact() folds the list back down. This is the write path a 100 TB
-  upsert ledger actually runs.
+  fold() compacts the list back to one segment once it is longer than
+  FOLD_SEGMENTS.
+- commit_at() the version the caller read, retried by optimistic():
+  the read-modify-write the review queue's sweep and claims use.
 """
 
 from __future__ import annotations
@@ -48,6 +53,10 @@ from pyspark.sql import functions as F
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
+# fold() compacts an appended ledger once its snapshot has more
+# segments than this: each segment is one path of every snapshot scan,
+# and above 32 paths Spark lists them in a job of its own
+FOLD_SEGMENTS = 8
 
 
 class CommitConflict(Exception):
@@ -167,23 +176,6 @@ class HttpObjectStoreBackend(CommitBackend):
             raise
 
 
-def ledger_manifest(
-    spark: SparkSession, path: str, backend
-) -> "ManifestTable | None":
-    """The `backend=` switch of the parquet ledgers (FileHistoryStore,
-    VectorIndexStore): "swap" -> None (plain parquet, directory swap
-    under LedgerLock), "manifest" -> a ManifestTable committing through
-    POSIX put-if-absent, a `CommitBackend` instance -> a ManifestTable
-    committing through it (e.g. an object store's conditional PUT)."""
-    if isinstance(backend, CommitBackend):
-        return ManifestTable(spark, path, commit_backend=backend)
-    if backend == "manifest":
-        return ManifestTable(spark, path)
-    if backend == "swap":
-        return None
-    raise ValueError(f"unknown ledger backend {backend!r}")
-
-
 class ManifestTable:
     def __init__(
         self,
@@ -239,15 +231,15 @@ class ManifestTable:
             raise ValueError(
                 f"as_of={as_of} is beyond latest version {self.version()}"
             )
-        segs = self.segments(v)
+        return v, self._read(self.segments(v), schema)
+
+    def _read(self, segs: list[str], schema) -> DataFrame:
+        """The segments read with the ledger's `schema` (no footer
+        inference; a segment written before an additive schema change
+        reads NULL in the new column)."""
         if not segs:
-            return v, self.spark.createDataFrame([], schema)
-        # mergeSchema: segments may carry WIDENED schemas (append() of
-        # updates with a new column); the plain reader would take one
-        # file's schema and silently drop the addition. Footer-merge
-        # cost is proportional to segment count, which compact() keeps
-        # small.
-        return v, self.spark.read.option("mergeSchema", "true").parquet(
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
             *[os.path.join(self.data_dir, s) for s in segs]
         )
 
@@ -256,7 +248,7 @@ class ManifestTable:
     def write_segment(self, df: DataFrame) -> str:
         """Materialize a frame as an immutable segment; returns its
         relative name. Not visible to readers until manifested."""
-        name = f"seg-{uuid.uuid4().hex}"
+        name = f"seg={uuid.uuid4().hex}"
         df.write.mode("overwrite").parquet(os.path.join(self.data_dir, name))
         return name
 
@@ -264,8 +256,8 @@ class ManifestTable:
         """Idempotency keys carried by every committed manifest — the
         exactly-once primitive for streaming writers (each foreachBatch
         commit carries its batch id; a replay sees its key and skips).
-        Manifests are tiny JSON and the log is compact()-bounded, so
-        this scan is metadata-sized."""
+        Manifests are tiny JSON, but no step prunes the log, so this
+        scan reads one manifest per commit ever made."""
         keys = set()
         for name in self.backend.list_manifests():
             if not (name.startswith("v") and name.endswith(".json")):
@@ -317,48 +309,67 @@ class ManifestTable:
                 except OSError:
                     pass
 
-    def merge(self, updates: DataFrame, merge_fn, schema, max_retries: int = 20):
-        """Transactional read-merge-commit with optimistic retry.
+    def commit_at(self, version: int, df: DataFrame, replace: bool) -> None:
+        """Write `df` as a segment and commit it as version+1: the
+        whole table (`replace`) or one more segment on top of
+        `version`'s. `version` MUST be the one the caller read `df`'s
+        inputs at; raises CommitConflict when another writer committed
+        since (the segment is left an orphan for vacuum())."""
+        seg = self.write_segment(df)
+        self.try_commit(version, [seg] if replace else self.segments(version) + [seg])
+
+    def optimistic(self, attempt, max_retries: int = 20):
+        """Run `attempt()` (read a snapshot, commit_at its version)
+        until it commits without a CommitConflict; returns its result.
+        Each retry re-reads, so concurrent writers compose instead of
+        overwriting."""
+        for _ in range(max_retries):
+            try:
+                return attempt()
+            except CommitConflict:
+                continue
+        raise TimeoutError(
+            f"ledger commit at {self.path} lost the commit race "
+            f"{max_retries} times — writer storm or clock trouble"
+        )
+
+    def merge(self, updates: DataFrame, merge_fn, schema, max_retries: int = 20) -> None:
+        """Transactional read-merge-rewrite with optimistic retry.
 
         `merge_fn(current, updates) -> merged` supplies the MERGE
         semantics (newest-wins dedup, anti-join insert-only, ...);
         it is re-evaluated against the fresh snapshot after a lost
-        race, so concurrent writers compose instead of overwriting.
-        Returns the merged frame that was committed.
+        race. The superseded segments are vacuumed once past their
+        retention window.
         """
-        for _ in range(max_retries):
+
+        def attempt():
             v, current = self.snapshot(schema)
-            merged = merge_fn(current, updates)
-            seg = self.write_segment(merged)
-            try:
-                self.try_commit(v, [seg])
-            except CommitConflict:
-                continue  # orphaned segment; vacuum() reclaims it
-            return self.spark.read.parquet(os.path.join(self.data_dir, seg))
-        raise TimeoutError(
-            f"ledger merge at {self.path} lost the commit race "
-            f"{max_retries} times — writer storm or clock trouble"
-        )
+            self.commit_at(v, merge_fn(current, updates), replace=True)
+
+        self.optimistic(attempt, max_retries)
+        self.vacuum()
 
     def snapshot_with_seq(self, schema) -> tuple[int, DataFrame]:
         """Like snapshot(), plus a `_seq` column carrying each row's
         segment commit order (0 = oldest) — the precedence key for
-        newest-wins dedup-on-read. Derived from the file path via
-        input_file_name + a literal map (segment count is bounded by
-        compaction), so the whole snapshot stays ONE multi-path scan."""
+        newest-wins dedup-on-read."""
         v = self.version()
         segs = self.segments(v)
+        return v, self._with_seq(self._read(segs, schema), segs)
+
+    @staticmethod
+    def _with_seq(df: DataFrame, segs: list[str]) -> DataFrame:
+        """`_seq` derived from the file path via input_file_name + a
+        literal map (segment count is bounded by fold()), so the whole
+        snapshot stays ONE multi-path scan."""
         if not segs:
-            empty = self.spark.createDataFrame([], schema)
-            return v, empty.withColumn("_seq", F.lit(0))
-        df = self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.data_dir, s) for s in segs]
-        )
+            return df.withColumn("_seq", F.lit(0))
         seg_of_row = F.element_at(F.split(F.input_file_name(), "/"), -2)
         mapping = F.create_map(
             *[F.lit(x) for i, s in enumerate(segs) for x in (s, i)]
         )
-        return v, df.withColumn("_seq", mapping[seg_of_row].cast("int"))
+        return df.withColumn("_seq", mapping[seg_of_row].cast("int"))
 
     def append(
         self,
@@ -372,7 +383,7 @@ class ManifestTable:
         This is the O(updates) write path — merge-by-rewrite costs
         O(table) per commit, which at a 100 TB ledger is absurd for a
         200-row batch. Readers resolve upserts with newest-wins
-        dedup-on-read keyed by `_seq` (snapshot_with_seq); compact()
+        dedup-on-read keyed by `_seq` (snapshot_with_seq); fold()
         amortizes the read-side window back down. A lost commit race
         is retried WITHOUT rewriting the segment — only the fresh
         segment list is re-read (contrast merge(), which must re-run
@@ -432,11 +443,27 @@ class ManifestTable:
         being built (a lost update with no error). Returns False if a
         concurrent writer committed first (compaction is maintenance —
         callers just try again later rather than retrying in a loop)."""
-        seg = self.write_segment(resolved)
         try:
-            self.try_commit(base_version, [seg])
+            self.commit_at(base_version, resolved, replace=True)
         except CommitConflict:
             return False
+        return True
+
+    def fold(self, schema, resolve=None, over: int | None = None) -> bool:
+        """Compact the snapshot into one segment once it has more than
+        `over` (default FOLD_SEGMENTS) segments, then vacuum. `resolve(snapshot_with_seq frame)`
+        gives the rows to keep (an upsert ledger's newest row per key);
+        without it every row is kept. Returns False when a concurrent
+        commit won the version: nothing is lost, and the next fold
+        tries again."""
+        v = self.version()
+        segs = self.segments(v)
+        if len(segs) <= (FOLD_SEGMENTS if over is None else over):
+            return True
+        df = self._read(segs, schema)
+        if not self.compact(resolve(self._with_seq(df, segs)) if resolve else df, v):
+            return False
+        self.vacuum()
         return True
 
     # -- maintenance --------------------------------------------------

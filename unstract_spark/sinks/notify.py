@@ -11,6 +11,11 @@ bounded retries and marks rows sent. HTTP is stubbed behind a
 transport callable — tests inject one; production wires requests/
 urllib. This split keeps delivery at-least-once with dedup on
 notification_id rather than losing sends to task retries.
+
+The outbox is a sinks/manifest.py table: append_outbox appends a
+segment, and a drain commits its status rewrite as a ManifestTable
+merge, which re-applies the drain's updates to the fresh snapshot when
+an append lands mid-drain.
 """
 
 from __future__ import annotations
@@ -21,7 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit
+from unstract_spark.sinks.manifest import ManifestTable
 
 OUTBOX_SCHEMA = (
     "notification_id string, execution_id string, url string, payload string,"
@@ -208,8 +213,14 @@ def enqueue_notifications(
 
 
 def append_outbox(rows: DataFrame, path: str) -> None:
-    with LedgerLock(path):
-        rows.write.mode("append").parquet(path)
+    outbox = ManifestTable(rows.sparkSession, path)
+    outbox.append(rows)
+    outbox.fold(OUTBOX_SCHEMA)
+
+
+def read_outbox(spark: SparkSession, path: str) -> DataFrame:
+    """Every committed outbox row, with its latest status."""
+    return ManifestTable(spark, path).snapshot(OUTBOX_SCHEMA)[1]
 
 
 def drain_outbox(
@@ -236,9 +247,7 @@ def drain_outbox(
     flips to terminal FAILED — it is never re-delivered. Returns
     {"sent", "failed", "pending"} counters for this drain.
     """
-    pending = (
-        spark.read.schema(OUTBOX_SCHEMA).parquet(path).filter(F.col("status") == "PENDING")
-    ).collect()
+    pending = read_outbox(spark, path).filter(F.col("status") == "PENDING").collect()
     sent = failed = still_pending = 0
     updates: dict[str, tuple[str, int]] = {}  # id -> (status, attempts)
     import json as _json
@@ -281,21 +290,18 @@ def drain_outbox(
         upd = spark.createDataFrame(
             rows, "notification_id string, _new_status string, _new_attempts int"
         )
-        with LedgerLock(path):
-            rewritten = (
-                spark.read.schema(OUTBOX_SCHEMA)
-                .parquet(path)
-                .join(F.broadcast(upd), "notification_id", "left")
-                .select(
-                    "notification_id",
-                    "execution_id",
-                    "url",
-                    "payload",
-                    F.coalesce("_new_status", "status").alias("status"),
-                    F.coalesce("_new_attempts", "attempts").alias("attempts"),
-                    "created_at",
-                    "provider",
-                )
+
+        def apply(current: DataFrame, upd: DataFrame) -> DataFrame:
+            return current.join(F.broadcast(upd), "notification_id", "left").select(
+                "notification_id",
+                "execution_id",
+                "url",
+                "payload",
+                F.coalesce("_new_status", "status").alias("status"),
+                F.coalesce("_new_attempts", "attempts").alias("attempts"),
+                "created_at",
+                "provider",
             )
-            swap_commit(path, rewritten.write)
+
+        ManifestTable(spark, path).merge(upd, apply, OUTBOX_SCHEMA)
     return {"sent": sent, "failed": failed, "pending": still_pending}

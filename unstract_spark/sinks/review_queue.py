@@ -9,15 +9,25 @@ review_queue_{org}_{workflow} (destination.py:853-1115).
 Spark-first: routing is a boolean column (deterministic hash-sample OR
 rule predicate), the queue is an append table with `expires_at`;
 consumers filter unexpired rows; a cleanup job drops expired ones.
+
+The queue and its claim ledger are sinks/manifest.py tables: enqueues
+and acks append a segment, while the TTL sweep and a claim commit at
+the version they read, so a commit that lands in between makes them
+re-read instead of overwriting it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from unstract_spark.schemas import DEFAULT_HITL_TTL_SECONDS
-from unstract_spark.sinks.ledger_lock import LedgerLock, swap_commit
+from unstract_spark.schemas import DEFAULT_HITL_TTL_SECONDS, REVIEW_QUEUE
+from unstract_spark.sinks.manifest import ManifestTable
+
+CLAIMS_SCHEMA = (
+    "queue_name string, message_id string, consumer_id string, state string,"
+    " ts timestamp"
+)
 
 
 def sample_predicate(key: Column, pct: float) -> Column:
@@ -93,59 +103,61 @@ def route_to_review(
 
 
 def write_queue(queue_rows: DataFrame, path: str) -> None:
-    """Append to the review table, partitioned by queue for consumer
-    pruning (a consumer reads only its queue's partition). A stable
-    message_id (content-derived, so replays re-produce the same id and
-    dedup downstream) is attached if absent."""
+    """Append to the review queue. A stable message_id
+    (content-derived, so replays re-produce the same id and dedup
+    downstream) is attached if absent."""
     if "message_id" not in queue_rows.columns:
         queue_rows = queue_rows.withColumn(
             "message_id",
             F.sha2(F.concat_ws("\x01", "queue_name", "file", "result"), 256),
         )
-    queue_rows.write.mode("append").partitionBy("queue_name").parquet(path)
+    queue = ManifestTable(queue_rows.sparkSession, path)
+    queue.append(queue_rows)
+    queue.fold(REVIEW_QUEUE)
+
+
+def read_queue(spark, path: str) -> DataFrame:
+    """Every committed queue row, expired ones included."""
+    return ManifestTable(spark, path).snapshot(REVIEW_QUEUE)[1]
+
+
+def _unexpired() -> Column:
+    expiry = F.col("enqueued_at") + F.make_dt_interval(secs=F.col("ttl_seconds"))
+    return expiry > F.current_timestamp()
 
 
 def read_unexpired(spark, path: str) -> DataFrame:
     """Consumer view: TTL filter (expiry = enqueue + ttl)."""
-    df = spark.read.parquet(path)
-    expiry = F.col("enqueued_at") + F.make_dt_interval(secs=F.col("ttl_seconds"))
-    return df.filter(expiry > F.current_timestamp())
+    return read_queue(spark, path).filter(_unexpired())
 
 
 def sweep_expired(spark, path: str) -> int:
     """The cleanup job the consumer filter implies: physically drop
     expired rows from the queue store (reference: the 90-day TTL on
     QueueResult packets, destination.py:853-1115 — Redis expires them
-    server-side; a parquet queue needs a sweeper). Rewrites the store
-    to unexpired rows via staging + rename under the ledger lock (the
-    history-store swap pattern), so readers mid-sweep see either the
-    old or the new store, never a partial one. Run it from the cron
-    scheduler like compaction. Returns the number of rows dropped.
+    server-side; a parquet queue needs a sweeper). Rewrites the queue
+    to its unexpired rows, committed at the version the sweep read: an
+    enqueue that commits in between makes the commit conflict, and the
+    sweep re-reads instead of dropping the new row. Readers mid-sweep
+    see the old or the new snapshot, never a partial one. Run it from
+    the cron scheduler like compaction. Returns the number of rows
+    dropped.
 
     The rewrite costs one scan of the queue — correct for a review
-    queue (human-scale, partitioned by queue_name); at a larger scale
-    the same call works per-partition by pointing `path` at one
-    queue's subdirectory."""
-    with LedgerLock(path):
-        df = spark.read.parquet(path)
-        expiry = F.col("enqueued_at") + F.make_dt_interval(
-            secs=F.col("ttl_seconds")
-        )
-        live = df.filter(expiry > F.current_timestamp())
-        n_total = df.count()
-        n_live = live.count()
-        if n_live == n_total:
-            return 0
-        if n_live == 0:
-            # a partitioned write of zero rows emits no part files, so
-            # the swapped-in store would be unreadable (no schema to
-            # infer) and a flat schema-only file would conflict with
-            # the partitioned layout of later appends. Keep the fully-
-            # expired store as-is — consumers already filter, and the
-            # next sweep after new live rows arrive drops these files.
-            return 0
-        swap_commit(path, live.write.partitionBy("queue_name"))
-        return n_total - n_live
+    queue (human-scale)."""
+    queue = ManifestTable(spark, path)
+
+    def attempt() -> int:
+        v, rows = queue.snapshot(REVIEW_QUEUE)
+        live = rows.filter(_unexpired())
+        dropped = rows.count() - live.count()
+        if dropped:
+            queue.commit_at(v, live, replace=True)
+        return dropped
+
+    dropped = queue.optimistic(attempt)
+    queue.vacuum()
+    return dropped
 
 
 # ---- S9/D4 consume side: dequeue / ack with a consumption ledger ----
@@ -160,18 +172,11 @@ def sweep_expired(spark, path: str) -> int:
 # the uniform message_id key; a claim whose visibility timeout lapsed
 # without an ack re-enters the pending view automatically (crash
 # recovery, SQS-style). Claim batches are driver-bounded (a human
-# review batch, not a data-scale set); the scans stay partition-pruned
-# by queue_name.
+# review batch, not a data-scale set).
 
 
 def _read_ledger(spark, ledger_path: str, queue_name: str) -> DataFrame:
-    try:
-        ledger = spark.read.parquet(ledger_path)
-    except Exception:  # noqa: BLE001 — no consumption yet
-        return spark.createDataFrame(
-            [], "queue_name string, message_id string, consumer_id string,"
-            " state string, ts timestamp",
-        )
+    ledger = ManifestTable(spark, ledger_path).snapshot(CLAIMS_SCHEMA)[1]
     return ledger.filter(F.col("queue_name") == queue_name)
 
 
@@ -187,8 +192,22 @@ def pending_messages(
     claimed within the visibility window. With `max_deliveries`,
     messages whose claims already lapsed un-acked that many times are
     excluded (poison — see dead_letter_messages)."""
-    msgs = read_unexpired(spark, queue_path).filter(F.col("queue_name") == queue_name)
     ledger = _read_ledger(spark, ledger_path, queue_name)
+    return _pending(
+        spark, queue_path, ledger, queue_name, visibility_timeout_s, max_deliveries
+    )
+
+
+def _pending(
+    spark,
+    queue_path: str,
+    ledger: DataFrame,
+    queue_name: str,
+    visibility_timeout_s: int,
+    max_deliveries: int | None = None,
+) -> DataFrame:
+    """pending_messages over one read of the claim ledger."""
+    msgs = read_unexpired(spark, queue_path).filter(F.col("queue_name") == queue_name)
     done = ledger.filter(F.col("state") == "DONE").select("message_id")
     active = (
         ledger.filter(
@@ -202,9 +221,9 @@ def pending_messages(
         active, "message_id", "left_anti"
     )
     if max_deliveries is not None:
-        poison = _lapsed_claim_counts(
-            spark, ledger_path, queue_name, visibility_timeout_s
-        ).filter(F.col("n_failed_deliveries") >= max_deliveries).select("message_id")
+        poison = _lapsed_claim_counts(ledger, visibility_timeout_s).filter(
+            F.col("n_failed_deliveries") >= max_deliveries
+        ).select("message_id")
         out = out.join(poison, "message_id", "left_anti")
     return out
 
@@ -224,66 +243,45 @@ def claim_batch(
     to the batch size, recorded as CLAIMED ledger rows. Returns the
     claimed messages.
 
-    Multi-consumer safety (two layers):
-    1. LedgerLock serializes the pending-read + claim-append cycle, so
-       two claimers cannot both see a message as unclaimed (and two
-       concurrent appends cannot collide in the parquet committer's
-       shared _temporary dir).
-    2. After the append, the ledger is re-read and the batch is
-       filtered to messages whose WINNING claim (earliest ts,
-       consumer_id tie-break) belongs to this consumer — so even a
-       broken/stale lock degrades to losing a claim race, never to a
-       double-claim (SQS-style conditional-claim semantics).
+    Multi-consumer safety: the CLAIMED segment commits at the claim
+    ledger version the pending view was read at. A claim or ack that
+    commits in between makes the commit conflict, and the batch is
+    recomputed from the fresh ledger, so two claimers never both claim
+    a message (SQS-style conditional claim).
     """
-    with LedgerLock(ledger_path):
-        # eager pin: the claims append below changes the ledger this plan
-        # reads, so the batch must be materialized BEFORE the write or a
-        # later collect() re-plans against its own claims and sees nothing
+    ledger = ManifestTable(spark, ledger_path)
+
+    def attempt() -> DataFrame:
+        v, rows = ledger.snapshot(CLAIMS_SCHEMA)
+        # eager pin: the caller reads the batch after its claims are
+        # committed, and current_timestamp() moves the visibility
+        # window, so the batch must not be re-planned later
         batch = (
-            pending_messages(spark, queue_path, ledger_path, queue_name, visibility_timeout_s)
+            _pending(
+                spark,
+                queue_path,
+                rows.filter(F.col("queue_name") == queue_name),
+                queue_name,
+                visibility_timeout_s,
+            )
             .orderBy(F.col("enqueued_at").asc(), F.col("message_id").asc())
             .limit(max_messages)
             .localCheckpoint(eager=True)
         )
-        claims = batch.select(
-            F.lit(queue_name).alias("queue_name"),
-            "message_id",
-            F.lit(consumer_id).alias("consumer_id"),
-            F.lit("CLAIMED").alias("state"),
-            F.current_timestamp().alias("ts"),
-        )
-        claims.write.mode("append").partitionBy("queue_name").parquet(ledger_path)
-    # claim-conflict re-read (outside the lock: reads don't mutate)
-    won = _winning_claims(spark, ledger_path, queue_name, visibility_timeout_s)
-    return batch.join(
-        won.filter(F.col("consumer_id") == consumer_id).select("message_id"),
-        "message_id",
-        "left_semi",
-    ).localCheckpoint(eager=True)
+        if not batch.isEmpty():
+            claims = batch.select(
+                F.lit(queue_name).alias("queue_name"),
+                "message_id",
+                F.lit(consumer_id).alias("consumer_id"),
+                F.lit("CLAIMED").alias("state"),
+                F.current_timestamp().alias("ts"),
+            )
+            ledger.commit_at(v, claims, replace=False)
+        return batch
 
-
-def _winning_claims(
-    spark, ledger_path: str, queue_name: str, visibility_timeout_s: int
-) -> DataFrame:
-    """One row per actively-claimed message: the earliest live claim
-    wins (ts, consumer_id total order)."""
-    ledger = _read_ledger(spark, ledger_path, queue_name)
-    live = ledger.filter(
-        (F.col("state") == "CLAIMED")
-        & (
-            F.col("ts")
-            > F.current_timestamp()
-            - F.make_dt_interval(secs=F.lit(visibility_timeout_s))
-        )
-    )
-    w = Window.partitionBy("message_id").orderBy(
-        F.col("ts").asc(), F.col("consumer_id").asc()
-    )
-    return (
-        live.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("message_id", "consumer_id")
-    )
+    batch = ledger.optimistic(attempt)
+    ledger.fold(CLAIMS_SCHEMA)
+    return batch
 
 
 def ack_messages(
@@ -293,23 +291,19 @@ def ack_messages(
     message_ids: list[str],
     consumer_id: str,
 ) -> None:
-    """Ack: DONE ledger rows make the messages permanently consumed.
-    Appends serialize under the ledger lock (shared parquet-committer
-    staging dir; see claim_batch)."""
+    """Ack: DONE ledger rows make the messages permanently consumed."""
     rows = [(queue_name, m, consumer_id, "DONE") for m in message_ids]
     df = spark.createDataFrame(
         rows, "queue_name string, message_id string, consumer_id string, state string"
     ).withColumn("ts", F.current_timestamp())
-    with LedgerLock(ledger_path):
-        df.write.mode("append").partitionBy("queue_name").parquet(ledger_path)
+    ledger = ManifestTable(spark, ledger_path)
+    ledger.append(df)
+    ledger.fold(CLAIMS_SCHEMA)
 
 
-def _lapsed_claim_counts(
-    spark, ledger_path: str, queue_name: str, visibility_timeout_s: int
-) -> DataFrame:
+def _lapsed_claim_counts(ledger: DataFrame, visibility_timeout_s: int) -> DataFrame:
     """Per-message count of claims that LAPSED un-acked (delivery
     attempts that died) — the redrive counter."""
-    ledger = _read_ledger(spark, ledger_path, queue_name)
     done = ledger.filter(F.col("state") == "DONE").select("message_id")
     lapsed = ledger.filter(
         (F.col("state") == "CLAIMED")
@@ -342,6 +336,6 @@ def dead_letter_messages(
         F.col("queue_name") == queue_name
     )
     counts = _lapsed_claim_counts(
-        spark, ledger_path, queue_name, visibility_timeout_s
+        _read_ledger(spark, ledger_path, queue_name), visibility_timeout_s
     ).filter(F.col("n_failed_deliveries") >= max_deliveries)
     return msgs.join(counts, "message_id")

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from unstract_spark.schemas import quote_ident
+from unstract_spark.schemas import REVIEW_QUEUE, quote_ident
 
 
 class StaleCheckpointError(RuntimeError):
@@ -969,8 +969,7 @@ def streaming_queue_consumer(
         _pin_bid(checkpoint_dir, bid)
         commit(claimed, ids, bid)
 
-    schema = spark.read.parquet(queue_path).schema
-    stream = _parquet_stream(spark, queue_path, schema, 1)
+    stream = _parquet_stream(spark, queue_path, REVIEW_QUEUE, 1)
     _drain(stream, process, checkpoint_dir)
 
     # Post-drain sweep: stream fires only happen when NEW queue files
