@@ -87,6 +87,25 @@ def test_concurrent_history_merges_lose_nothing(spark, tmp_path):
     assert store.read().count() == 24
 
 
+def test_concurrent_history_merges_manifest_backend(spark, tmp_path):
+    """Concurrent merges commit only through the manifest log: each
+    merge lands as its own log version, and no lock file or swap
+    sibling ever appears next to the ledger."""
+    path = str(tmp_path / "hist")
+    store = FileHistoryStore(spark, path)
+
+    def writer(tag: str):
+        for i in range(3):
+            store.merge(_hist_rows(spark, f"{tag}{i}", 4))
+
+    _run_concurrently(lambda: writer("a"), lambda: writer("b"))
+    assert store.read().count() == 24
+    # 6 merges, each at least one append commit (folds add more)
+    assert ManifestTable(spark, path).version() >= 5
+    assert os.listdir(tmp_path) == ["hist"]
+    assert not os.path.exists(path + ".lock")
+
+
 def test_concurrent_index_upserts_lose_nothing(spark, tmp_path):
     store = VectorIndexStore(spark, str(tmp_path / "idx"))
 
